@@ -1,0 +1,1 @@
+"""lakeshed benchmark: workloads, tracing and metrics (see README.md)."""
