@@ -7,9 +7,10 @@ corpus (the ``operators/dedup_index.py`` argument applied to the
 image lane: at 100 TB the corpus-side pass is the dominant cost, so
 fingerprint once, persist, fold each batch in as an O(delta) append).
 
-The index is ONE narrow parquet table — ``codes`` (id, pband0..3,
-~40 bytes/row whatever the image size) — plus a params JSON (written
-last: a reader that sees params sees the table). Because a
+The index is a persisted lane (``operators/lane.py`` owns save, load,
+the replay-guarded O(delta) fold and erase) of ONE narrow parquet
+table — ``codes`` (id, pband0..3, ~40 bytes/row whatever the image
+size). Because a
 fingerprint is a pure per-row function of the raster bytes, the
 incremental fold is trivially EXACT (fold == rebuild is row-set
 equality, CI-pinned), and erasure is a plain anti-join rewrite —
@@ -24,21 +25,26 @@ Join cost scales with the batch band count, never the corpus.
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_lake_project_spark import fs
 from data_lake_project_spark.multimodal.phash import (
     N_BANDS,
     _BAND_COLS,
     ahash64,
     hamming64,
 )
+from data_lake_project_spark.operators.lane import (
+    Lane,
+    Table,
+    ingest_batch,
+    read_params,
+    start_ingest,
+)
 
-_PARAMS = "params.json"
+_LANE = Lane((Table("codes"),))
 
 
 @dataclass
@@ -68,19 +74,12 @@ def build_phash_index(
 
 
 def save_phash_index(index: PhashIndex, path: str) -> None:
-    p = path.rstrip("/")
-    index.codes.write.mode("overwrite").parquet(f"{p}/codes")
-    fs.write_text(
-        index.codes.sparkSession,
-        f"{p}/{_PARAMS}",
-        json.dumps(index.params),
-    )
+    _LANE.save(path, index, index.params)
 
 
 def load_phash_index(spark: SparkSession, path: str) -> PhashIndex:
-    p = path.rstrip("/")
-    params = json.loads(fs.read_text(spark, f"{p}/{_PARAMS}"))
-    return PhashIndex(params, spark.read.parquet(f"{p}/codes"))
+    params, t = _LANE.load(spark, path)
+    return PhashIndex(params, t["codes"])
 
 
 def phash_index_apply(
@@ -88,52 +87,32 @@ def phash_index_apply(
     path: str,
     new_images: DataFrame,
     image_col: str = "image",
-    assume_new_ids: bool = False,
     delta_codes: DataFrame | None = None,
 ) -> PhashIndex:
-    """The O(delta) maintenance fold: fingerprint ONLY the new images
-    and append — the corpus is never rescanned. Same replay guard as
-    ``dedup_index_apply``: by default the delta anti-joins the stored
-    id set so an overlapping batch folds in as a no-op instead of
-    doubling an id's band rows; a pre-gated high-frequency ingest
-    passes ``assume_new_ids=True`` to stay strictly O(delta).
-    ``delta_codes``: precomputed fingerprints of ``new_images`` (the
-    gate-and-fold loop already holds one fingerprint pass over the
-    batch — reuse it instead of rehashing the survivors; a
-    fingerprint is a pure per-row function of the bytes, so the two
-    paths are row-identical by construction)."""
-    p = path.rstrip("/")
-    params = json.loads(fs.read_text(spark, f"{p}/{_PARAMS}"))
-    id_col = params["id_col"]
-    codes = (
-        delta_codes
-        if delta_codes is not None
-        else build_phash_index(
-            new_images, image_col=image_col, id_col=id_col
-        ).codes
-    )
-    if not assume_new_ids:
-        existing = (
-            spark.read.parquet(f"{p}/codes").select(id_col).distinct()
-        )
-        codes = codes.join(existing, id_col, "left_anti")
-    codes.write.mode("append").parquet(f"{p}/codes")
-    return load_phash_index(spark, p)
+    """The O(delta) maintenance fold (``Lane.fold``): fingerprint ONLY
+    the new images and append — the corpus is never rescanned; ids
+    already stored fold in as a no-op. ``delta_codes``: precomputed
+    fingerprints of ``new_images`` (the gate-and-fold loop already
+    holds one fingerprint pass over the batch — reuse it instead of
+    rehashing the survivors; a fingerprint is a pure per-row function
+    of the bytes, so the two paths are row-identical by
+    construction)."""
+    if delta_codes is None:
+        id_col = read_params(spark, path)["id_col"]
+        delta_codes = build_phash_index(new_images, image_col, id_col).codes
+    # the codes ARE the delta table: PhashIndex(params, codes) carries it
+    _LANE.fold(spark, path, delta_codes, PhashIndex)
+    return load_phash_index(spark, path)
 
 
 def erase_phash_index(
     spark: SparkSession, path: str, ids: DataFrame
 ) -> int:
-    """Right-to-be-forgotten for the fingerprint lane: codes is one
-    row per id, so erasure is the plain anti-join rewrite (returns
-    distinct ids erased — the uniform ``erase_*`` unit). Post-erase
-    state trivially equals never-ingested: fingerprints are per-row,
-    no cross-record statistics exist to rebuild."""
-    from data_lake_project_spark.operators.erasure import _erase_rows
-
-    p = path.rstrip("/")
-    params = json.loads(fs.read_text(spark, f"{p}/{_PARAMS}"))
-    return _erase_rows(spark, f"{p}/codes", params["id_col"], ids)
+    """Right-to-be-forgotten for the fingerprint lane (``Lane.erase``;
+    returns distinct ids erased). Post-erase state trivially equals
+    never-ingested: fingerprints are per-row, no cross-record
+    statistics exist to rebuild."""
+    return _LANE.erase(spark, path, ids)
 
 
 def _band_rows(codes: DataFrame, id_col: str, out_id: str) -> DataFrame:
@@ -247,12 +226,14 @@ def gate_and_fold_batch(
     image_col: str = "image",
     max_hamming: int = 3,
 ) -> None:
-    """One micro-batch of the streaming ingest-AND-fold loop: drop the
-    batch's OWN intra-batch near-duplicates (keep-lowest-id), gate the
-    survivors against the CURRENT index state, land them in the
-    batch's own sink directory, fold them into the index, then mark
-    the batch committed. Module-level (not a closure) so the replay
-    window can be pinned directly in tests.
+    """One micro-batch of the streaming ingest-AND-fold loop — the
+    exactly-once ``lane.ingest_batch`` protocol: drop the batch's OWN
+    intra-batch near-duplicates (keep-lowest-id), gate the survivors
+    against the index state minus the batch's own ids (one anti-join
+    on the codes), land them in the batch's own sink directory, fold
+    them into the index, then mark the batch committed. Module-level
+    (not a closure) so the replay window can be pinned directly in
+    tests.
 
     Intra-batch dedup: a real crawl burst delivers an original AND its
     perceptual twin inside ONE micro-batch — neither is in the prior
@@ -273,41 +254,24 @@ def gate_and_fold_batch(
     a replay; it would silently desync sink and index (admitted by the
     own-id-excluded gate, dropped by the fold's stored-id guard), so
     it raises instead.
-
-    Exactly-once under foreachBatch's at-least-once contract, by
-    construction across every crash window:
-
-    - committed marker present -> pure no-op (fast replay skip);
-    - the gate runs against the index state EXCLUDING this batch's own
-      ids (one anti-join on the codes) — a replay after the fold
-      landed but before the marker re-derives the IDENTICAL survivor
-      set instead of rejecting every survivor as a duplicate of its
-      own folded fingerprint (silent data loss, the window a naive
-      gate-then-fold leaves open);
-    - the sink write is per-batch-directory overwrite
-      (``write_idempotent_foreach_batch`` layout, read via
-      ``read_sink``), so a replayed write rewrites, never appends;
-    - the fold itself replays as a no-op through
-      ``phash_index_apply``'s stored-id anti-join guard.
-
-    Survivors are eagerly checkpointed before use: they feed BOTH the
-    sink write and the fold, and cutting lineage keeps the fold's
-    append from re-deriving a plan that re-scans the codes directory
-    it is appending to.
     """
+    ingest_batch(
+        batch,
+        batch_id,
+        out_dir,
+        lambda: _gate(batch, index_path, image_col, max_hamming),
+    )
+
+
+def _gate(batch, index_path, image_col, max_hamming):
+    """``gate_and_fold_batch``'s (survivors, fold) for ``ingest_batch``."""
     from data_lake_project_spark.multimodal.phash import phash_neardup
 
     spark = batch.sparkSession
-    commits_dir = f"{out_dir.rstrip('/')}/_committed_batches"
-    marker = f"{commits_dir}/{batch_id}"
-    if fs.exists(spark, marker):
-        return
     idx = load_phash_index(spark, index_path)
     id_col = idx.params["id_col"]
-    # one fingerprint pass over the batch, reused by the collision
-    # guard and the intra-batch self-join (the index gate refingerprints
-    # the reduced batch — batch-sized expression work, not a corpus
-    # scan)
+    # ONE fingerprint pass over the batch, reused by the collision
+    # guard, the intra-batch self-join, the index gate and the fold
     bfp = (
         build_phash_index(batch, image_col=image_col, id_col=id_col)
         .codes.localCheckpoint(eager=True)
@@ -356,33 +320,20 @@ def gate_and_fold_batch(
         idx.params,
         idx.codes.join(batch.select(id_col), id_col, "left_anti"),
     )
+    kept = bfp.join(self_doomed, id_col, "left_anti")
     survivors = gate_against_phash_index(
-        prior,
-        batch,
-        image_col,
-        max_hamming,
-        # one fingerprint pass serves guard + self-dedup + gate: the
-        # reduced batch's codes are the checkpointed bfp minus the
-        # self-dedup drops
-        batch_codes=bfp.join(self_doomed, id_col, "left_anti"),
-    ).localCheckpoint(eager=True)
-    survivors.write.mode("overwrite").parquet(
-        f"{out_dir.rstrip('/')}/data/__batch={batch_id}"
+        prior, batch, image_col, max_hamming, batch_codes=kept
     )
-    # the fold reuses the SAME fingerprint pass (bfp minus self-dedup
-    # drops, kept to survivor ids): empty/NULL-raster passthrough rows
-    # never fingerprint so they semi-join out, exactly matching what
-    # rehashing the survivors would produce
-    phash_index_apply(
+    # the fold keeps the fingerprints to survivor ids: empty/NULL-
+    # raster passthrough rows never fingerprint so they semi-join
+    # out, exactly matching what rehashing the survivors would produce
+    return survivors, lambda s: phash_index_apply(
         spark,
         index_path,
-        survivors,
+        s,
         image_col=image_col,
-        delta_codes=bfp.join(self_doomed, id_col, "left_anti").join(
-            survivors.select(id_col), id_col, "left_semi"
-        ),
+        delta_codes=kept.join(s.select(id_col), id_col, "left_semi"),
     )
-    fs.write_text(spark, marker, "committed")
 
 
 def stream_ingest_with_phash_gate(
@@ -402,26 +353,15 @@ def stream_ingest_with_phash_gate(
     are rejected. Micro-batch work is batch-sized (band-join + verify
     + O(delta) fold); the corpus is never refingerprinted.
 
-    Returns the started StreamingQuery; read admitted rows back with
+    Returns the started StreamingQuery (``available_now``: see
+    ``lane.start_ingest``); read admitted rows back with
     ``streaming.pipeline.read_sink(spark, out_dir)``.
-
-    ``available_now=True`` drains the backlog and TERMINATES
-    (Trigger.AvailableNow — still honoring source rate limits like
-    maxFilesPerTrigger, so the backlog is processed in multiple
-    sequential gated-and-folded batches); the default runs the
-    continuous micro-batch trigger an always-on ingest wants.
     """
-
-    def _on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        gate_and_fold_batch(
-            batch_df, batch_id, index_path, out_dir, image_col, max_hamming
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(_on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return start_ingest(
+        stream,
+        lambda df, batch_id: gate_and_fold_batch(
+            df, batch_id, index_path, out_dir, image_col, max_hamming
+        ),
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -10,14 +10,17 @@ query batch.
 
 This module is that shape, Spark-first:
 
-- the **model** (coarse centroids and/or PQ codebooks — kilobytes) is a
-  JSON document written through the URI-agnostic ``fs`` helpers, so it
-  lands on HDFS/S3/local alike;
+- the **model** (coarse centroids and/or PQ codebooks — kilobytes)
+  rides in the lane's ``params.json`` sidecar;
 - the **codes** (one row per corpus vector: bucket and/or PQ codes, and
   for IVF the double vector + its norm) are a parquet table partitioned
   like any other corpus-keyed table — the 100 TB object. Encoding runs
   once per corpus version, searches never touch the raw embedding
   column again (PQ kinds) or re-derive assignments (IVF).
+
+Save, load, the replay-guarded O(delta) fold and erase are the shared
+persisted-lane lifecycle (``operators/lane.py``); the kind picks the
+codes layout.
 
 ``build → save → load → search`` produces IDENTICAL top-k to the
 corresponding inline operator because both compose the same stage
@@ -32,12 +35,11 @@ do, adding the index lifecycle those queries priced inline.
 
 from __future__ import annotations
 
-import json
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 
-from data_lake_project_spark import fs
+from data_lake_project_spark.operators.lane import Lane, Table, read_params
 from data_lake_project_spark.operators.similarity import (
     _adc_search,
     _ivf_assign,
@@ -47,7 +49,13 @@ from data_lake_project_spark.operators.similarity import (
     _train_pq_codebooks,
 )
 
-_KINDS = ("ivf", "pq", "ivfpq")
+# The codes layout per kind: IVF kinds partition by ``__bucket``, so a
+# search's bucket equi-join (broadcast probe side) triggers DYNAMIC
+# PARTITION PRUNING and the scan touches only the probed buckets'
+# directories (plan assertion CI-pinned in test_plans).
+_BUCKETED = Lane((Table("codes", partition_col="__bucket"),))
+_LANES = {"ivf": _BUCKETED, "pq": Lane((Table("codes"),)), "ivfpq": _BUCKETED}
+_KINDS = tuple(_LANES)
 
 
 @dataclass
@@ -123,21 +131,31 @@ def build_ann_index(
         raise ValueError(
             f"{ctx}: supply both centroids and codebooks, or neither"
         )
-    injected = centroids is not None or codebooks is not None
-    if injected:
-        return _build_ann_index_injected(
-            corpus,
-            kind,
-            n_centroids,
-            m_subspaces,
-            n_codes,
-            dim,
-            lloyd_iters,
-            id_col,
-            vec_col,
-            centroids,
-            codebooks,
-            ctx,
+
+    def index(d, iters, cents, cb):
+        params = {
+            "id_col": id_col,
+            "vec_col": vec_col,
+            "dim": d,
+            "n_centroids": n_centroids,
+            "m_subspaces": m_subspaces,
+            "n_codes": n_codes,
+            "lloyd_iters": iters,
+        }
+        return _encoded(AnnIndex(kind, params, cents, cb, None), corpus)
+
+    if centroids is not None or codebooks is not None:
+        return index(
+            *_injected_model(
+                kind,
+                n_centroids,
+                m_subspaces,
+                n_codes,
+                dim,
+                centroids,
+                codebooks,
+                ctx,
+            )
         )
     if kind == "ivf":
         iters = 1 if lloyd_iters is None else lloyd_iters
@@ -166,16 +184,6 @@ def build_ann_index(
     if dim is not None and d != dim:
         raise ValueError(f"{ctx}: embedding width {d} != dim={dim}")
 
-    params = {
-        "id_col": id_col,
-        "vec_col": vec_col,
-        "dim": d,
-        "n_centroids": n_centroids,
-        "m_subspaces": m_subspaces,
-        "n_codes": n_codes,
-        "lloyd_iters": iters,
-    }
-
     if kind == "ivf":
         if sample.shape[0] < n_centroids:
             raise ValueError(
@@ -186,10 +194,7 @@ def build_ann_index(
         cents_vals = [
             [float(x) for x in seeds[i]] for i in range(n_centroids)
         ]
-        codes = _ivf_assign(corpus, cents_vals, id_col, vec_col).select(
-            id_col, "__bucket", "__v", "__nrm"
-        )
-        return AnnIndex(kind, params, cents_vals, None, codes)
+        return index(d, iters, cents_vals, None)
 
     if d % m_subspaces != 0:
         raise ValueError(
@@ -201,43 +206,57 @@ def build_ann_index(
             "than the codebook/centroid count"
         )
     dsub = d // m_subspaces
-    nrm = np.linalg.norm(sample, axis=1, keepdims=True)
-    nrm[nrm == 0] = 1.0
-    unit = sample / nrm
+    unit = np.asarray(_unit_rows(sample))
     cb = _train_pq_codebooks(unit, m_subspaces, n_codes, dsub, max(1, iters))
     cb_out = [[[float(x) for x in code] for code in sub] for sub in cb]
 
     if kind == "pq":
-        codes = _pq_encode(corpus, cb, None, id_col, vec_col)
-        return AnnIndex(kind, params, None, cb_out, codes)
-
+        return index(d, iters, None, cb_out)
     seeds = _train_cosine_centroids(sample, n_centroids, max(1, iters))
-    cn = np.linalg.norm(seeds, axis=1, keepdims=True)
-    cn[cn == 0] = 1.0
-    cent_unit = seeds / cn
-    cents_vals = [[float(x) for x in v] for v in cent_unit]
-    codes = _pq_encode(corpus, cb, cent_unit, id_col, vec_col)
-    return AnnIndex(kind, params, cents_vals, cb_out, codes)
+    return index(d, iters, _unit_rows(seeds), cb_out)
 
 
-def _build_ann_index_injected(
-    corpus,
-    kind,
-    n_centroids,
-    m_subspaces,
-    n_codes,
-    dim,
-    lloyd_iters,
-    id_col,
-    vec_col,
-    centroids,
-    codebooks,
-    ctx,
+def _unit_rows(m) -> list:
+    """Row-normalized (zero rows kept) as nested float lists — the
+    PQ training input and the stored form of ivfpq centroids."""
+    import numpy as np
+
+    n = np.linalg.norm(m, axis=1, keepdims=True)
+    n[n == 0] = 1.0
+    return [[float(x) for x in v] for v in m / n]
+
+
+def _encoded(index: AnnIndex, corpus: DataFrame) -> AnnIndex:
+    """``index`` with ``codes`` = ``corpus`` encoded under its frozen
+    model — the ONE encode path of the trained build, the injected
+    build and the fold (so fold ≡ rebuild by construction)."""
+    import numpy as np
+
+    p = index.params
+    if index.kind == "ivf":
+        codes = _ivf_assign(
+            corpus, index.centroids, p["id_col"], p["vec_col"]
+        ).select(p["id_col"], "__bucket", "__v", "__nrm")
+    else:
+        codes = _pq_encode(
+            corpus,
+            np.asarray(index.codebooks, dtype=float),
+            np.asarray(index.centroids, dtype=float)
+            if index.kind == "ivfpq"
+            else None,
+            p["id_col"],
+            p["vec_col"],
+        )
+    return replace(index, codes=codes)
+
+
+def _injected_model(
+    kind, n_centroids, m_subspaces, n_codes, dim, centroids, codebooks, ctx
 ):
-    """The zero-training encode path for :func:`build_ann_index` —
-    validates the injected model's shape and runs ONLY the corpus
-    encode pass. The stored model matches the trained path's layout
-    (ivf keeps raw centroids; ivfpq stores unit centroids — the form
+    """The zero-training path of :func:`build_ann_index`: validate the
+    injected model's shape and return (dim, 0 iters, centroids,
+    codebooks) in the trained path's stored layout (ivf keeps raw
+    centroids; ivfpq stores unit centroids — the form
     ``search_ann_index`` expects per kind)."""
     import numpy as np
 
@@ -280,31 +299,10 @@ def _build_ann_index_injected(
             f"width {d}"
         )
 
-    params = {
-        "id_col": id_col,
-        "vec_col": vec_col,
-        "dim": d,
-        "n_centroids": n_centroids,
-        "m_subspaces": m_subspaces,
-        "n_codes": n_codes,
-        "lloyd_iters": 0,
-    }
     if kind == "ivf":
-        cents_vals = [[float(x) for x in v] for v in seeds]
-        codes = _ivf_assign(corpus, cents_vals, id_col, vec_col).select(
-            id_col, "__bucket", "__v", "__nrm"
-        )
-        return AnnIndex(kind, params, cents_vals, None, codes)
+        return d, 0, [[float(x) for x in v] for v in seeds], None
     cb_out = [[[float(x) for x in code] for code in sub] for sub in cb]
-    if kind == "pq":
-        codes = _pq_encode(corpus, cb, None, id_col, vec_col)
-        return AnnIndex(kind, params, None, cb_out, codes)
-    cn = np.linalg.norm(seeds, axis=1, keepdims=True)
-    cn[cn == 0] = 1.0
-    cent_unit = seeds / cn
-    cents_vals = [[float(x) for x in v] for v in cent_unit]
-    codes = _pq_encode(corpus, cb, cent_unit, id_col, vec_col)
-    return AnnIndex(kind, params, cents_vals, cb_out, codes)
+    return d, 0, _unit_rows(seeds) if kind == "ivfpq" else None, cb_out
 
 
 def search_ann_index(
@@ -379,99 +377,62 @@ def search_ann_index(
 
 
 def save_ann_index(index: AnnIndex, path: str) -> None:
-    """Persist the index: codes as parquet (the distributed object),
-    model as one small JSON through the URI-agnostic ``fs`` layer.
-    Overwrites an existing index at ``path`` atomically enough for a
-    single writer (codes first, model last — a reader that sees the
-    new model sees the new codes)."""
-    path = path.rstrip("/")
-    w = index.codes.write.mode("overwrite")
-    if index.kind in ("ivf", "ivfpq"):
-        # bucket-partitioned layout: a search's bucket equi-join
-        # (broadcast probe side) triggers DYNAMIC PARTITION PRUNING,
-        # so the scan touches only the nprobe probed buckets'
-        # directories — at 100 TB the difference between reading
-        # nprobe/n_centroids of the codes and reading all of them
-        # (plan assertion CI-pinned in test_plans).
-        w = w.partitionBy("__bucket")
-    w.parquet(f"{path}/codes")
-    spark = index.codes.sparkSession
-    model = {
-        "kind": index.kind,
-        "params": index.params,
-        "centroids": index.centroids,
-        "codebooks": index.codebooks,
+    """Persist the index: codes as parquet (the distributed object)
+    under the kind's layout, the model in the sidecar."""
+    _LANES[index.kind].save(
+        path,
+        index,
+        {
+            **index.params,
+            "kind": index.kind,
+            "centroids": index.centroids,
+            "codebooks": index.codebooks,
+        },
+    )
+
+
+def _from_sidecar(m: dict, codes: DataFrame | None) -> AnnIndex:
+    params = {
+        k: v
+        for k, v in m.items()
+        if k not in ("kind", "centroids", "codebooks")
     }
-    fs.write_text(spark, f"{path}/model.json", json.dumps(model))
+    return AnnIndex(
+        m["kind"], params, m["centroids"], m["codebooks"], codes, True
+    )
+
+
+def _lane_of(spark: SparkSession, path: str) -> Lane:
+    kind = read_params(spark, path)["kind"]
+    if kind not in _LANES:
+        raise ValueError(f"ann_index: unknown kind {kind!r} at {path}")
+    return _LANES[kind]
 
 
 def ann_index_apply(
-    spark: SparkSession,
-    path: str,
-    new_corpus: DataFrame,
-    assume_new_ids: bool = False,
+    spark: SparkSession, path: str, new_corpus: DataFrame
 ) -> AnnIndex:
-    """Persisted O(delta) maintenance fold — the growing-corpus story:
-    encode ONLY ``new_corpus`` with the SAVED model (no retraining —
-    the codebooks/centroids are the frozen artifact, exactly how a
-    production FAISS index absorbs new vectors) and parquet-append the
-    codes next to the standing ones. The standing corpus's CONTENT is
-    never re-encoded or reshuffled. Returns the reloaded index.
-
-    By default the delta is anti-joined against the stored code ids
-    first, so a replayed/overlapping batch folds in as a no-op instead
-    of silently duplicating code rows (which would duplicate search
-    results). The guard costs one column-pruned scan + distinct of the
-    stored ID COLUMN — O(index ids), not O(delta) — which is the right
-    default for correctness but does grow with the standing index.
-    High-frequency production folds that already gate batches upstream
-    (the q102 ingest shape) should pass ``assume_new_ids=True`` to
-    keep the fold strictly O(delta).
+    """Persisted O(delta) maintenance fold (``Lane.fold``) — the
+    growing-corpus story: encode ONLY ``new_corpus`` with the SAVED
+    model (no retraining — the codebooks/centroids are the frozen
+    artifact, exactly how a production FAISS index absorbs new
+    vectors) and append the codes next to the standing ones; ids
+    already stored fold in as a no-op (duplicated codes would
+    duplicate search results). Returns the reloaded index.
     Incremental ≡ full rebuild is CI-pinned (same model → the encode
     is a pure deterministic map, so fold order cannot matter).
     """
-    import numpy as np
-
-    idx = load_ann_index(spark, path)
-    p = idx.params
-    if not assume_new_ids:
-        existing = idx.codes.select(p["id_col"]).distinct()
-        new_corpus = new_corpus.join(existing, p["id_col"], "left_anti")
-    if idx.kind == "ivf":
-        delta = _ivf_assign(
-            new_corpus, idx.centroids, p["id_col"], p["vec_col"]
-        ).select(p["id_col"], "__bucket", "__v", "__nrm")
-    else:
-        cb = np.asarray(idx.codebooks, dtype=float)
-        cent = (
-            np.asarray(idx.centroids, dtype=float)
-            if idx.kind == "ivfpq"
-            else None
-        )
-        delta = _pq_encode(new_corpus, cb, cent, p["id_col"], p["vec_col"])
-    w = delta.write.mode("append")
-    if idx.kind in ("ivf", "ivfpq"):
-        w = w.partitionBy("__bucket")  # same layout as save_ann_index
-    w.parquet(f"{path.rstrip('/')}/codes")
+    _lane_of(spark, path).fold(
+        spark,
+        path,
+        new_corpus,
+        lambda m, rows: _encoded(_from_sidecar(m, None), rows),
+    )
     return load_ann_index(spark, path)
 
 
 def load_ann_index(spark: SparkSession, path: str) -> AnnIndex:
     """Reload a saved index. The codes frame is a plain parquet scan —
     partition pruning / pushdown apply as with any table."""
-    path = path.rstrip("/")
-    model = json.loads(fs.read_text(spark, f"{path}/model.json"))
-    if model["kind"] not in _KINDS:
-        raise ValueError(
-            f"load_ann_index: unknown kind {model['kind']!r} in "
-            f"{path}/model.json"
-        )
-    codes = spark.read.parquet(f"{path}/codes")
-    return AnnIndex(
-        model["kind"],
-        model["params"],
-        model["centroids"],
-        model["codebooks"],
-        codes,
-        persisted=True,
-    )
+    m, t = _lane_of(spark, path).load(spark, path)
+    return _from_sidecar(m, t["codes"])

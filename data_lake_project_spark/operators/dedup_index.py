@@ -8,24 +8,21 @@ computes it once, persists it, and folds each ingested batch in as an
 O(delta) append (the same argument as ``operators.ann_index``: train/
 index once, serve many).
 
-The index is two corpus-keyed parquet tables plus a tiny JSON params
-document:
+The index is a persisted lane (``operators/lane.py`` owns save, load,
+the replay-guarded O(delta) fold and erase) of two corpus-keyed
+parquet tables:
 
 - ``bands``  (id, band, bandsig) — the LSH candidate-join side;
 - ``sets``   (id, sh)            — the shingle sets the verify stage
-  joins back by id (candidates only, never the whole corpus).
+  joins back by id (candidates only, never the whole corpus). One row
+  per doc, even for an empty text (which has no band rows), so it is
+  the lane's id table.
 
-Lifecycle:
-
-- :func:`build_dedup_index`   — one corpus pass (lazy frames);
-- :func:`save_dedup_index` / :func:`load_dedup_index` — persistence
-  through the URI-agnostic ``fs`` layer (HDFS/S3/local);
-- :func:`dedup_index_apply`   — the O(delta) maintenance fold: index
-  ONLY the new docs and append — the corpus is never rescanned or
-  reshuffled (incremental ≡ recompute is CI-pinned);
-- :func:`dedup_against_index` — the serving path: gate a batch against
-  the standing index; composition-equal to ``dedup_against`` (which is
-  now literally build + search).
+:func:`build_dedup_index` is one corpus pass (lazy frames);
+:func:`dedup_index_apply` indexes ONLY the new docs and appends
+(incremental ≡ recompute is CI-pinned); :func:`dedup_against_index`
+serves: gate a batch against the standing index, composition-equal
+to ``dedup_against`` (which is now literally build + search).
 
 Reference parity: extends the reference's ingest gate
 (``spark_stream.py`` upsert-on-key) to content-level near-dup
@@ -34,18 +31,24 @@ gating; part of the LLM-pipeline surface (SURVEY.md §2.9, q102).
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_lake_project_spark import fs
 from data_lake_project_spark.operators.dedup import (
     band_keys,
     minhash_sets,
     shingle_sets,
 )
+from data_lake_project_spark.operators.lane import (
+    Lane,
+    Table,
+    ingest_batch,
+    start_ingest,
+)
+
+_LANE = Lane((Table("bands"), Table("sets")))
 
 
 @dataclass
@@ -91,81 +94,33 @@ def extend_dedup_index(index: DedupIndex, new_docs: DataFrame) -> DedupIndex:
     stored params) and union — the standing frames are reused as-is,
     never recomputed. For the persisted twin see
     :func:`dedup_index_apply`."""
-    p = index.params
-    delta = build_dedup_index(
-        new_docs,
-        k=p["k"],
-        num_hashes=p["num_hashes"],
-        band_size=p["band_size"],
-        text_col=p["text_col"],
-        id_col=p["id_col"],
-    )
+    delta = build_dedup_index(new_docs, **index.params)
     return DedupIndex(
-        dict(p),
+        dict(index.params),
         index.bands.unionByName(delta.bands),
         index.sets.unionByName(delta.sets),
     )
 
 
 def save_dedup_index(index: DedupIndex, path: str) -> None:
-    """Persist bands + sets as parquet and params as one small JSON
-    (written last, so a reader that sees params sees the tables)."""
-    path = path.rstrip("/")
-    index.bands.write.mode("overwrite").parquet(f"{path}/bands")
-    index.sets.write.mode("overwrite").parquet(f"{path}/sets")
-    spark = index.bands.sparkSession
-    fs.write_text(spark, f"{path}/params.json", json.dumps(index.params))
+    _LANE.save(path, index, index.params)
 
 
 def load_dedup_index(spark: SparkSession, path: str) -> DedupIndex:
-    path = path.rstrip("/")
-    params = json.loads(fs.read_text(spark, f"{path}/params.json"))
-    return DedupIndex(
-        params,
-        spark.read.parquet(f"{path}/bands"),
-        spark.read.parquet(f"{path}/sets"),
-    )
+    params, t = _LANE.load(spark, path)
+    return DedupIndex(params, t["bands"], t["sets"])
 
 
 def dedup_index_apply(
-    spark: SparkSession,
-    path: str,
-    new_docs: DataFrame,
-    assume_new_ids: bool = False,
+    spark: SparkSession, path: str, new_docs: DataFrame
 ) -> DedupIndex:
-    """Persisted maintenance fold: index ONLY ``new_docs`` and APPEND
-    to the stored band/set tables — the standing corpus's CONTENT is
-    never recomputed or reshuffled (parquet append writes new files
-    next to the old ones). Returns the reloaded index.
-
-    By default the delta is anti-joined against the stored id set
-    first, so a replayed/overlapping batch folds in as a no-op instead
-    of silently doubling an id's band rows (which would inflate every
-    future candidate set). The guard is one column-pruned scan +
-    distinct of the stored id column — O(index ids), not O(delta) —
-    the right correctness default, but it grows with the standing
-    index. High-frequency folds that already gated the batch (q102's
-    :func:`dedup_against_index` + anti-join ingest shape) should pass
-    ``assume_new_ids=True`` to keep the fold strictly O(delta)."""
-    path = path.rstrip("/")
-    params = json.loads(fs.read_text(spark, f"{path}/params.json"))
-    if not assume_new_ids:
-        existing = (
-            spark.read.parquet(f"{path}/bands")
-            .select(params["id_col"])
-            .distinct()
-        )
-        new_docs = new_docs.join(existing, params["id_col"], "left_anti")
-    delta = build_dedup_index(
-        new_docs,
-        k=params["k"],
-        num_hashes=params["num_hashes"],
-        band_size=params["band_size"],
-        text_col=params["text_col"],
-        id_col=params["id_col"],
+    """Persisted maintenance fold (``Lane.fold``): index ONLY
+    ``new_docs`` with the stored params and APPEND — the standing
+    corpus's CONTENT is never recomputed or reshuffled; ids already in
+    ``sets`` fold in as a no-op. Returns the reloaded index."""
+    _LANE.fold(
+        spark, path, new_docs, lambda p, docs: build_dedup_index(docs, **p)
     )
-    delta.bands.write.mode("append").parquet(f"{path}/bands")
-    delta.sets.write.mode("append").parquet(f"{path}/sets")
     return load_dedup_index(spark, path)
 
 
@@ -299,30 +254,16 @@ def gate_and_fold_text_batch(
     threshold: float = 0.5,
 ) -> None:
     """One micro-batch of the TEXT streaming ingest-AND-fold loop —
-    the ``multimodal/phash_index.gate_and_fold_batch`` protocol
-    applied to the shingle/minhash lane (text crawl is the
-    highest-volume ingest a training-data pipeline runs; the
-    reference's at-least-once delivery, ``spark_stream.py:217-224``,
-    is exactly the window this closes): self-dedup the batch
-    (keep-lowest-id, ``dedup_against_index(self_dedup=True)``), gate
-    the survivors against the CURRENT index state, land them in the
-    batch's own sink directory, fold them into the index, mark the
-    batch committed.
-
-    Exactly-once under foreachBatch's at-least-once contract, by the
-    same construction as the image lane:
-
-    - committed marker present -> pure no-op;
-    - the gate runs against the index state EXCLUDING this batch's
-      own ids (one anti-join per stored table) — a replay after the
-      fold landed but before the marker re-derives the IDENTICAL
-      survivor set instead of rejecting every survivor as a duplicate
-      of its own folded shingles;
-    - the sink write is per-batch-directory overwrite
-      (``write_idempotent_foreach_batch`` layout, read via
-      ``read_sink``);
-    - the fold replays as a no-op through ``dedup_index_apply``'s
-      stored-id anti-join guard.
+    the exactly-once ``lane.ingest_batch`` protocol (shared with the
+    image lane's ``gate_and_fold_batch``) on the shingle/minhash lane
+    (text crawl is the highest-volume ingest a training-data pipeline
+    runs; the reference's at-least-once delivery,
+    ``spark_stream.py:217-224``, is exactly the window this closes):
+    self-dedup the batch (keep-lowest-id,
+    ``dedup_against_index(self_dedup=True)``), gate the survivors
+    against the index state minus the batch's own ids (one anti-join
+    per stored table), land them in the batch's own sink directory,
+    fold them in, mark the batch committed.
 
     Id contract: ids are stable replay keys (same id => same text). A
     batch id already stored with a DIFFERENT shingle set is an id
@@ -335,17 +276,19 @@ def gate_and_fold_text_batch(
     (``self_dedup=True`` reuses the band keys for the index gate),
     the corpus is touched only by the candidate band join + the
     candidates' set fetches, and the fold appends without rescanning.
-
-    Survivors are eagerly checkpointed before use: they feed BOTH the
-    sink write and the fold, and cutting lineage keeps the fold's
-    append from re-deriving a plan that re-scans the band/set
-    directories it is appending to.
     """
+    ingest_batch(
+        batch,
+        batch_id,
+        out_dir,
+        lambda: _text_gate(batch, index_path, threshold),
+    )
+
+
+def _text_gate(batch, index_path, threshold):
+    """``gate_and_fold_text_batch``'s (survivors, fold) for
+    ``ingest_batch``."""
     spark = batch.sparkSession
-    commits_dir = f"{out_dir.rstrip('/')}/_committed_batches"
-    marker = f"{commits_dir}/{batch_id}"
-    if fs.exists(spark, marker):
-        return
     idx = load_dedup_index(spark, index_path)
     p = idx.params
     id_col = p["id_col"]
@@ -357,9 +300,7 @@ def gate_and_fold_text_batch(
         bsets.join(
             idx.sets.select(id_col, F.col("sh").alias("s_sh")), id_col
         )
-        .filter(
-            (inter < F.size("sh")) | (inter < F.size("s_sh"))
-        )
+        .filter((inter < F.size("sh")) | (inter < F.size("s_sh")))
         .select(id_col)
         .limit(1)
         .collect()
@@ -378,14 +319,14 @@ def gate_and_fold_text_batch(
         idx.bands.join(own, id_col, "left_anti"),
         idx.sets.join(own, id_col, "left_anti"),
     )
-    survivors = dedup_against_index(
-        prior, batch, threshold, self_dedup=True, b_sets=bsets
-    ).localCheckpoint(eager=True)
-    survivors.write.mode("overwrite").parquet(
-        f"{out_dir.rstrip('/')}/data/__batch={batch_id}"
+    return (
+        dedup_against_index(
+            prior, batch, threshold, self_dedup=True, b_sets=bsets
+        ),
+        lambda survivors: dedup_index_apply(
+            spark, index_path, survivors
+        ),
     )
-    dedup_index_apply(spark, index_path, survivors)
-    fs.write_text(spark, marker, "committed")
 
 
 def stream_ingest_with_text_gate(
@@ -402,27 +343,15 @@ def stream_ingest_with_text_gate(
     state built by ALL PRIOR batches, and folds its survivors in
     before the next batch arrives — batch N+1's near-duplicates of
     batch N's survivors are rejected BY THE FOLD. Micro-batch work is
-    batch-sized; the corpus is never re-shingled.
-
-    Returns the started StreamingQuery; read admitted rows back with
-    ``streaming.pipeline.read_sink(spark, out_dir)``.
-
-    ``available_now=True`` drains the backlog and TERMINATES (still
-    honoring maxFilesPerTrigger, so the backlog processes as multiple
-    sequential gated-and-folded batches); the default runs the
-    continuous micro-batch trigger an always-on crawl ingest wants.
-    """
-
-    def _on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        gate_and_fold_text_batch(
-            batch_df, batch_id, index_path, out_dir, threshold
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(_on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    batch-sized; the corpus is never re-shingled. Returns the started
+    StreamingQuery (``available_now``: see ``lane.start_ingest``);
+    read admitted rows back with
+    ``streaming.pipeline.read_sink(spark, out_dir)``."""
+    return start_ingest(
+        stream,
+        lambda df, batch_id: gate_and_fold_text_batch(
+            df, batch_id, index_path, out_dir, threshold
+        ),
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

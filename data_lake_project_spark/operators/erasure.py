@@ -13,15 +13,16 @@ propagation. Parquet is immutable, so erasure is a targeted rewrite:
   that is the difference between rewriting nprobe-sized slices and
   rewriting the whole index.
 - Unpartitioned tables (SQ codes, dedup bands/sets, BM25 dl) are
-  anti-join rewritten whole; a deployment that expects frequent
-  erasure partitions them by an id bucket first.
+  anti-join rewritten whole, unless saved id-bucketed (below).
 - The HLL sketch rollup is NOT erasable in place: sketches are not
   invertible (you cannot subtract a user from a register set). The
   honest contract is :func:`rebuild_hll_keys` — recompute ONLY the
   rollup keys the erased records touched from the remaining source
   rows; every other key's sketch row is untouched.
 
-Every rewrite eagerly materializes the surviving rows
+Which table of a lane has which layout is declared once, in the lane
+(``operators/lane.py``); the ``erase_*`` entry points below only name
+the lane. Every rewrite eagerly materializes the surviving rows
 (``localCheckpoint``) before overwriting, so the write never scans
 the files it replaces (the ``compact_hll_rollup`` discipline); a
 cluster deployment would write a new versioned directory and swap.
@@ -225,51 +226,30 @@ def _erase_rows(
     return n
 
 
+# The per-lane entry points below are thin adapters over
+# ``operators/lane.py`` (``Lane.erase``): every table is rewritten under
+# its declared layout and the return value is the DISTINCT ids erased
+# from the lane's one-row-per-id table — the one unit every ``erase_*``
+# reports (round-7 ADVICE: callers reconciling a deletion request
+# against per-lane receipts need one unit, never postings/band rows).
+
+
 def erase_ann_index(spark: SparkSession, path: str, ids: DataFrame) -> int:
     """Erase vectors from a persisted ann_index; bucket-partitioned
-    kinds rewrite only the buckets the ids live in. Returns the number
-    of distinct vectors erased (codes is one row per id — the uniform
-    ``erase_*`` unit)."""
-    import json
+    kinds rewrite only the buckets the ids live in."""
+    from data_lake_project_spark.operators.ann_index import _lane_of
 
-    from data_lake_project_spark import fs
-
-    model = json.loads(fs.read_text(spark, f"{path.rstrip('/')}/model.json"))
-    part = "__bucket" if model["kind"] in ("ivf", "ivfpq") else None
-    return _erase_rows(
-        spark,
-        f"{path.rstrip('/')}/codes",
-        model["params"]["id_col"],
-        ids,
-        part,
-    )
+    return _lane_of(spark, path).erase(spark, path, ids)
 
 
 def erase_sq_index(spark: SparkSession, path: str, ids: DataFrame) -> int:
     """Erase vectors from a persisted sq_index. The frozen stats model
-    is untouched: it is an aggregate envelope, not per-record data.
-    Returns the number of distinct vectors erased (codes is one row
-    per id — the uniform ``erase_*`` unit).
+    is untouched: it is an aggregate envelope, not per-record data. An
+    index saved with ``id_buckets=N`` scans and rewrites only the
+    touched bucket dirs; everything else stays byte-identical."""
+    from data_lake_project_spark.operators.sq_index import _LANE
 
-    An index saved with ``save_sq_index(..., id_buckets=N)`` erases
-    through the bucket-pruned path: only the touched bucket dirs are
-    scanned or rewritten; everything else stays byte-identical."""
-    import json
-
-    from data_lake_project_spark import fs
-
-    codes = f"{path.rstrip('/')}/codes"
-    meta = id_bucket_params(spark, codes)
-    if meta is not None:
-        return erase_id_bucketed(spark, codes, ids, meta=meta)
-    model = json.loads(fs.read_text(spark, f"{path.rstrip('/')}/model.json"))
-    return _erase_rows(
-        spark,
-        codes,
-        model["params"]["id_col"],
-        ids,
-        None,
-    )
+    return _LANE.erase(spark, path, ids)
 
 
 def erase_bm25_index(spark: SparkSession, path: str, ids: DataFrame) -> int:
@@ -277,42 +257,19 @@ def erase_bm25_index(spark: SparkSession, path: str, ids: DataFrame) -> int:
     postings rewrite only the token buckets containing the docs'
     terms; dl rewrites whole (doc-count-sized). df and (N, avgdl) are
     DERIVED from these tables at serve time, so post-erasure scoring
-    equals an index that never ingested the docs. The id column comes
-    from the persisted params.json (never assumed), like the
-    ann/sq lanes.
+    equals an index that never ingested the docs."""
+    from data_lake_project_spark.operators.retrieval import _LANE
 
-    Returns the number of DISTINCT DOCUMENTS erased (the dl table is
-    one row per doc) — every ``erase_*`` lane reports the same unit,
-    ids, never an internal row count like postings or bands
-    (round-7 ADVICE: callers reconciling a deletion request against
-    per-lane receipts need one unit across lanes)."""
-    import json
-
-    from data_lake_project_spark import fs
-
-    p = path.rstrip("/")
-    id_col = json.loads(fs.read_text(spark, f"{p}/params.json"))["id_col"]
-    _erase_rows(spark, f"{p}/tfs", id_col, ids, "__tb")
-    return _erase_rows(spark, f"{p}/dl", id_col, ids, None)
+    return _LANE.erase(spark, path, ids)
 
 
 def erase_dedup_index(
     spark: SparkSession, path: str, ids: DataFrame
 ) -> int:
-    """Erase documents from a persisted dedup index (bands + sets);
-    id column resolved from the persisted params.json.
+    """Erase documents from a persisted dedup index (bands + sets)."""
+    from data_lake_project_spark.operators.dedup_index import _LANE
 
-    Returns the number of DISTINCT DOCUMENTS erased (the sets table is
-    one row per doc) — the uniform ``erase_*`` unit, not the band-row
-    count (num_hashes/band rows per doc)."""
-    import json
-
-    from data_lake_project_spark import fs
-
-    p = path.rstrip("/")
-    id_col = json.loads(fs.read_text(spark, f"{p}/params.json"))["id_col"]
-    _erase_rows(spark, f"{p}/bands", id_col, ids, None)
-    return _erase_rows(spark, f"{p}/sets", id_col, ids, None)
+    return _LANE.erase(spark, path, ids)
 
 
 def rebuild_hll_keys(
@@ -358,16 +315,17 @@ def rebuild_hll_keys(
 
 
 # ---------------------------------------------------------------------------
-# Opt-in id-bucket layout for erase-heavy unpartitioned lanes (SQ
-# codes, dedup bands/sets, BM25 dl): partition the table by a
-# deterministic hash bucket of the ID, and erasure — including the
-# find-the-doomed-rows scan — prunes to the buckets the erased ids can
-# live in, derived from the ids THEMSELVES (no table scan). This is
-# the module-docstring advice ("a deployment that expects frequent
-# erasure partitions them by an id bucket first") shipped as a
-# function. Bucket params persist in a sidecar: a caller-supplied
-# bucket count that drifted from the written layout would prune the
-# WRONG directories — a silent no-op erase.
+# Opt-in id-bucket layout for erase-heavy unpartitioned tables: the
+# table is partitioned by a deterministic hash bucket of the ID, and
+# erasure — including the find-the-doomed-rows scan — prunes to the
+# buckets the erased ids can live in, derived from the ids THEMSELVES
+# (no table scan). A lane opts in per save (``Lane.save(id_buckets=)``,
+# exposed as ``save_sq_index(id_buckets=)``), and ``operators/lane.py``
+# then appends, loads and erases under the layout; a plain table
+# (q168/q200 keyframes) can use these helpers directly. Bucket params
+# persist in the table's own sidecar: a caller-supplied bucket count
+# that drifted from the written layout would prune the WRONG
+# directories — a silent no-op erase.
 # ---------------------------------------------------------------------------
 
 _IDBUCKET_SIDECAR = "_idbucket.json"
@@ -432,31 +390,6 @@ def id_bucket_params(spark: SparkSession, path: str) -> dict | None:
     if not fs.exists(spark, p):
         return None
     return json.loads(fs.read_text(spark, p))
-
-
-def append_id_bucketed(
-    df: DataFrame, path: str, meta: dict | None = None
-) -> None:
-    """Append a delta under the persisted layout (the O(delta) fold
-    shape): bucket column derived with the SAME persisted params, one
-    file per touched bucket dir. ``meta``: pass an already-loaded
-    sidecar to skip the FS re-read."""
-    meta = meta or id_bucket_params(df.sparkSession, path)
-    if meta is None:
-        raise ValueError(
-            f"append_id_bucketed: {path} has no id-bucket sidecar — "
-            "write it with write_id_bucketed first"
-        )
-    (
-        df.withColumn(
-            meta["bucket_col"],
-            id_bucket_expr(meta["id_col"], meta["n_buckets"]),
-        )
-        .repartition(F.col(meta["bucket_col"]))
-        .write.mode("append")
-        .partitionBy(meta["bucket_col"])
-        .parquet(path.rstrip("/"))
-    )
 
 
 def erase_id_bucketed(

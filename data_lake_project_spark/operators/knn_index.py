@@ -23,21 +23,23 @@ ingested the erased ids (erase == never-ingested, the
 ``operators/erasure.py`` contract, CI-pinned and driver-hash-proven
 by q188).
 
-Layout: ``path/edges`` (directed top-k: src, dst, cosine),
-``path/vectors`` (the corpus the NEXT fold scores against),
-``path/params.json`` (k, id/vec columns, rounding). Edges rewrite
-whole on fold (they are (N x k)-sized — the small derived artifact,
-not the corpus); vectors APPEND the delta.
+Layout: a persisted lane (``operators/lane.py`` — save, load and the
+params sidecar: k, id/vec columns, rounding) of ``edges`` (directed
+top-k: src, dst, cosine) and ``vectors`` (the corpus the NEXT fold
+scores against). The fold and erase stay here: edges rewrite whole
+on fold (they are (N x k)-sized — the small derived artifact, not the
+corpus); vectors APPEND the delta.
 """
 
 from __future__ import annotations
 
-import json
+from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_lake_project_spark.functions import pround
+from data_lake_project_spark.operators.lane import Lane, Table
 from data_lake_project_spark.operators.similarity import (
     _as_double,
     _norm,
@@ -45,7 +47,7 @@ from data_lake_project_spark.operators.similarity import (
     spread,
 )
 
-_PARAMS = "params.json"
+_LANE = Lane((Table("edges"), Table("vectors")))
 
 
 def save_knn_index(
@@ -58,11 +60,7 @@ def save_knn_index(
     impl: str = "expr",
 ) -> None:
     """Build the directed top-k edge table from scratch and persist
-    edges + corpus vectors + params. Params are written LAST — a
-    reader that sees them sees a complete index."""
-    from data_lake_project_spark import fs
-
-    p = path.rstrip("/")
+    edges + corpus vectors + params (``Lane.save``)."""
     edges = knn_graph(
         vecs,
         k=k,
@@ -72,29 +70,15 @@ def save_knn_index(
         round_digits=round_digits,
         impl=impl,
     )
-    edges.write.mode("overwrite").parquet(f"{p}/edges")
-    vecs.select(id_col, vec_col).write.mode("overwrite").parquet(
-        f"{p}/vectors"
-    )
-    fs.write_text(
-        vecs.sparkSession,
-        f"{p}/{_PARAMS}",
-        json.dumps(
-            {
-                "k": k,
-                "id_col": id_col,
-                "vec_col": vec_col,
-                "round_digits": round_digits,
-            }
-        ),
-    )
-
-
-def knn_index_params(spark: SparkSession, path: str) -> dict:
-    from data_lake_project_spark import fs
-
-    return json.loads(
-        fs.read_text(spark, f"{path.rstrip('/')}/{_PARAMS}")
+    _LANE.save(
+        path,
+        SimpleNamespace(edges=edges, vectors=vecs.select(id_col, vec_col)),
+        {
+            "k": k,
+            "id_col": id_col,
+            "vec_col": vec_col,
+            "round_digits": round_digits,
+        },
     )
 
 
@@ -138,11 +122,11 @@ def fold_knn_index(
     front (one broadcast semi-join against the corpus — free next to
     the O(N x delta) scoring) and raises on any collision; an
     ingest-or-update flow should erase first, then fold."""
-    prm = knn_index_params(spark, path)
+    prm, t = _LANE.load(spark, path)
     k, id_col, vec_col = prm["k"], prm["id_col"], prm["vec_col"]
     rd = prm["round_digits"]
     p = path.rstrip("/")
-    old = spark.read.parquet(f"{p}/vectors")
+    old = t["vectors"]
     d = delta.select(id_col, vec_col)
     n_delta = d.count()
     if n_delta == 0:
@@ -172,7 +156,7 @@ def fold_knn_index(
         old, d, k, id_col, vec_col, rd, probe_is_src=False
     )
 
-    stored = load_knn_edges(spark, path)
+    stored = t["edges"]
     w = Window.partitionBy("src").orderBy(
         F.col("cosine").desc(), F.col("dst")
     )
@@ -265,11 +249,11 @@ def erase_knn_index(
     replaces)."""
     from data_lake_project_spark.operators.erasure import _resolve_ids
 
-    prm = knn_index_params(spark, path)
+    prm, t = _LANE.load(spark, path)
     k, id_col, vec_col = prm["k"], prm["id_col"], prm["vec_col"]
     rd = prm["round_digits"]
     p = path.rstrip("/")
-    vectors = spark.read.parquet(f"{p}/vectors")
+    vectors = t["vectors"]
     idf = F.broadcast(
         _resolve_ids(ids, id_col, "erase_knn_index").distinct()
     )
@@ -279,7 +263,7 @@ def erase_knn_index(
     remaining = vectors.join(idf, id_col, "left_anti").localCheckpoint(
         eager=True
     )
-    edges = load_knn_edges(spark, path)
+    edges = t["edges"]
     erased_ids = idf.select(F.col(id_col).alias("__eid"))
     # survivors that LOST a neighbor — the only nodes whose top-k can
     # change; everyone else's edges pass through verbatim

@@ -29,7 +29,6 @@ all-pairs stage anywhere; the only corpus-sized shuffles are the
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
@@ -37,6 +36,7 @@ from pyspark.sql import functions as F
 
 from data_lake_project_spark.functions import dec_sum, pround, tokens
 from data_lake_project_spark.functions import spread
+from data_lake_project_spark.operators.lane import Lane, Table
 
 
 def bm25_topk(
@@ -85,6 +85,15 @@ def bm25_topk(
 # production stack (Lucene/ES) computes it once, persists it, and
 # folds new documents in as O(delta) appends.
 # ---------------------------------------------------------------------------
+
+
+# The persisted layout: postings partitioned by the term bucket (a
+# search's static query-term-bucket filter partition-prunes the scan
+# to the probed directories; inference reads the key back as int, so
+# it is cast to the build-side bigint), dl plain and one row per doc.
+_LANE = Lane(
+    (Table("tfs", partition_col="__tb", load_type="bigint"), Table("dl"))
+)
 
 
 @dataclass
@@ -156,81 +165,23 @@ def build_bm25_index(
 
 
 def save_bm25_index(index: Bm25Index, path: str) -> None:
-    """Persist tfs + dl as parquet and params as one small JSON
-    (written last — a reader that sees params sees the tables)."""
-    from data_lake_project_spark import fs
-
-    path = path.rstrip("/")
-    # bucket-partitioned layout: a search's static query-term-bucket
-    # filter partition-prunes the tfs scan to the handful of probed
-    # directories — at 100 TB the difference between reading
-    # |query buckets|/tok_buckets of the postings and all of them.
-    # repartition by the bucket key first so each bucket directory is
-    # ONE file, not one-per-task (without it the 64 dirs held ~32
-    # small files each and listing/footer overhead made the pruned
-    # scan SLOWER than the unpartitioned one at bench scale)
-    index.tfs.repartition("__tb").write.mode("overwrite").partitionBy(
-        "__tb"
-    ).parquet(f"{path}/tfs")
-    index.dl.write.mode("overwrite").parquet(f"{path}/dl")
-    spark = index.tfs.sparkSession
-    fs.write_text(spark, f"{path}/params.json", json.dumps(index.params))
+    _LANE.save(path, index, index.params)
 
 
 def load_bm25_index(spark, path: str) -> Bm25Index:
-    from data_lake_project_spark import fs
+    params, t = _LANE.load(spark, path)
+    return Bm25Index(params, t["tfs"], t["dl"], persisted=True)
 
-    path = path.rstrip("/")
-    params = json.loads(fs.read_text(spark, f"{path}/params.json"))
-    # partition-column type inference reads __tb back as int — pin it
-    # to the build-side bigint so filters/joins never coerce
-    tfs = spark.read.parquet(f"{path}/tfs").withColumn(
-        "__tb", F.col("__tb").cast("bigint")
+
+def bm25_index_apply(spark, path: str, new_docs: DataFrame) -> Bm25Index:
+    """Persisted maintenance fold (``Lane.fold``): index ONLY
+    ``new_docs`` and APPEND to the stored tf/dl tables — the standing
+    corpus's content is never re-tokenized or reshuffled; ids already
+    in ``dl`` fold in as a no-op. df/avgdl need no maintenance — they
+    are derived at serve time. Returns the reloaded index."""
+    _LANE.fold(
+        spark, path, new_docs, lambda p, docs: build_bm25_index(docs, **p)
     )
-    return Bm25Index(
-        params,
-        tfs,
-        spark.read.parquet(f"{path}/dl"),
-        persisted=True,
-    )
-
-
-def bm25_index_apply(
-    spark,
-    path: str,
-    new_docs: DataFrame,
-    assume_new_ids: bool = False,
-) -> Bm25Index:
-    """Persisted maintenance fold: index ONLY ``new_docs`` and APPEND
-    to the stored tf/dl tables — the standing corpus's content is
-    never re-tokenized or reshuffled. Returns the reloaded index.
-
-    Same replay-guard contract as ``ann_index_apply``: by default the
-    delta anti-joins the stored doc ids (one column-pruned scan +
-    distinct — O(index ids)); gated-upstream callers pass
-    ``assume_new_ids=True`` for the strictly O(delta) fold. df/avgdl
-    need no maintenance — they are derived at serve time.
-    """
-    from data_lake_project_spark import fs
-
-    path = path.rstrip("/")
-    params = json.loads(fs.read_text(spark, f"{path}/params.json"))
-    id_col = params["id_col"]
-    if not assume_new_ids:
-        existing = (
-            spark.read.parquet(f"{path}/dl").select(id_col).distinct()
-        )
-        new_docs = new_docs.join(existing, id_col, "left_anti")
-    delta = build_bm25_index(
-        new_docs,
-        text_col=params["text_col"],
-        id_col=id_col,
-        tok_buckets=params.get("tok_buckets", 64),
-    )
-    delta.tfs.repartition("__tb").write.mode("append").partitionBy(
-        "__tb"
-    ).parquet(f"{path}/tfs")
-    delta.dl.write.mode("append").parquet(f"{path}/dl")
     return load_bm25_index(spark, path)
 
 

@@ -1,17 +1,16 @@
-"""Persisted int8 scalar-quantization index — the fifth
-train-once/serve-many lifecycle (dense-exact lane), next to
-ann_index (IVF/PQ approximate), dedup_index, the BM25 lexical index,
-and the HLL sketch rollup.
+"""Persisted int8 scalar-quantization index — the dense-exact lane
+next to ann_index (IVF/PQ approximate), dedup_index, the BM25 lexical
+index, and the HLL sketch rollup.
 
 The artifact is the COMPRESSION: the corpus is encoded once into a
 1-byte-per-dimension ``array<tinyint>`` codes table (4x smaller than
 fp32), and every search after scans codes instead of raw embeddings —
 same exact-ranking contract as ``similarity.sq_topk`` (scoring on
 dequantized codes; every op correctly-rounded IEEE, so results stay
-oracle-hashable). Maintenance is the ann_index contract: O(delta)
-appends encoding ONLY the new vectors with the FROZEN stats model
-(anti-join replay guard by default, ``assume_new_ids=True`` for the
-strictly-O(delta) fast path).
+oracle-hashable). Save, load, the replay-guarded O(delta) fold
+(encoding ONLY the new vectors with the FROZEN stats model) and erase
+are the shared persisted-lane lifecycle, ``operators/lane.py``; the
+stats model rides in its ``params.json`` sidecar.
 
 Frozen-stats caveat (the FAISS SQ deployment contract): folds clamp
 out-of-range dimensions to the trained [min, max] envelope, so a
@@ -21,16 +20,17 @@ rebuild. Rebuild-vs-fold equality is CI-pinned under the same stats.
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from data_lake_project_spark import fs
+from data_lake_project_spark.operators.lane import Lane, Table
 from data_lake_project_spark.operators.similarity import (
     sq_encode,
     sq_stats,
 )
+
+_LANE = Lane((Table("codes"),))
 
 
 @dataclass
@@ -62,90 +62,40 @@ def build_sq_index(
 def save_sq_index(
     index: SqIndex, path: str, id_buckets: int | None = None
 ) -> None:
-    """Codes as parquet, stats model as one small JSON (written last —
-    a reader that sees the model sees the codes).
-
-    ``id_buckets``: opt-in id-bucket layout (``erasure.
-    write_id_bucketed``) for erase-heavy deployments — codes partition
-    by a deterministic hash bucket of the id, so GDPR erasure (and its
+    """``id_buckets``: opt-in id-bucket layout (see ``operators/
+    lane.py``) for erase-heavy deployments — GDPR erasure (and its
     doomed-row scan) prunes to the touched bucket dirs instead of
-    rewriting the whole table. Serving is unchanged: the bucket column
-    is dropped on load."""
-    path = path.rstrip("/")
-    if id_buckets is not None:
-        from data_lake_project_spark.operators.erasure import (
-            write_id_bucketed,
-        )
-
-        write_id_bucketed(
-            index.codes,
-            f"{path}/codes",
-            index.params["id_col"],
-            n_buckets=id_buckets,
-        )
-    else:
-        index.codes.write.mode("overwrite").parquet(f"{path}/codes")
-    spark = index.codes.sparkSession
-    model = {
-        "mins": index.mins,
-        "maxs": index.maxs,
-        "params": index.params,
-    }
-    fs.write_text(spark, f"{path}/model.json", json.dumps(model))
+    rewriting the whole table; serving is unchanged."""
+    _LANE.save(
+        path,
+        index,
+        {**index.params, "mins": index.mins, "maxs": index.maxs},
+        id_buckets=id_buckets,
+    )
 
 
 def load_sq_index(spark: SparkSession, path: str) -> SqIndex:
-    path = path.rstrip("/")
-    model = json.loads(fs.read_text(spark, f"{path}/model.json"))
-    codes = spark.read.parquet(f"{path}/codes")
-    # id-bucketed layout: the bucket column is erase-path plumbing,
-    # not index data — serving sees the identical schema either way
-    from data_lake_project_spark.operators.erasure import (
-        id_bucket_params,
-    )
-
-    meta = id_bucket_params(spark, f"{path}/codes")
-    if meta is not None and meta["bucket_col"] in codes.columns:
-        codes = codes.drop(meta["bucket_col"])
+    params, t = _LANE.load(spark, path)
+    mins, maxs = params.pop("mins"), params.pop("maxs")
     return SqIndex(
-        codes,
-        [float(x) for x in model["mins"]],
-        [float(x) for x in model["maxs"]],
-        model["params"],
+        t["codes"], [float(x) for x in mins], [float(x) for x in maxs], params
     )
 
 
 def sq_index_apply(
-    spark: SparkSession,
-    path: str,
-    new_corpus: DataFrame,
-    assume_new_ids: bool = False,
+    spark: SparkSession, path: str, new_corpus: DataFrame
 ) -> SqIndex:
-    """O(delta) fold: encode ONLY the delta with the saved stats and
-    parquet-append. Same replay-guard contract as ``ann_index_apply``:
-    the default anti-join makes a replayed batch a no-op (a positional
-    codes table DOES duplicate results on replay, unlike the HLL
-    sketch lane); ``assume_new_ids=True`` skips the guard for
-    upstream-gated ingest."""
-    idx = load_sq_index(spark, path)
-    p = idx.params
-    if not assume_new_ids:
-        existing = idx.codes.select(p["id_col"]).distinct()
-        new_corpus = new_corpus.join(existing, p["id_col"], "left_anti")
-    delta = sq_encode(
-        new_corpus, idx.mins, idx.maxs, p["id_col"], p["vec_col"]
-    )
-    codes_path = f"{path.rstrip('/')}/codes"
-    from data_lake_project_spark.operators.erasure import (
-        append_id_bucketed,
-        id_bucket_params,
-    )
+    """O(delta) fold (``Lane.fold``): encode ONLY the delta with the
+    saved stats and append, inside the saved layout; ids already
+    stored fold in as a no-op (a positional codes table DOES duplicate
+    results on replay, unlike the HLL sketch lane)."""
 
-    meta = id_bucket_params(spark, codes_path)
-    if meta is not None:
-        append_id_bucketed(delta, codes_path, meta=meta)
-    else:
-        delta.write.mode("append").parquet(codes_path)
+    def encode(p, rows):
+        mins, maxs = p["mins"], p["maxs"]
+        codes = sq_encode(rows, mins, maxs, p["id_col"], p["vec_col"])
+        return SqIndex(codes, mins, maxs, p)
+
+    _LANE.fold(spark, path, new_corpus, encode)
     return load_sq_index(spark, path)
 
 

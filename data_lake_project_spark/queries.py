@@ -608,9 +608,10 @@ def _publish_if_absent(spark, path: str, build_fn) -> None:
     The presence gate is the PATH ITSELF: because publication is an
     atomic rename of a fully-built temp dir, an existing path IS a
     complete index — no per-lane marker file needed. (A marker gate
-    on ``model.json`` silently rebuilt-and-discarded the BM25 lane
-    every run, whose save writes ``params.json`` — the index was
-    'persisted' but every q150 execution still paid the full build.)
+    on ANN's old ``model.json`` sidecar silently rebuilt-and-discarded
+    the BM25 lane every run, whose save wrote ``params.json``; every
+    persisted lane now writes the one ``params.json`` sidecar of
+    ``operators/lane.py``, and the path stays the gate.)
     """
     import errno as _errno
     import os as _os
@@ -638,6 +639,25 @@ def _publish_if_absent(spark, path: str, build_fn) -> None:
         raise
 
 
+# Root of the persisted-lane caches (``operators/lane.py`` layout: one
+# ``params.json`` sidecar per lane). Bump the version whenever that
+# on-disk format changes, so a cache an older layout published is
+# never loaded by new code.
+_LANE_CACHE = "/tmp/spark_graft_ann_idx/v3"
+
+
+def _published_lane(spark, sf, tables, key: str, build_fn) -> str:
+    """Publish-if-absent a lane cache keyed by the fixture dir, the
+    content fingerprints of ``tables`` (a changed fixture forces a
+    rebuild — a stale index would silently serve old results) and
+    ``key`` (the lane config / layout version); returns its path."""
+    tag = sf.rstrip("/").replace("/", "_").replace(".", "_")
+    fp = "_".join(_dataset_fingerprint(sf, t) for t in tables)
+    path = f"{_LANE_CACHE}/{tag}_{fp}_{key}"
+    _publish_if_absent(spark, path, build_fn)
+    return path
+
+
 def q137_ann_index_search(spark, sf):
     """ANN served from a PERSISTED index — the production complement
     to q133's inline train+encode+search: the IVF+PQ index (model +
@@ -655,17 +675,13 @@ def q137_ann_index_search(spark, sf):
     )
 
     e = load_table(spark, sf, "embeddings")
-    # v2 layout: codes partitionBy(__bucket) → searches partition-
-    # prune; the content fingerprint in the key forces a rebuild when
-    # the fixture changes (a stale index would silently serve old
-    # results) and the temp-build + atomic-rename publish keeps
-    # concurrent runs from ever reading a half-written index
-    tag = sf.rstrip("/").replace("/", "_").replace(".", "_")
-    fp = _dataset_fingerprint(sf, "embeddings")
-    path = f"/tmp/spark_graft_ann_idx/v2/{tag}_{fp}_ivfpq_16x16x64"
-    _publish_if_absent(
+    # the temp-build + atomic-rename publish keeps concurrent runs
+    # from ever reading a half-written index
+    path = _published_lane(
         spark,
-        path,
+        sf,
+        ["embeddings"],
+        "ivfpq_16x16x64",
         lambda tmp: save_ann_index(
             build_ann_index(e, kind="ivfpq", dim=64), tmp
         ),
@@ -864,10 +880,6 @@ def q143_ann_chunk_retrieval(spark, sf):
     # build-if-absent persisted index (q137's lifecycle): first run
     # pays chunk+embed+train+encode once; every run after loads the
     # bucket-partitioned codes and the search partition-prunes
-    tag = sf.rstrip("/").replace("/", "_").replace(".", "_")
-    fp = _dataset_fingerprint(sf, "documents")
-    path = f"/tmp/spark_graft_ann_idx/v2/{tag}_{fp}_chunks_ivf_8"
-
     def _build(tmp):
         # the assert_true lives INSIDE the packing expression (adding
         # a coalesced NULL) so column pruning can't drop the guard: a
@@ -886,7 +898,7 @@ def q143_ann_chunk_retrieval(spark, sf):
             tmp,
         )
 
-    _publish_if_absent(spark, path, _build)
+    path = _published_lane(spark, sf, ["documents"], "chunks_ivf_8", _build)
     return (
         search_ann_index(
             load_ann_index(spark, path), probes, k=5, nprobe=4
@@ -1131,16 +1143,12 @@ def q150_bm25_index_search(spark, sf):
     )
 
     d = load_table(spark, sf, "documents")
-    tag = sf.rstrip("/").replace("/", "_").replace(".", "_")
-    fp = _dataset_fingerprint(sf, "documents")
-    # _tb64 = layout version: tfs partitioned by the 64-way token
-    # hash bucket (bump the suffix whenever the on-disk layout
-    # changes, so a stale /tmp cache from an older layout can never
-    # be loaded)
-    path = f"/tmp/spark_graft_ann_idx/v2/{tag}_{fp}_bm25_tb64"
-    _publish_if_absent(
+    # _tb64: tfs partitioned by the 64-way token hash bucket
+    path = _published_lane(
         spark,
-        path,
+        sf,
+        ["documents"],
+        "bm25_tb64",
         lambda tmp: save_bm25_index(build_bm25_index(d), tmp),
     )
     q = spark.createDataFrame(_Q142_QUERIES, "query_id int, qtext string")
@@ -3861,8 +3869,6 @@ def _published_hll_rollup(spark, sf):
     e = load_table(spark, sf, "events").select(
         "event_type", F.to_date("ts").alias("day"), "user_id"
     )
-    tag = sf.rstrip("/").replace("/", "_").replace(".", "_")
-    fp = _dataset_fingerprint(sf, "events")
     # lg_k=14: the exact (coupon/sparse) regime must cover the LARGEST
     # fixture the oracle contract could meet — measured: lg_k=12 goes
     # dense at sf0.1's 1500 distinct users (estimate 1488), lg_k=14
@@ -3872,10 +3878,11 @@ def _published_hll_rollup(spark, sf):
     # at that scale treats q151/q158 as rows-only like q153. The
     # _hll14 path suffix is the layout-version discipline: a stale
     # lg_k=12 cache can never be loaded.
-    path = f"/tmp/spark_graft_ann_idx/v2/{tag}_{fp}_hll14"
-    _publish_if_absent(
+    path = _published_lane(
         spark,
-        path,
+        sf,
+        ["events"],
+        "hll14",
         lambda tmp: save_hll_rollup(
             build_hll_rollup(e, ["event_type", "day"], "user_id", 14),
             tmp,
@@ -4214,12 +4221,11 @@ def q157_sq_index_search(spark, sf):
     )
 
     e = load_table(spark, sf, "embeddings")
-    tag = sf.rstrip("/").replace("/", "_").replace(".", "_")
-    fp = _dataset_fingerprint(sf, "embeddings")
-    path = f"/tmp/spark_graft_ann_idx/v2/{tag}_{fp}_sq8_64"
-    _publish_if_absent(
+    path = _published_lane(
         spark,
-        path,
+        sf,
+        ["embeddings"],
+        "sq8_64",
         lambda tmp: save_sq_index(build_sq_index(e, dim=64), tmp),
     )
     probes = e.filter(F.col("vec_id") < 5).select(
@@ -4475,7 +4481,6 @@ def _gdpr_build_fn(spark, sf):
     )
     from data_lake_project_spark.operators import erasure as _er
     from data_lake_project_spark.operators import knn_index as _knn
-    from data_lake_project_spark.multimodal import av as _av
     from data_lake_project_spark.multimodal import phash_index as _ph
     from data_lake_project_spark.operators.retrieval import (
         build_bm25_index,
@@ -4524,41 +4529,15 @@ def _gdpr_build_fn(spark, sf):
         )
         _ph.save_phash_index(_ph.build_phash_index(rasters), f"{tmp}/phash")
         # the AV lanes (round-13 verdict #3: q200's standalone
-        # artifacts composed into the capstone): per-clip scene
-        # keyframes (16-way id-bucketed for partition-pruned erase)
-        # and audio feature rows, both keyed by clip_id == doc_id and
-        # erased under the SAME document deletion request
-        clips = rasters.filter(F.length("image") > 0).select(
-            F.col("doc_id").cast("string").alias("path"),
-            F.col("image").alias("content"),
-        )
-        rep = _av.frame_scene_report(
-            _av.sample_frames(
-                clips, every_ms=1024, decoder=_av.make_fake_frame_decoder()
+        # artifacts composed into the capstone), keyed by clip_id ==
+        # doc_id and erased under the SAME document deletion request
+        _write_av_artifacts(
+            rasters.filter(F.length("image") > 0).select(
+                F.col("doc_id").cast("string").alias("path"),
+                F.col("image").alias("content"),
             ),
-            path_col="path",
-            frame_col="frame",
-            threshold=8,
+            tmp,
         )
-        (
-            rep.filter("is_scene_change")
-            .select(
-                F.col("path").cast("long").alias("clip_id"),
-                "frame",
-                "pband0",
-                "pband1",
-                "pband2",
-                "pband3",
-            )
-            .withColumn("pb", F.col("clip_id") % 16)
-            .write.partitionBy("pb")
-            .parquet(f"{tmp}/keyframes")
-        )
-        _av.audio_features(clips).select(
-            F.col("path").cast("long").alias("clip_id"),
-            "duration_ms",
-            "features",
-        ).write.parquet(f"{tmp}/audio")
         # the deletion request, propagated through every lane (module
         # attribute lookups, not from-imports, so the crash test can
         # inject a failure at any single lane boundary)
@@ -4568,24 +4547,13 @@ def _gdpr_build_fn(spark, sf):
         _er.erase_ann_index(spark, f"{tmp}/ann", erased_vecs)
         _knn.erase_knn_index(spark, f"{tmp}/knn", erased_vecs)
         _ph.erase_phash_index(spark, f"{tmp}/phash", erased_docs)
-        erased_clips = erased_docs.select(
-            F.col("doc_id").alias("clip_id")
-        ).localCheckpoint(eager=True)
-        buckets = sorted(
-            r[0]
-            for r in erased_clips.select(
-                (F.col("clip_id") % 16).alias("pb")
-            ).distinct().collect()
-        )
-        _er._erase_rows(
+        _erase_av_artifacts(
             spark,
-            f"{tmp}/keyframes",
-            "clip_id",
-            erased_clips,
-            partition_col="pb",
-            prune_values=buckets,
+            tmp,
+            erased_docs.select(
+                F.col("doc_id").alias("clip_id")
+            ).localCheckpoint(eager=True),
         )
-        _er._erase_rows(spark, f"{tmp}/audio", "clip_id", erased_clips)
         remaining = ev.filter(f"NOT ({_GDPR_USER_PRED})")
         touched = ev.filter(_GDPR_USER_PRED).select("event_type", "day")
         _er.rebuild_hll_keys(
@@ -4607,14 +4575,13 @@ def _published_gdpr_lanes(spark, sf) -> str:
     directory IS the post-erasure state (replays never re-build or
     re-erase; the q141 composition pattern applied to deletion).
     Keyed by the fingerprints of all three source tables."""
-    tag = sf.rstrip("/").replace("/", "_").replace(".", "_")
-    fp = "_".join(
-        _dataset_fingerprint(sf, t)
-        for t in ("documents", "embeddings", "events")
+    return _published_lane(
+        spark,
+        sf,
+        ["documents", "embeddings", "events"],
+        "gdpr11",
+        _gdpr_build_fn(spark, sf),
     )
-    path = f"/tmp/spark_graft_ann_idx/v2/{tag}_{fp}_gdpr11"
-    _publish_if_absent(spark, path, _gdpr_build_fn(spark, sf))
-    return path
 
 
 def q168_gdpr_erasure_report(spark, sf):
@@ -4869,10 +4836,6 @@ def q170_ann_index_injected_search(spark, sf):
 
     e = load_table(spark, sf, "embeddings")
     probes = _ann_probes(e)
-    tag = sf.rstrip("/").replace("/", "_").replace(".", "_")
-    fp = _dataset_fingerprint(sf, "embeddings")
-    path = f"/tmp/spark_graft_ann_idx/v2/{tag}_{fp}_ivfpq_inj16x16x64"
-
     def build(tmp):
         cents = _lowid_vectors(e, 16)
         cb = _pq_codebook_lowid(e)
@@ -4883,7 +4846,9 @@ def q170_ann_index_injected_search(spark, sf):
             tmp,
         )
 
-    _publish_if_absent(spark, path, build)
+    path = _published_lane(
+        spark, sf, ["embeddings"], "ivfpq_inj16x16x64", build
+    )
     return search_ann_index(
         load_ann_index(spark, path), probes, k=10, nprobe=4
     ).orderBy("probe_id", "vec_id")
@@ -4982,10 +4947,6 @@ def q173_chunk_index_recall_report(spark, sf):
         .localCheckpoint(eager=True)
     )
     cents = _lowid_vectors(chunks, 8)
-    tag = sf.rstrip("/").replace("/", "_").replace(".", "_")
-    fp = _dataset_fingerprint(sf, "documents")
-    path = f"/tmp/spark_graft_ann_idx/v2/{tag}_{fp}_chunks_ivf_inj8"
-
     def _build(tmp):
         save_ann_index(
             build_ann_index(
@@ -4995,7 +4956,9 @@ def q173_chunk_index_recall_report(spark, sf):
             tmp,
         )
 
-    _publish_if_absent(spark, path, _build)
+    path = _published_lane(
+        spark, sf, ["documents"], "chunks_ivf_inj8", _build
+    )
     appr = search_ann_index(
         load_ann_index(spark, path), probes, k=5, nprobe=4
     )
@@ -5540,16 +5503,9 @@ def _published_knn_index(spark, sf) -> str:
     consumer needing the exact graph — q187's serve, q183's recall
     report exact side — loads these edges instead of re-running the
     quadratic baseline."""
-    import os as _os
-
     from data_lake_project_spark.operators.knn_index import (
         fold_knn_index,
         save_knn_index,
-    )
-
-    st = _os.stat(f"{sf.rstrip('/')}/embeddings.parquet")
-    path = (
-        f"/tmp/spark_graft_knn_idx_{st.st_size}_{int(st.st_mtime)}"
     )
 
     def _build(tmp):
@@ -5561,8 +5517,7 @@ def _published_knn_index(spark, sf) -> str:
             spark, tmp, e.filter(F.col("vec_id") % 10 == 0)
         )
 
-    _publish_if_absent(spark, path, _build)
-    return path
+    return _published_lane(spark, sf, ["embeddings"], "knn10", _build)
 
 
 def q187_knn_index_maintained(spark, sf):
@@ -5603,18 +5558,11 @@ def q188_knn_index_erased(spark, sf):
     (replay-idempotent — the q168 pattern), and the oracle is the
     from-scratch q180 SQL over the REMAINING corpus: the driver hash
     proves erase == never-ingested for the graph family."""
-    import os as _os
-
     from data_lake_project_spark.operators.knn_index import (
         erase_knn_index,
         load_knn_edges,
         mutual_knn_edges,
         save_knn_index,
-    )
-
-    st = _os.stat(f"{sf.rstrip('/')}/embeddings.parquet")
-    path = (
-        f"/tmp/spark_graft_knn_erased_{st.st_size}_{int(st.st_mtime)}"
     )
 
     def _build(tmp):
@@ -5626,7 +5574,9 @@ def q188_knn_index_erased(spark, sf):
             e.filter(F.col("vec_id") % 9 == 4).select("vec_id"),
         )
 
-    _publish_if_absent(spark, path, _build)
+    path = _published_lane(
+        spark, sf, ["embeddings"], "knn10_erased", _build
+    )
     return mutual_knn_edges(load_knn_edges(spark, path)).orderBy(
         "src", "dst"
     )
@@ -5784,8 +5734,6 @@ def _published_phash_index(spark, sf) -> str:
         save_phash_index,
     )
 
-    fp = _dataset_fingerprint(sf, "documents")
-    path = f"/tmp/spark_graft_phash_idx_{fp}"
     d = load_table(spark, sf, "documents")
     ascii_txt = F.regexp_replace(F.col("text"), r"[^\x20-\x7E]", "")
     originals = d.select(
@@ -5804,8 +5752,7 @@ def _published_phash_index(spark, sf) -> str:
             spark, tmp, originals.filter(F.col("doc_id") % 4 == 3)
         )
 
-    _publish_if_absent(spark, path, _build)
-    return path
+    return _published_lane(spark, sf, ["documents"], "phash_idx", _build)
 
 
 def _phash_gate_batch(spark, sf):
@@ -6031,80 +5978,85 @@ def q194_stream_phash_ingest_fold(spark, sf):
     index copy, src, stage, sink, checkpoint) are deleted before
     returning — the result rides an eager localCheckpoint, so the
     frame outlives its source files (round-12 verdict #3)."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from data_lake_project_spark.multimodal.phash_index import (
         build_phash_index,
         save_phash_index,
         stream_ingest_with_phash_gate,
     )
-    from data_lake_project_spark.streaming.pipeline import read_sink
 
-    # base index artifact: fingerprints of the doc_id % 4 == 0
-    # originals, published once per corpus content fingerprint
-    base_path = (
-        f"/tmp/spark_graft_phash_base_{_dataset_fingerprint(sf, 'documents')}"
-    )
     d = load_table(spark, sf, "documents")
     ascii_txt = F.regexp_replace(F.col("text"), r"[^\x20-\x7E]", "")
     originals = d.select(
         "doc_id", F.encode(ascii_txt, "UTF-8").alias("image")
     ).filter(F.length("image") > 0)
-    _publish_if_absent(
-        spark,
-        base_path,
-        lambda tmp: save_phash_index(
-            build_phash_index(originals.filter(F.col("doc_id") % 4 == 0)),
-            tmp,
-        ),
-    )
-    # fresh mutable copy per call — codes is ~40 B/row
-    idx_path = _tempfile.mkdtemp(prefix="spark_graft_q194_idx_")
-    _shutil.rmtree(idx_path)
-    _shutil.copytree(base_path, idx_path)
-
     twins = d.filter(F.col("doc_id") % 3 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.encode(
             F.translate(ascii_txt, _PRINTABLE, _SHIFTED), "UTF-8"
         ).alias("image"),
     ).filter(F.length("image") > 0)
-    batches = [
-        originals.filter((F.col("doc_id") % 4).isin(1, 2)),
-        originals.filter(F.col("doc_id") % 4 == 3).unionByName(twins),
-    ]
-    # one file per micro-batch, distinct ascending mtimes: the file
-    # source orders pickup by modification time (funnel-test lesson)
-    src = _tempfile.mkdtemp(prefix="spark_graft_q194_src_")
-    stage = _tempfile.mkdtemp(prefix="spark_graft_q194_stage_")
-    for i, b in enumerate(batches):
-        b.coalesce(1).write.mode("overwrite").parquet(f"{stage}/b{i}")
-        part = sorted(_glob.glob(f"{stage}/b{i}/part-*.parquet"))[0]
-        dst = _os.path.join(src, f"{i:02d}.parquet")
-        _shutil.copy(part, dst)
-        _os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-
-    stream = (
-        spark.readStream.schema("doc_id long, image binary")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    # base index: fingerprints of the doc_id % 4 == 0 originals
+    base = _published_lane(
+        spark,
+        sf,
+        ["documents"],
+        "phash_base",
+        lambda tmp: save_phash_index(
+            build_phash_index(originals.filter(F.col("doc_id") % 4 == 0)),
+            tmp,
+        ),
     )
-    out = _tempfile.mkdtemp(prefix="spark_graft_q194_out_")
-    ckpt = _tempfile.mkdtemp(prefix="spark_graft_q194_ckpt_")
+    return _drain_ingest_stream(
+        spark,
+        "q194",
+        base,
+        [
+            originals.filter((F.col("doc_id") % 4).isin(1, 2)),
+            originals.filter(F.col("doc_id") % 4 == 3).unionByName(twins),
+        ],
+        "doc_id long, image binary",
+        stream_ingest_with_phash_gate,
+    )
+
+
+def _drain_ingest_stream(
+    spark, tag, base_path, batches, schema, start
+) -> DataFrame:
+    """Run the q194/q201 ingest-AND-fold stream: copy the published
+    base index fresh per call (the loop MUTATES it), land each of
+    ``batches`` as ONE source file with distinct ascending mtimes (the
+    file source orders pickup by modification time — funnel-test
+    lesson; maxFilesPerTrigger=1 makes each file one micro-batch),
+    drain the stream through
+    ``start(stream, index, out, checkpoint, available_now=True)`` and
+    return (doc_id, admitted_in_batch). The five per-call temp dirs
+    are deleted before returning; the result is eagerly checkpointed
+    first, so it holds no lineage into the deleted files."""
+    import glob as _glob
+    import os as _os
+    import shutil as _shutil
+    import tempfile as _tempfile
+
+    dirs = [
+        _tempfile.mkdtemp(prefix=f"spark_graft_{tag}_{role}_")
+        for role in ("idx", "src", "stage", "out", "ckpt")
+    ]
+    idx, src, stage, out, ckpt = dirs
     try:
-        q = stream_ingest_with_phash_gate(
-            stream,
-            idx_path,
-            out,
-            ckpt,
-            available_now=True,
+        _shutil.rmtree(idx)
+        _shutil.copytree(base_path, idx)
+        for i, b in enumerate(batches):
+            b.coalesce(1).write.mode("overwrite").parquet(f"{stage}/b{i}")
+            part = sorted(_glob.glob(f"{stage}/b{i}/part-*.parquet"))[0]
+            dst = _os.path.join(src, f"{i:02d}.parquet")
+            _shutil.copy(part, dst)
+            _os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
         )
-        _await_stream(q)
-        # eager checkpoint BEFORE the temp dirs vanish: the returned
-        # frame must not hold lineage into files the finally deletes
+        _await_stream(start(stream, idx, out, ckpt, available_now=True))
         admitted = (
             spark.read.parquet(f"{out}/data")
             .select(
@@ -6114,7 +6066,7 @@ def q194_stream_phash_ingest_fold(spark, sf):
             .localCheckpoint(eager=True)
         )
     finally:
-        for d_ in (idx_path, src, stage, out, ckpt):
+        for d_ in dirs:
             _shutil.rmtree(d_, ignore_errors=True)
     return admitted.orderBy("doc_id")
 
@@ -6315,6 +6267,50 @@ def q199_crossmodal_survivors(spark, sf):
     ).orderBy("doc_id")
 
 
+def _write_av_artifacts(clips, root: str) -> None:
+    """The persisted AV pair of q200/q168 under ``root``, both keyed by
+    clip_id: per-clip scene keyframes, id-bucketed 16 ways
+    (``erasure.write_id_bucketed``) so an erase scans and rewrites only
+    the buckets the request's clip ids hash to, and audio feature
+    rows (plain). ``clips``: (path = clip id as string, content)."""
+    from data_lake_project_spark.multimodal import av as _av
+    from data_lake_project_spark.operators.erasure import write_id_bucketed
+
+    rep = _av.frame_scene_report(
+        _av.sample_frames(
+            clips, every_ms=1024, decoder=_av.make_fake_frame_decoder()
+        ),
+        path_col="path",
+        frame_col="frame",
+        threshold=8,
+    )
+    keyframes = rep.filter("is_scene_change").select(
+        F.col("path").cast("long").alias("clip_id"),
+        "frame",
+        "pband0",
+        "pband1",
+        "pband2",
+        "pband3",
+    )
+    write_id_bucketed(keyframes, f"{root}/keyframes", "clip_id", 16)
+    _av.audio_features(clips).select(
+        F.col("path").cast("long").alias("clip_id"),
+        "duration_ms",
+        "features",
+    ).write.parquet(f"{root}/audio")
+
+
+def _erase_av_artifacts(spark, root: str, clip_ids) -> None:
+    """Erase ``clip_ids`` from both AV tables under ``root``."""
+    from data_lake_project_spark.operators.erasure import (
+        _erase_rows,
+        erase_id_bucketed,
+    )
+
+    erase_id_bucketed(spark, f"{root}/keyframes", clip_ids)
+    _erase_rows(spark, f"{root}/audio", "clip_id", clip_ids)
+
+
 def q200_av_erasure_report(spark, sf):
     """GDPR erasure for the AV modality (round-12 verdict #5): q195's
     keyframe fingerprints and q196's audio features become PERSISTED
@@ -6337,18 +6333,6 @@ def q200_av_erasure_report(spark, sf):
     import shutil as _shutil
     import tempfile as _tempfile
 
-    from data_lake_project_spark.multimodal.av import (
-        audio_features,
-        frame_scene_report,
-        make_fake_frame_decoder,
-        sample_frames,
-    )
-    from data_lake_project_spark.operators.erasure import _erase_rows
-
-    base_path = (
-        f"/tmp/spark_graft_av_art_{_dataset_fingerprint(sf, 'documents')}"
-    )
-
     def _build(tmp):
         d = load_table(spark, sf, "documents")
         ascii_txt = F.regexp_replace(F.col("text"), r"[^\x20-\x7E]", "")
@@ -6356,35 +6340,9 @@ def q200_av_erasure_report(spark, sf):
             F.col("doc_id").cast("string").alias("path"),
             F.encode(ascii_txt, "UTF-8").alias("content"),
         ).filter(F.length("content") > 0)
-        rep = frame_scene_report(
-            sample_frames(
-                clips, every_ms=1024, decoder=make_fake_frame_decoder()
-            ),
-            path_col="path",
-            frame_col="frame",
-            threshold=8,
-        )
-        (
-            rep.filter("is_scene_change")
-            .select(
-                F.col("path").cast("long").alias("clip_id"),
-                "frame",
-                "pband0",
-                "pband1",
-                "pband2",
-                "pband3",
-            )
-            .withColumn("pb", F.col("clip_id") % 16)
-            .write.partitionBy("pb")
-            .parquet(f"{tmp}/keyframes")
-        )
-        audio_features(clips).select(
-            F.col("path").cast("long").alias("clip_id"),
-            "duration_ms",
-            "features",
-        ).write.parquet(f"{tmp}/audio")
+        _write_av_artifacts(clips, tmp)
 
-    _publish_if_absent(spark, base_path, _build)
+    base_path = _published_lane(spark, sf, ["documents"], "av_art", _build)
     work = _tempfile.mkdtemp(prefix="spark_graft_q200_work_")
     try:
         _shutil.rmtree(work)
@@ -6399,21 +6357,7 @@ def q200_av_erasure_report(spark, sf):
             .select(F.col("doc_id").alias("clip_id"))
             .localCheckpoint(eager=True)
         )
-        buckets = sorted(
-            r[0]
-            for r in req.select(
-                (F.col("clip_id") % 16).alias("pb")
-            ).distinct().collect()
-        )
-        _erase_rows(
-            spark,
-            f"{work}/keyframes",
-            "clip_id",
-            req,
-            partition_col="pb",
-            prune_values=buckets,
-        )
-        _erase_rows(spark, f"{work}/audio", "clip_id", req)
+        _erase_av_artifacts(spark, work, req)
         kf = spark.read.parquet(f"{work}/keyframes")
         au = spark.read.parquet(f"{work}/audio")
         kf_row = kf.agg(
@@ -6602,79 +6546,37 @@ def q201_stream_text_ingest_fold(spark, sf):
     sequential admission with the same in-batch rule. Temp dirs are
     deleted before returning; the result rides an eager
     localCheckpoint (q194 hygiene)."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from data_lake_project_spark.operators.dedup_index import (
         build_dedup_index,
         save_dedup_index,
         stream_ingest_with_text_gate,
     )
 
-    base_path = (
-        f"/tmp/spark_graft_q201_base_{_dataset_fingerprint(sf, 'documents')}"
-    )
-    d = load_table(spark, sf, "documents")
-    docs = d.select("doc_id", "text")
-    _publish_if_absent(
-        spark,
-        base_path,
-        lambda tmp: save_dedup_index(
-            build_dedup_index(docs.filter(F.col("doc_id") % 4 == 0)),
-            tmp,
-        ),
-    )
-    idx_path = _tempfile.mkdtemp(prefix="spark_graft_q201_idx_")
-    _shutil.rmtree(idx_path)
-    _shutil.copytree(base_path, idx_path)
-
+    docs = load_table(spark, sf, "documents").select("doc_id", "text")
     twins = docs.filter(F.col("doc_id") % 3 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" dup")).alias("text"),
     )
-    batches = [
-        docs.filter((F.col("doc_id") % 4).isin(1, 2)),
-        docs.filter(F.col("doc_id") % 4 == 3).unionByName(twins),
-    ]
-    src = _tempfile.mkdtemp(prefix="spark_graft_q201_src_")
-    stage = _tempfile.mkdtemp(prefix="spark_graft_q201_stage_")
-    for i, b in enumerate(batches):
-        b.coalesce(1).write.mode("overwrite").parquet(f"{stage}/b{i}")
-        part = sorted(_glob.glob(f"{stage}/b{i}/part-*.parquet"))[0]
-        dst = _os.path.join(src, f"{i:02d}.parquet")
-        _shutil.copy(part, dst)
-        _os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    base = _published_lane(
+        spark,
+        sf,
+        ["documents"],
+        "dedup_base",
+        lambda tmp: save_dedup_index(
+            build_dedup_index(docs.filter(F.col("doc_id") % 4 == 0)), tmp
+        ),
     )
-    out = _tempfile.mkdtemp(prefix="spark_graft_q201_out_")
-    ckpt = _tempfile.mkdtemp(prefix="spark_graft_q201_ckpt_")
-    try:
-        q = stream_ingest_with_text_gate(
-            stream,
-            idx_path,
-            out,
-            ckpt,
-            available_now=True,
-        )
-        _await_stream(q)
-        admitted = (
-            spark.read.parquet(f"{out}/data")
-            .select(
-                "doc_id",
-                F.col("__batch").cast("long").alias("admitted_in_batch"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        for d_ in (idx_path, src, stage, out, ckpt):
-            _shutil.rmtree(d_, ignore_errors=True)
-    return admitted.orderBy("doc_id")
+    return _drain_ingest_stream(
+        spark,
+        "q201",
+        base,
+        [
+            docs.filter((F.col("doc_id") % 4).isin(1, 2)),
+            docs.filter(F.col("doc_id") % 4 == 3).unionByName(twins),
+        ],
+        "doc_id long, text string",
+        stream_ingest_with_text_gate,
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -2204,33 +2205,191 @@ def test_connected_components_require_converged(spark):
     assert ok.select("cluster_id").distinct().count() == 1
 
 
-def test_dedup_index_apply_replayed_delta_is_noop(spark, tmp_path):
-    """Folding the SAME delta twice (a replayed batch — the silent-
-    corruption failure mode the apply guard closes) must leave the
-    persisted index unchanged: the default anti-join gate drops
-    already-indexed ids. assume_new_ids=True (the documented gated-
-    upstream fast path) skips the guard and duplicates — pinned here
-    so the contract stays honest."""
+def _lane_case(spark, lane):
+    """(save(path), fold(path), erase(spark, path, ids), tables, delta
+    ids) for one persisted lane: a base index over part of a fixture
+    and a disjoint delta to fold into it."""
+    from data_lake_project_spark.multimodal import phash_index as PH
+    from data_lake_project_spark.operators import erasure as ER
+    from data_lake_project_spark.operators import retrieval as RT
+    from data_lake_project_spark.operators import sq_index as SQ
+    from data_lake_project_spark.operators.ann_index import (
+        ann_index_apply,
+        build_ann_index,
+        save_ann_index,
+    )
     from data_lake_project_spark.operators.dedup_index import (
         build_dedup_index,
         dedup_index_apply,
         save_dedup_index,
     )
 
-    d = load_table(spark, SF_DIR, "documents")
-    part1 = d.filter("doc_id % 5 in (1, 2)")
-    part2 = d.filter("doc_id % 5 in (3, 4)")
-    path = str(tmp_path / "dedup_idx_replay")
-    save_dedup_index(build_dedup_index(part1), path)
-    once = dedup_index_apply(spark, path, part2)
-    n_bands, n_sets = once.bands.count(), once.sets.count()
-    # replay the same delta: guarded fold is a no-op
-    replayed = dedup_index_apply(spark, path, part2)
-    assert replayed.bands.count() == n_bands
-    assert replayed.sets.count() == n_sets
-    # ungated fold duplicates — the guard is what protects the artifact
-    dup = dedup_index_apply(spark, path, part2, assume_new_ids=True)
-    assert dup.bands.count() > n_bands
+    if lane in ("dedup", "bm25", "phash"):
+        d = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
+        if lane == "phash":
+            d = d.select("doc_id", F.encode("text", "UTF-8").alias("image"))
+        base = d.filter("doc_id % 5 in (1, 2)")
+        delta = d.filter("doc_id % 5 in (3, 4)")
+        ids = delta.select("doc_id")
+    else:
+        e = load_table(spark, SF_DIR, "embeddings")
+        base = e.filter("vec_id % 2 = 0")
+        delta = e.filter("vec_id % 2 = 1")
+        ids = delta.select("vec_id")
+    if lane == "dedup":
+        return (
+            lambda p: save_dedup_index(build_dedup_index(base), p),
+            lambda p: dedup_index_apply(spark, p, delta),
+            ER.erase_dedup_index,
+            ("bands", "sets"),
+            ids,
+        )
+    if lane == "bm25":
+        return (
+            lambda p: RT.save_bm25_index(RT.build_bm25_index(base), p),
+            lambda p: RT.bm25_index_apply(spark, p, delta),
+            ER.erase_bm25_index,
+            ("tfs", "dl"),
+            ids,
+        )
+    if lane == "phash":
+        return (
+            lambda p: PH.save_phash_index(PH.build_phash_index(base), p),
+            lambda p: PH.phash_index_apply(spark, p, delta),
+            PH.erase_phash_index,
+            ("codes",),
+            ids,
+        )
+    if lane.startswith("sq"):
+        buckets = 8 if lane == "sq_id_buckets" else None
+        return (
+            lambda p: SQ.save_sq_index(
+                SQ.build_sq_index(base, dim=64), p, id_buckets=buckets
+            ),
+            lambda p: SQ.sq_index_apply(spark, p, delta),
+            ER.erase_sq_index,
+            ("codes",),
+            ids,
+        )
+    # ann: an IVF model trained on the FULL corpus (the frozen-model
+    # fold contract), codes saved for the base half only
+    full = build_ann_index(e, kind="ivf", dim=64)
+    return (
+        lambda p: save_ann_index(
+            type(full)(
+                full.kind,
+                full.params,
+                full.centroids,
+                full.codebooks,
+                full.codes.join(base.select("vec_id"), "vec_id", "left_semi"),
+            ),
+            p,
+        ),
+        lambda p: ann_index_apply(spark, p, delta),
+        ER.erase_ann_index,
+        ("codes",),
+        ids,
+    )
+
+
+@pytest.mark.parametrize(
+    "lane", ["dedup", "bm25", "sq", "sq_id_buckets", "ann", "phash"]
+)
+def test_lane_apply_replayed_delta_is_noop(spark, tmp_path, lane):
+    """Every persisted lane (``operators/lane.py``): folding the SAME
+    delta twice — a replayed batch, the silent-corruption failure mode
+    the fold's guard closes — leaves every table's row multiset
+    unchanged (duplicated codes duplicate search results; duplicated
+    bands inflate every candidate set). Erase then reports the
+    DISTINCT ids it erased, whatever the request's duplicates or
+    unknown ids, and leaves none of them in any table."""
+    save, fold, erase, tables, ids = _lane_case(spark, lane)
+    path = str(tmp_path / lane)
+    id_col = ids.columns[0]
+
+    def snap():
+        return {
+            t: sorted(map(repr, spark.read.parquet(f"{path}/{t}").collect()))
+            for t in tables
+        }
+
+    save(path)
+    fold(path)
+    once = snap()
+    fold(path)
+    assert snap() == once
+    doomed = [r[0] for r in ids.orderBy(id_col).limit(5).collect()]
+    req = spark.createDataFrame(
+        [(i,) for i in doomed + doomed + [10**9]], "x long"
+    )
+    assert erase(spark, path, req) == len(doomed)
+    for t in tables:
+        left = spark.read.parquet(f"{path}/{t}")
+        assert left.filter(F.col(id_col).isin(doomed)).count() == 0, t
+
+
+def test_dedup_lane_counts_empty_text_doc_once(spark, tmp_path):
+    """An empty-text doc has a ``sets`` row but no ``bands`` rows. The
+    fold's replay guard must read the one-row-per-id ``sets`` table:
+    guarded by ``bands``, every replay re-appended the empty doc's
+    sets row, and erase then reported 2 erased for one document."""
+    from data_lake_project_spark.operators.dedup_index import (
+        build_dedup_index,
+        dedup_index_apply,
+        load_dedup_index,
+        save_dedup_index,
+    )
+    from data_lake_project_spark.operators.erasure import (
+        erase_dedup_index,
+    )
+
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
+    path = str(tmp_path / "dedup_empty")
+    save_dedup_index(build_dedup_index(docs.filter("doc_id % 5 = 1")), path)
+    empty = spark.createDataFrame([(10**9, "")], "doc_id long, text string")
+    dedup_index_apply(spark, path, empty)
+    dedup_index_apply(spark, path, empty)
+    sets = load_dedup_index(spark, path).sets
+    assert sets.filter(F.col("doc_id") == 10**9).count() == 1
+    assert erase_dedup_index(spark, path, empty.select("doc_id")) == 1
+
+
+def test_only_lane_module_builds_lane_sidecar_paths():
+    """Tooling guard: ``operators/lane.py`` is the ONE place a lane
+    sidecar path (``model.json`` / ``params.json``) is built, so
+    per-lane sidecar handling (and the two-name drift that silently
+    rebuilt the BM25 cache every run) cannot grow back. Scans every
+    library string literal, f-string pieces included, skipping
+    docstrings; HLL's ``_hll_params.json`` is its own format."""
+    import ast
+    import pathlib
+    import re
+
+    import data_lake_project_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    sidecar = re.compile(r"(?:^|/)(?:model|params)\.json$")
+    hits = []
+    for f in sorted(root.rglob("*.py")):
+        if f.relative_to(root).as_posix() == "operators/lane.py":
+            continue
+        tree = ast.parse(f.read_text())
+        docs = {
+            id(n.value)
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Expr) and isinstance(n.value, ast.Constant)
+        }
+        hits += [
+            f"{f.relative_to(root)}:{n.lineno}: {n.value!r}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Constant)
+            and isinstance(n.value, str)
+            and id(n) not in docs
+            and sidecar.search(n.value)
+        ]
+    assert not hits, "lane sidecar path built outside lane.py:\n" + "\n".join(
+        hits
+    )
 
 
 def test_dedup_against_index_precomputed_sets_identical(spark):
@@ -2889,40 +3048,6 @@ def test_ann_index_apply_incremental_equals_rebuild(spark, tmp_path):
         assert got == want
 
 
-def test_ann_index_apply_replayed_delta_is_noop(spark, tmp_path):
-    """Replaying the same delta through ann_index_apply must not
-    duplicate code rows (duplicated codes duplicate search results):
-    the default anti-join gate makes the second fold a no-op."""
-    from data_lake_project_spark.operators.ann_index import (
-        ann_index_apply,
-        build_ann_index,
-        save_ann_index,
-    )
-    from data_lake_project_spark.tables import load_table
-
-    e = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    half1 = e.filter("vec_id % 2 = 0")
-    half2 = e.filter("vec_id % 2 = 1")
-    full = build_ann_index(e, kind="ivf", dim=64)
-    path = str(tmp_path / "replay_ivf")
-    save_ann_index(
-        type(full)(
-            full.kind,
-            full.params,
-            full.centroids,
-            full.codebooks,
-            full.codes.join(half1.select("vec_id"), "vec_id", "left_semi"),
-        ),
-        path,
-    )
-    once = ann_index_apply(spark, path, half2)
-    n = once.codes.count()
-    replayed = ann_index_apply(spark, path, half2)
-    assert replayed.codes.count() == n
-    dup = ann_index_apply(spark, path, half2, assume_new_ids=True)
-    assert dup.codes.count() > n
-
-
 def test_ann_index_pq_roundtrip_nondefault_params(spark):
     """The pq build must train on the SAME bounded sample as the
     inline pq_topk regardless of the (pq-irrelevant) n_centroids
@@ -3511,8 +3636,7 @@ def test_vocab_growth_conservation(spark):
 def test_sq_index_roundtrip_and_incremental_fold(spark, tmp_path):
     """build→save→load→search ≡ inline sq_topk; O(delta) fold under
     the frozen stats ≡ a rebuild encoded with the same stats; the
-    default anti-join guard makes a replayed delta a no-op while
-    assume_new_ids=True demonstrably duplicates — the ann_index
+    fold's replay guard makes a replayed delta a no-op — the ann_index
     contract on the dense-exact lane."""
     from data_lake_project_spark.operators.similarity import sq_topk
     from data_lake_project_spark.operators.sq_index import (
@@ -3576,9 +3700,6 @@ def test_sq_index_roundtrip_and_incremental_fold(spark, tmp_path):
     n_before = load_sq_index(spark, path2).codes.count()
     sq_index_apply(spark, path2, delta)
     assert load_sq_index(spark, path2).codes.count() == n_before
-    # ungated fast path duplicates (the documented tradeoff)
-    sq_index_apply(spark, path2, delta, assume_new_ids=True)
-    assert load_sq_index(spark, path2).codes.count() > n_before
 
 
 def test_compaction_plan_surfaces_null_sizes(spark):
@@ -4617,7 +4738,7 @@ def test_gdpr_capstone_composed_pipeline(spark, tmp_path):
             "pband3",
         )
     )
-    got_kf = spark.read.parquet(f"{root}/keyframes").drop("pb")
+    got_kf = spark.read.parquet(f"{root}/keyframes").drop("__idb")
     assert rows(got_kf.select(*twin_kf.columns)) == rows(twin_kf)
     clip_pred = _GDPR_DOC_PRED.replace("doc_id", "clip_id")
     assert got_kf.filter(clip_pred).count() == 0
