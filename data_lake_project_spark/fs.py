@@ -56,6 +56,12 @@ def rename(spark: SparkSession, src: str, dst: str) -> bool:
     return bool(fs.rename(psrc, jvm.org.apache.hadoop.fs.Path(dst)))
 
 
+def glob(spark: SparkSession, pattern: str) -> list[str]:
+    """The paths (files or directories) matching a Hadoop glob."""
+    fs, p, _ = _fs(spark, pattern)
+    return [st.getPath().toString() for st in fs.globStatus(p) or []]
+
+
 def write_text(spark: SparkSession, path: str, text: str) -> None:
     """Create/overwrite a small text file (marker, manifest)."""
     fs, p, _ = _fs(spark, path)

@@ -66,12 +66,6 @@ def contains_ci(col: Column | str, needle: Column | str) -> Column:
     return F.instr(F.lower(c), F.lower(n)) > 0
 
 
-def signed_concat(sign: Column, value: Column) -> Column:
-    """Prefix-sign concat, reference ``texteExtract.py:105-106``
-    (``value = sign + value.text``)."""
-    return F.concat(F.coalesce(sign, F.lit("")), value)
-
-
 def tokens(col: Column | str, pattern: str = r"\s+") -> Column:
     """Whitespace tokenization used throughout text analysis.
 

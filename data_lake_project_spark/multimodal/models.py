@@ -33,8 +33,3 @@ def get_model(name: str, loader: Callable[[], object]) -> object:
         _MODELS[name] = loader()
     return _MODELS[name]
 
-
-def clear_models() -> None:
-    """Drop cached handles (tests; or to force a reload after a
-    broadcast-updated model version)."""
-    _MODELS.clear()

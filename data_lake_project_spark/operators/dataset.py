@@ -538,7 +538,6 @@ def ingest_pipeline(
     merges: list[tuple[str, str]],
     quality_min: float = 0.6,
     token_budget: int = 1500,
-    checkpoint: str = "eager",
 ) -> DataFrame:
     """The composed production ingest path (q141): gate ``batch``
     against the standing ``corpus``'s dedup index, quality-score and
@@ -547,23 +546,14 @@ def ingest_pipeline(
     One relational plan: band equi-join gate → narrow scoring map →
     tokenizer map + one count shuffle → per-source window.
 
-    ``checkpoint`` controls how the gate subtree — the plan's most
-    expensive part, referenced by the quality join, the tokenizer AND
-    the staging join — is cut:
-
-    - ``"eager"`` (default): ``localCheckpoint(eager=True)``. Without
-      a cut the physical plan carries 46 exchanges (the corpus-side
-      band build appears ~5x, zero ReusedExchange); the cut collapses
-      it to 8. Eager, not lazy, because three consumers meet in one
-      job and would race a lazy checkpoint's first materialization
-      (measured 4.6 s vs 3.5 s at sf0.1).
-    - ``"reliable"``: cluster ``checkpoint()`` — survives executor
-      loss; requires ``sparkContext.setCheckpointDir``. Use when
-      composing this into a larger multi-job pipeline on a real
-      cluster.
-    - ``"none"``: no cut — correct but re-evaluates the corpus index
-      per consumer; only sensible when the caller already
-      checkpointed/cached the gate upstream.
+    The gate subtree — the plan's most expensive part, referenced by
+    the quality join, the tokenizer AND the staging join — is cut
+    with ``localCheckpoint(eager=True)``. Without a cut the physical
+    plan carries 46 exchanges (the corpus-side band build appears ~5x,
+    zero ReusedExchange); the cut collapses it to 8. Eager, not lazy,
+    because three consumers meet in one job and would race a lazy
+    checkpoint's first materialization (measured 4.6 s vs 3.5 s at
+    sf0.1).
     """
     from data_lake_project_spark.operators import text as TX
     from data_lake_project_spark.operators.bpe import bpe_apply
@@ -572,16 +562,8 @@ def ingest_pipeline(
         dedup_against_index,
     )
 
-    if checkpoint not in ("eager", "reliable", "none"):
-        raise ValueError(
-            "ingest_pipeline: checkpoint must be 'eager', 'reliable' "
-            f"or 'none', got {checkpoint!r}"
-        )
     fresh = dedup_against_index(build_dedup_index(corpus), batch)
-    if checkpoint == "eager":
-        fresh = fresh.localCheckpoint(eager=True)
-    elif checkpoint == "reliable":
-        fresh = fresh.checkpoint()
+    fresh = fresh.localCheckpoint(eager=True)
     kept = (
         TX.quality_score(fresh)
         .filter(F.col("quality") >= quality_min)

@@ -375,23 +375,16 @@ def embedding_neardup(
     ~1e-12, so only a pair sitting exactly on the 4-decimal rounding
     boundary could differ — none does on the fixtures, and BOTH lanes
     are oracle-checked as q28/q28b). 'auto' (default) resolves to
-    'arrow' unless the ``SPARK_GRAFT_ORACLE_EXPR`` env flag is set —
-    the fleet-wide switch for oracle-exactness runs. The arrow path
-    requires each block to fit one executor's memory — compose with a
-    finer ``block_col`` (or IVF bucket) when it doesn't; ``n_salts``
+    'arrow'. The arrow path requires each block to fit one executor's
+    memory — compose with a finer ``block_col`` (or IVF bucket) when
+    it doesn't; ``n_salts``
     there doesn't apply (the group-by itself spreads blocks), so
     'auto' also resolves to 'expr' when ``n_salts`` is requested
     (skewed-block corpora are exactly where one block per task
     hurts).
     """
-    import os as _os
-
     if impl == "auto":
-        impl = (
-            "expr"
-            if n_salts or _os.environ.get("SPARK_GRAFT_ORACLE_EXPR")
-            else "arrow"
-        )
+        impl = "expr" if n_salts else "arrow"
     if impl == "arrow":
         return _embedding_neardup_arrow(
             emb, block_col, id_col, vec_col, threshold

@@ -13,7 +13,9 @@ propagation. Parquet is immutable, so erasure is a targeted rewrite:
   that is the difference between rewriting nprobe-sized slices and
   rewriting the whole index.
 - Unpartitioned tables (SQ codes, dedup bands/sets, BM25 dl) are
-  anti-join rewritten whole, unless saved id-bucketed (below).
+  anti-join rewritten whole, unless saved id-bucketed: then the table
+  is a ``sources.KeyedTable`` keyed on the id, and ``KeyedTable.erase``
+  reads and swaps only the buckets the erased ids hash to.
 - The HLL sketch rollup is NOT erasable in place: sketches are not
   invertible (you cannot subtract a user from a register set). The
   honest contract is :func:`rebuild_hll_keys` — recompute ONLY the
@@ -24,7 +26,8 @@ Which table of a lane has which layout is declared once, in the lane
 (``operators/lane.py``); the ``erase_*`` entry points below only name
 the lane. Every rewrite eagerly materializes the surviving rows
 (``localCheckpoint``) before overwriting, so the write never scans
-the files it replaces (the ``compact_hll_rollup`` discipline); a
+the files it replaces (the ``compact_hll_rollup`` discipline);
+``KeyedTable`` writes a tmp dir and swaps it in per bucket, and a
 cluster deployment would write a new versioned directory and swap.
 
 Semantics after erasure: serving an erased index equals serving an
@@ -69,8 +72,8 @@ def _resolve_ids(ids: DataFrame, id_col: str, ctx: str) -> DataFrame:
     single-column frame under any name; REJECT a multi-column frame
     without it — guessing a column for a deletion request risks a
     silent no-op erase, the worst failure mode this module can have.
-    The ONE resolution path for the plain and bucketed lanes (a
-    contract change here changes both)."""
+    The ONE resolution path for every lane layout (a contract change
+    here changes them all)."""
     if id_col in ids.columns:
         return ids.select(id_col)
     if len(ids.columns) == 1:
@@ -124,20 +127,13 @@ def _erase_rows(
     id_col: str,
     ids: DataFrame,
     partition_col: str | None = None,
-    prune_values: list | None = None,
 ) -> int:
     """Anti-join rewrite of one parquet table; returns rows erased.
 
     With ``partition_col``, only partitions containing erased ids are
     rewritten (dynamic overwrite); the ids frame is broadcast (an
-    erasure batch is by-contract small — a deletion request list).
-
-    ``prune_values`` (requires ``partition_col``): the partitions the
-    erased ids CAN live in, known a priori (an id-bucket layout derives
-    them from the ids themselves) — the scan is pre-filtered with a
-    static In, so even FINDING the doomed rows is compile-time
-    partition pruning instead of a full-table scan. Without it the
-    semi-join below reads every partition once to locate the ids.
+    erasure batch is by-contract small — a deletion request list);
+    the semi-join reads every partition once to locate the ids.
 
     The ids frame must carry the id as a column NAMED ``id_col``, or
     be a single-column frame (then that column is the id whatever its
@@ -157,17 +153,6 @@ def _erase_rows(
         t = _read_partitioned_verbatim(spark, table_path, partition_col)
     else:
         t = spark.read.parquet(table_path)
-    if prune_values is not None:
-        if partition_col is None:
-            raise ValueError(
-                "_erase_rows: prune_values requires partition_col"
-            )
-        # the partition column is a string now (inference off): match
-        # each prune value by its on-disk rendering — the id-bucket
-        # layouts write int buckets, whose dirs are exactly str(int)
-        t = t.filter(
-            F.col(partition_col).isin([str(v) for v in prune_values])
-        )
     ids = F.broadcast(_resolve_ids(ids, id_col, "_erase_rows").distinct())
     doomed = t.join(ids, id_col, "left_semi")
     n = doomed.count()
@@ -246,7 +231,8 @@ def erase_sq_index(spark: SparkSession, path: str, ids: DataFrame) -> int:
     """Erase vectors from a persisted sq_index. The frozen stats model
     is untouched: it is an aggregate envelope, not per-record data. An
     index saved with ``id_buckets=N`` scans and rewrites only the
-    touched bucket dirs; everything else stays byte-identical."""
+    touched buckets (``KeyedTable.erase``); everything else stays
+    byte-identical."""
     from data_lake_project_spark.operators.sq_index import _LANE
 
     return _LANE.erase(spark, path, ids)
@@ -312,114 +298,3 @@ def rebuild_hll_keys(
             f"{path.rstrip('/')}/_hll_params.json",
             json.dumps({"lg_k": stored}),
         )
-
-
-# ---------------------------------------------------------------------------
-# Opt-in id-bucket layout for erase-heavy unpartitioned tables: the
-# table is partitioned by a deterministic hash bucket of the ID, and
-# erasure — including the find-the-doomed-rows scan — prunes to the
-# buckets the erased ids can live in, derived from the ids THEMSELVES
-# (no table scan). A lane opts in per save (``Lane.save(id_buckets=)``,
-# exposed as ``save_sq_index(id_buckets=)``), and ``operators/lane.py``
-# then appends, loads and erases under the layout; a plain table
-# (q168/q200 keyframes) can use these helpers directly. Bucket params
-# persist in the table's own sidecar: a caller-supplied bucket count
-# that drifted from the written layout would prune the WRONG
-# directories — a silent no-op erase.
-# ---------------------------------------------------------------------------
-
-_IDBUCKET_SIDECAR = "_idbucket.json"
-
-
-def id_bucket_expr(id_col: str, n_buckets: int):
-    """Deterministic id -> bucket. The id is CAST TO STRING first:
-    xxhash64 is type-sensitive (hash(7 INT) != hash(7 BIGINT)), so
-    hashing the rendering makes the bucket stable across integer
-    widths between the write side and a deletion-request frame."""
-    return F.pmod(
-        F.xxhash64(F.col(id_col).cast("string")), F.lit(n_buckets)
-    ).cast("int")
-
-
-def write_id_bucketed(
-    df: DataFrame,
-    path: str,
-    id_col: str,
-    n_buckets: int = 32,
-    bucket_col: str = "__idb",
-) -> None:
-    """Write ``df`` partitioned by the id bucket (one file per bucket
-    dir — the retrieval.py lesson: shattered bucket dirs scan slower
-    than unpartitioned), plus the sidecar the erase/append paths
-    derive the layout from. Sidecar is written LAST: a reader that
-    sees it sees the data."""
-    import json
-
-    from data_lake_project_spark import fs
-
-    p = path.rstrip("/")
-    (
-        df.withColumn(bucket_col, id_bucket_expr(id_col, n_buckets))
-        .repartition(F.col(bucket_col))
-        .write.mode("overwrite")
-        .partitionBy(bucket_col)
-        .parquet(p)
-    )
-    fs.write_text(
-        df.sparkSession,
-        f"{p}/{_IDBUCKET_SIDECAR}",
-        json.dumps(
-            {
-                "id_col": id_col,
-                "n_buckets": n_buckets,
-                "bucket_col": bucket_col,
-            }
-        ),
-    )
-
-
-def id_bucket_params(spark: SparkSession, path: str) -> dict | None:
-    """The persisted bucket layout of ``path``, or None when the table
-    was written unbucketed (callers branch on this to keep plain-layout
-    lanes working unchanged)."""
-    import json
-
-    from data_lake_project_spark import fs
-
-    p = f"{path.rstrip('/')}/{_IDBUCKET_SIDECAR}"
-    if not fs.exists(spark, p):
-        return None
-    return json.loads(fs.read_text(spark, p))
-
-
-def erase_id_bucketed(
-    spark: SparkSession, path: str, ids: DataFrame, meta: dict | None = None
-) -> int:
-    """Erase ids from an id-bucketed table: the touched buckets are
-    computed from the ids frame (deletion-request-sized collect), the
-    scan prunes to those directories at compile time, and every other
-    bucket dir stays byte-identical (mtime-pinned in CI). Returns
-    distinct rows erased — on the 1-row-per-id lanes this layout
-    targets, that IS the id count (the uniform ``erase_*`` unit).
-    ``meta``: pass an already-loaded sidecar to skip the FS re-read."""
-    meta = meta or id_bucket_params(spark, path)
-    if meta is None:
-        raise ValueError(
-            f"erase_id_bucketed: {path} has no id-bucket sidecar — "
-            "for plain layouts use _erase_rows directly"
-        )
-    id_col, bcol = meta["id_col"], meta["bucket_col"]
-    ids = _resolve_ids(ids, id_col, "erase_id_bucketed")
-    touched = sorted(
-        r[0]
-        for r in ids.select(
-            id_bucket_expr(id_col, meta["n_buckets"]).alias("b")
-        )
-        .distinct()
-        .collect()
-    )
-    if not touched:
-        return 0
-    return _erase_rows(
-        spark, path, id_col, ids, bcol, prune_values=touched
-    )

@@ -23,10 +23,10 @@ SIGMOD 2021):
   (partition inference reads a bigint ``__tb`` back as int); erase
   rewrites only the partitions holding erased ids;
 - id-bucketed — opt-in per save (``id_buckets=N``, plain tables only):
-  partitioned by a hash bucket of the id, with the layout in the
-  table's own ``_idbucket.json`` (``erasure.write_id_bucketed``).
-  Appends keep the layout, erase prunes to the buckets the erased ids
-  hash to, and load drops the bucket column, so serving never sees it.
+  a parquet ``sources.KeyedTable`` keyed on the lane's id column, the
+  engine's one hash-bucket layout. Appends keep the layout, erase
+  prunes to the buckets the erased ids hash to, and load drops the
+  bucket column, so serving never sees it.
 """
 
 from __future__ import annotations
@@ -39,13 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_lake_project_spark import fs
-from data_lake_project_spark.operators.erasure import (
-    _erase_rows,
-    erase_id_bucketed,
-    id_bucket_expr,
-    id_bucket_params,
-    write_id_bucketed,
-)
+from data_lake_project_spark.operators.erasure import _erase_rows, _resolve_ids
+from data_lake_project_spark.sources import KeyedTable
 
 SIDECAR = "params.json"
 
@@ -65,9 +60,21 @@ def read_params(spark: SparkSession, path: str) -> dict:
     return json.loads(fs.read_text(spark, f"{path.rstrip('/')}/{SIDECAR}"))
 
 
-def _id_buckets(spark: SparkSession, table: Table, path: str) -> dict | None:
-    """The id-bucket layout of a plain table, or None."""
-    return None if table.partition_col else id_bucket_params(spark, path)
+def _keyed(
+    spark: SparkSession, table: Table, path: str, id_col: str
+) -> KeyedTable | None:
+    """A plain table stored id-bucketed, as its ``KeyedTable``; else
+    None."""
+    if table.partition_col is not None:
+        return None
+    kt = KeyedTable(spark, path, id_col, table_format="parquet")
+    return kt if kt.exists() else None
+
+
+def _scan(spark: SparkSession, table: Table, path: str, id_col: str):
+    """One table's rows under its layout (bucket column dropped)."""
+    kt = _keyed(spark, table, path, id_col)
+    return kt.read() if kt is not None else spark.read.parquet(path)
 
 
 def _write(df: DataFrame, c: str | None, path: str, mode: str) -> None:
@@ -99,7 +106,11 @@ class Lane:
         for t in self.tables:
             df, tp = getattr(frames, t.name), f"{p}/{t.name}"
             if id_buckets is not None and t.partition_col is None:
-                write_id_bucketed(df, tp, params["id_col"], id_buckets)
+                fs.delete(df.sparkSession, tp)
+                kt = KeyedTable(
+                    df.sparkSession, tp, params["id_col"], id_buckets, "parquet"
+                )
+                kt.append(df)
             else:
                 _write(df, t.partition_col, tp, "overwrite")
         fs.write_text(df.sparkSession, f"{p}/{SIDECAR}", json.dumps(params))
@@ -112,15 +123,11 @@ class Lane:
         p = path.rstrip("/")
         params, frames = read_params(spark, p), {}
         for t in self.tables:
-            tp = f"{p}/{t.name}"
-            df = spark.read.parquet(tp)
+            df = _scan(spark, t, f"{p}/{t.name}", params["id_col"])
             if t.load_type is not None:
                 df = df.withColumn(
                     t.partition_col, F.col(t.partition_col).cast(t.load_type)
                 )
-            meta = _id_buckets(spark, t, tp)
-            if meta is not None:
-                df = df.drop(meta["bucket_col"])
             frames[t.name] = df
         return params, frames
 
@@ -150,34 +157,35 @@ class Lane:
         p = path.rstrip("/")
         params = read_params(spark, p)
         id_col = params["id_col"]
+        last = self.tables[-1]
         stored = (
-            spark.read.parquet(f"{p}/{self.tables[-1].name}")
+            _scan(spark, last, f"{p}/{last.name}", id_col)
             .select(id_col)
             .distinct()
         )
         delta = encode(params, rows.join(stored, id_col, "left_anti"))
         for t in self.tables:
             tp, df = f"{p}/{t.name}", getattr(delta, t.name)
-            col, meta = t.partition_col, _id_buckets(spark, t, tp)
-            if meta is not None:
-                col = meta["bucket_col"]
-                df = df.withColumn(
-                    col, id_bucket_expr(meta["id_col"], meta["n_buckets"])
-                )
-            _write(df, col, tp, "append")
+            kt = _keyed(spark, t, tp, id_col)
+            if kt is not None:
+                kt.append(df)
+            else:
+                _write(df, t.partition_col, tp, "append")
 
     def erase(self, spark: SparkSession, path: str, ids: DataFrame) -> int:
-        """Erase ``ids`` from every table (``erasure._erase_rows`` under
-        its layout); returns the distinct ids erased — the rows erased
-        from the one-row-per-id table, the uniform ``erase_*`` unit."""
+        """Erase ``ids`` from every table under its layout
+        (``KeyedTable.erase`` or ``erasure._erase_rows``); returns the
+        distinct ids erased — the rows erased from the one-row-per-id
+        table, the uniform ``erase_*`` unit."""
         p = path.rstrip("/")
         id_col = read_params(spark, p)["id_col"]
+        ids = _resolve_ids(ids, id_col, "Lane.erase")
         n = 0
         for t in self.tables:
             tp = f"{p}/{t.name}"
-            meta = _id_buckets(spark, t, tp)
-            if meta is not None:
-                n = erase_id_bucketed(spark, tp, ids, meta=meta)
+            kt = _keyed(spark, t, tp, id_col)
+            if kt is not None:
+                n = kt.erase(ids)
             else:
                 n = _erase_rows(spark, tp, id_col, ids, t.partition_col)
         return n

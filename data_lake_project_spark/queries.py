@@ -4579,7 +4579,7 @@ def _published_gdpr_lanes(spark, sf) -> str:
         spark,
         sf,
         ["documents", "embeddings", "events"],
-        "gdpr11",
+        "gdpr12",
         _gdpr_build_fn(spark, sf),
     )
 
@@ -4594,7 +4594,7 @@ def q168_gdpr_erasure_report(spark, sf):
     re-probe — ``knn_index.erase_knn_index``), the pHash
     fingerprint index over the documents' rasters (a per-row
     anti-join rewrite), and the AV pair — 16-way id-bucketed scene
-    keyframes (partition-pruned rewrite) + audio feature rows
+    keyframes (bucket-scoped rewrite) + audio feature rows
     (anti-join rewrite), clip_id == doc_id so one deletion request
     covers text, image, video, and audio — then this report
     audits the post-erasure state per lane: rows remaining and erased
@@ -4672,7 +4672,7 @@ def q168_gdpr_erasure_report(spark, sf):
     # audits both (q200's lanes composed in — round-13 verdict #3)
     clip_pred = _GDPR_DOC_PRED.replace("doc_id", "clip_id")
     kfr = lane(
-        "keyframes", spark.read.parquet(f"{root}/keyframes"), clip_pred
+        "keyframes", _keyframes(spark, root).read(), clip_pred
     )
     aud = lane("audio", spark.read.parquet(f"{root}/audio"), clip_pred)
     # HLL rows are keyed by (event_type, day), not user — "visible"
@@ -6267,14 +6267,23 @@ def q199_crossmodal_survivors(spark, sf):
     ).orderBy("doc_id")
 
 
+def _keyframes(spark, root: str):
+    """The AV keyframes table under ``root``: a 16-bucket parquet
+    ``KeyedTable`` on clip_id."""
+    from data_lake_project_spark.sources import KeyedTable
+
+    return KeyedTable(
+        spark, f"{root}/keyframes", "clip_id", 16, table_format="parquet"
+    )
+
+
 def _write_av_artifacts(clips, root: str) -> None:
     """The persisted AV pair of q200/q168 under ``root``, both keyed by
-    clip_id: per-clip scene keyframes, id-bucketed 16 ways
-    (``erasure.write_id_bucketed``) so an erase scans and rewrites only
-    the buckets the request's clip ids hash to, and audio feature
-    rows (plain). ``clips``: (path = clip id as string, content)."""
+    clip_id: per-clip scene keyframes in a ``KeyedTable``
+    (:func:`_keyframes`), so an erase scans and rewrites only the
+    buckets the request's clip ids hash to, and audio feature rows
+    (plain). ``clips``: (path = clip id as string, content)."""
     from data_lake_project_spark.multimodal import av as _av
-    from data_lake_project_spark.operators.erasure import write_id_bucketed
 
     rep = _av.frame_scene_report(
         _av.sample_frames(
@@ -6292,7 +6301,7 @@ def _write_av_artifacts(clips, root: str) -> None:
         "pband2",
         "pband3",
     )
-    write_id_bucketed(keyframes, f"{root}/keyframes", "clip_id", 16)
+    _keyframes(clips.sparkSession, root).append(keyframes)
     _av.audio_features(clips).select(
         F.col("path").cast("long").alias("clip_id"),
         "duration_ms",
@@ -6302,12 +6311,9 @@ def _write_av_artifacts(clips, root: str) -> None:
 
 def _erase_av_artifacts(spark, root: str, clip_ids) -> None:
     """Erase ``clip_ids`` from both AV tables under ``root``."""
-    from data_lake_project_spark.operators.erasure import (
-        _erase_rows,
-        erase_id_bucketed,
-    )
+    from data_lake_project_spark.operators.erasure import _erase_rows
 
-    erase_id_bucketed(spark, f"{root}/keyframes", clip_ids)
+    _keyframes(spark, root).erase(clip_ids)
     _erase_rows(spark, f"{root}/audio", "clip_id", clip_ids)
 
 
@@ -6325,9 +6331,9 @@ def q200_av_erasure_report(spark, sf):
     ids; audio: duration + quantized lead mel) — so the oracle's
     rebuild-on-remaining re-derivation checks erase == never-ingested
     by VALUE, not just by count. Scale shape: the keyframe lane is
-    partitioned by a 16-way id bucket and erased with partition-
-    pruned rewrites (``prune_values`` derived from the request ids —
-    only touched buckets are rewritten); the audio lane is the plain
+    a 16-bucket ``KeyedTable`` on clip_id, erased bucket-scoped (the
+    touched buckets derive from the request ids — only they are read
+    and rewritten); the audio lane is the plain
     anti-join rewrite. Temp dirs are cleaned before returning (q194
     hygiene rule); the report rides an eager localCheckpoint."""
     import shutil as _shutil
@@ -6342,13 +6348,13 @@ def q200_av_erasure_report(spark, sf):
         ).filter(F.length("content") > 0)
         _write_av_artifacts(clips, tmp)
 
-    base_path = _published_lane(spark, sf, ["documents"], "av_art", _build)
+    base_path = _published_lane(spark, sf, ["documents"], "av_art2", _build)
     work = _tempfile.mkdtemp(prefix="spark_graft_q200_work_")
     try:
         _shutil.rmtree(work)
         _shutil.copytree(base_path, work)
         before = {
-            "keyframes": spark.read.parquet(f"{work}/keyframes").count(),
+            "keyframes": _keyframes(spark, work).read().count(),
             "audio": spark.read.parquet(f"{work}/audio").count(),
         }
         d = load_table(spark, sf, "documents")
@@ -6358,7 +6364,7 @@ def q200_av_erasure_report(spark, sf):
             .localCheckpoint(eager=True)
         )
         _erase_av_artifacts(spark, work, req)
-        kf = spark.read.parquet(f"{work}/keyframes")
+        kf = _keyframes(spark, work).read()
         au = spark.read.parquet(f"{work}/audio")
         kf_row = kf.agg(
             F.lit("keyframes").alias("lane"),

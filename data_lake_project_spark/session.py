@@ -70,16 +70,6 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def tune_for_determinism(spark: SparkSession) -> SparkSession:
-    """Session-level settings required for oracle-stable output.
-
-    Safe to call on a session we didn't create (the driver's verify
-    session): only sets runtime-mutable confs.
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark
-
-
 _EXCLUDED_RULES = (
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
 )

@@ -171,16 +171,20 @@ class KeyedTable:
 
     Layout: ``<path>/buckets/__kbucket=<i>/...`` where the bucket is
     ``pmod(xxhash64(key), n_buckets)``, plus a tiny JSON meta file
-    recording ``n_buckets`` so every writer buckets identically.
+    recording ``n_buckets`` so every writer buckets identically — the
+    engine's ONE hash-bucket layout (streaming sinks, id-bucketed lane
+    tables, the AV keyframes).
 
-    Scale contract — O(delta), not O(table): an upsert reads and
-    rewrites ONLY the buckets its update batch touches; all other
-    bucket directories are never opened (asserted by a file-mtime
-    test). A daily trickle update against a 100 TB table costs
+    Scale contract — O(delta), not O(table): an upsert or erase reads
+    and rewrites ONLY the buckets its batch touches; all other bucket
+    directories are never opened (asserted by a file-mtime test). A
+    daily trickle update against a 100 TB table costs
     ``|delta| + |touched buckets|``, and ``n_buckets`` bounds the
     worst case at full-table for a batch that spans every bucket.
     Every filesystem side-step goes through the Hadoop FileSystem API
-    so the same code works on ``hdfs://``/``s3a://`` paths.
+    so the same code works on ``hdfs://``/``s3a://`` paths. Opening
+    the table finishes a rewrite a crash cut short, so open it only
+    while no rewrite of it is running.
     """
 
     def __init__(
@@ -216,6 +220,7 @@ class KeyedTable:
         self._buckets = f"{self.path}/buckets"
         self._delta = f"{self.path}/delta"
         self._meta = f"{self.path}/_keyed_meta.json"
+        self._tmp = f"{self.path}/__upsert_tmp"
         if fs.exists(spark, self._meta):
             # the table's recorded bucketing wins over the argument —
             # mixing bucket counts would scatter a key across buckets
@@ -223,6 +228,7 @@ class KeyedTable:
             self.n_buckets = meta["n_buckets"]
             self.bucket_by = meta.get("bucket_by", self.bucket_by)
             self.bucket_dtype = meta.get("bucket_dtype")
+            self._recover()
         else:
             self.n_buckets = n_buckets
             self.bucket_dtype: str | None = None
@@ -244,6 +250,9 @@ class KeyedTable:
             "__kbucket", self._bucket_expr(F.col(self.bucket_by))
         )
 
+    def _bucket_dir(self, b) -> str:
+        return f"{self._buckets}/__kbucket={b}"
+
     def _write_meta(self) -> None:
         fs.write_text(
             self.spark,
@@ -258,6 +267,54 @@ class KeyedTable:
             ),
         )
 
+    def _touched(
+        self, keys: DataFrame, col: str
+    ) -> tuple[list[int], DataFrame | None]:
+        """The ONE touched-bucket resolver (read_for, upsert, erase):
+        the buckets ``keys[col]`` hash to — a driver list bounded by
+        ``n_buckets`` — and a scan of the live ones with ``__kbucket``
+        kept (None when none is live)."""
+        rows = keys.select(self._bucket_expr(F.col(col))).distinct().collect()
+        touched = sorted(r[0] for r in rows)
+        live = [self._bucket_dir(b) for b in touched]
+        live = [d for d in live if fs.exists(self.spark, d)]
+        if not live:
+            return touched, None
+        scan = self.spark.read.option("basePath", self._buckets)
+        return touched, scan.parquet(*live)
+
+    def _recover(self) -> None:
+        """Finish a rewrite a crash cut short: roll back each
+        ``__upsert_old_<b>`` whose live bucket is missing (it holds
+        the bucket's only rows), drop it when both copies exist, and
+        only then delete the tmp dir."""
+        for old in fs.glob(self.spark, f"{self.path}/__upsert_old_*"):
+            live = self._bucket_dir(old.rsplit("_", 1)[1])
+            if fs.exists(self.spark, live):
+                fs.delete(self.spark, old)
+            else:
+                fs.rename(self.spark, old, live)
+        fs.delete(self.spark, self._tmp)
+
+    def _rewrite(self, touched: list[int], rows: DataFrame) -> None:
+        """Replace the ``touched`` buckets by ``rows`` (which carry
+        ``__kbucket``): ONE Spark write into a tmp dir, then a
+        metadata-only swap per bucket (Hadoop FS rename) — the data
+        is written exactly once, and a crash mid-swap leaves every
+        bucket with at least one complete copy on disk, which
+        :meth:`_recover` puts back. A touched bucket left with no rows
+        is deleted."""
+        rows.write.partitionBy("__kbucket").mode("overwrite").parquet(self._tmp)
+        for b in touched:
+            live, new = self._bucket_dir(b), f"{self._tmp}/__kbucket={b}"
+            old = f"{self.path}/__upsert_old_{b}"
+            if fs.exists(self.spark, live):
+                fs.rename(self.spark, live, old)
+            if fs.exists(self.spark, new):
+                fs.rename(self.spark, new, live)
+            fs.delete(self.spark, old)
+        fs.delete(self.spark, self._tmp)
+
     def read_for(self, keys: DataFrame, keys_col: str | None = None) -> DataFrame:
         """Bucket-pruned read: only the bucket directories that could
         hold rows whose ``bucket_by`` value appears in ``keys`` are
@@ -266,29 +323,12 @@ class KeyedTable:
         table's ``bucket_by`` name. Returns the full rows of those
         buckets (callers filter further); an absent table reads empty.
         """
-        keys_col = keys_col or self.bucket_by
         if not self.exists():
             return self.read_empty()
-        touched = sorted(
-            r[0]
-            for r in keys.select(
-                self._bucket_expr(F.col(keys_col)).alias("__b")
-            )
-            .distinct()
-            .collect()
-        )
-        live = [
-            f"{self._buckets}/__kbucket={b}"
-            for b in touched
-            if fs.exists(self.spark, f"{self._buckets}/__kbucket={b}")
-        ]
-        if not live:
+        _, current = self._touched(keys, keys_col or self.bucket_by)
+        if current is None:
             return self.read_empty()
-        return (
-            self.spark.read.option("basePath", self._buckets)
-            .parquet(*live)
-            .drop("__kbucket")
-        )
+        return current.drop("__kbucket")
 
     def read_empty(self) -> DataFrame:
         """Zero-row frame with the table's schema (or no columns when
@@ -308,12 +348,14 @@ class KeyedTable:
         return self.spark.read.parquet(self._buckets).drop("__kbucket")
 
     def append(self, df: DataFrame) -> None:
+        """Append rows into their buckets, one file per bucket (shattered
+        bucket dirs scan slower, the ``retrieval.py`` measurement)."""
         if self.table_format == "delta":
             df.write.format("delta").mode("append").save(self._delta)
             return
-        self._with_bucket(df).write.mode("append").partitionBy(
-            "__kbucket"
-        ).parquet(self._buckets)
+        self._with_bucket(df).repartition("__kbucket").write.mode(
+            "append"
+        ).partitionBy("__kbucket").parquet(self._buckets)
         if not self.exists():
             self._write_meta()
 
@@ -352,42 +394,35 @@ class KeyedTable:
             )
             self._write_meta()
             return
-        # Touched buckets: bounded by n_buckets, a tiny driver list.
-        touched = sorted(
-            r[0] for r in u.select("__kbucket").distinct().collect()
-        )
-        live_dirs = [
-            f"{self._buckets}/__kbucket={b}"
-            for b in touched
-            if fs.exists(self.spark, f"{self._buckets}/__kbucket={b}")
-        ]
-        if live_dirs:
-            current = (
-                self.spark.read.option("basePath", self._buckets)
-                .parquet(*live_dirs)
-                .withColumn("__seq", F.lit(-1).cast("long"))
+        self._recover()
+        touched, current = self._touched(u, self.bucket_by)
+        if current is not None:
+            u = u.unionByName(
+                current.withColumn("__seq", F.lit(-1).cast("long"))
                 .withColumn("__prio", F.lit(1))
             )
-            merged = self._dedup(u.unionByName(current))
-        else:
-            merged = self._dedup(u)
-        merged = merged.drop("__prio", "__seq")
-        # ONE Spark write of the touched buckets into a tmp dir, then a
-        # metadata-only swap per bucket (Hadoop FS rename) — the data
-        # is written exactly once, and a crash mid-swap leaves every
-        # bucket with at least one complete copy on disk.
-        tmp = f"{self.path}/__upsert_tmp"
-        fs.delete(self.spark, tmp)
-        merged.write.mode("overwrite").partitionBy("__kbucket").parquet(tmp)
-        for b in touched:
-            live = f"{self._buckets}/__kbucket={b}"
-            old = f"{self.path}/__upsert_old_{b}"
-            fs.delete(self.spark, old)
-            if fs.exists(self.spark, live):
-                fs.rename(self.spark, live, old)
-            fs.rename(self.spark, f"{tmp}/__kbucket={b}", live)
-            fs.delete(self.spark, old)
-        fs.delete(self.spark, tmp)
+        self._rewrite(touched, self._dedup(u).drop("__prio", "__seq"))
+
+    def erase(self, ids: DataFrame) -> int:
+        """Erase every row whose ``bucket_by`` value is in ``ids`` (a
+        frame carrying that column, any castable type); returns rows
+        erased. The touched buckets come from the ids themselves, so
+        only they are read and swapped. Parquet layout only."""
+        if self.table_format == "delta":
+            raise ValueError("KeyedTable.erase: parquet layout only")
+        if not self.exists():
+            return 0
+        self._recover()
+        col = self.bucket_by
+        key = F.col(col).cast(self.bucket_dtype).alias(col)
+        ids = F.broadcast(ids.select(key).distinct())
+        touched, current = self._touched(ids, col)
+        if current is None:
+            return 0
+        n = current.join(ids, col, "left_semi").count()
+        if n:
+            self._rewrite(touched, current.join(ids, col, "left_anti"))
+        return n
 
     def compact(self, target_files_per_bucket: int = 1) -> None:
         """Maintenance: merge each bucket's small-file accretion
@@ -400,7 +435,7 @@ class KeyedTable:
         from data_lake_project_spark.lakehouse import compact as _compact
 
         for b in range(self.n_buckets):
-            bdir = f"{self._buckets}/__kbucket={b}"
+            bdir = self._bucket_dir(b)
             if fs.exists(self.spark, bdir):
                 _compact(self.spark, bdir, target_files_per_bucket)
 

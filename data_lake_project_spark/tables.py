@@ -74,13 +74,3 @@ def _nano_columns(path: str) -> dict[str, bool]:
         }
     except Exception:  # pragma: no cover - non-local paths
         return {}
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every lake table as a temp view for spark.sql use."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -137,17 +137,51 @@ def test_keyed_table_intra_batch_version_wins(spark, tmp_path):
     assert {r.k: r.v for r in t.read().collect()}["a"] == 99
 
 
-def test_keyed_table_read_for_casts_key_dtype(spark, tmp_path):
-    """xxhash64 is type-sensitive; a read_for probe whose keys frame
-    carries a different (castable) integer width than the stored
-    column must still land on the right buckets."""
-    t = KeyedTable(spark, str(tmp_path / "ktdt"), key_col="k", n_buckets=8)
-    t.upsert(
-        spark.createDataFrame([(i, i * 10) for i in range(20)], "k long, v int")
+def test_keyed_table_swap_crash_window_loses_no_rows(
+    spark, tmp_path, monkeypatch
+):
+    """A rewrite cut short between a bucket's live->old and tmp->live
+    renames (the second rename of the swap) must lose nothing:
+    reopening the table rolls the bucket back from its old copy, so
+    replaying the same upsert lands the update on the FULL table, and
+    re-running an interrupted erase removes exactly the requested keys.
+    (Clearing the tmp and old copies before restoring anything left 53
+    of 64 rows here.)"""
+    import pytest
+
+    from data_lake_project_spark import fs
+
+    path = str(tmp_path / "ktc")
+    base = spark.createDataFrame(
+        [(f"key{i}", i) for i in range(64)], "k string, v int"
     )
-    probe_int = spark.createDataFrame([(7,)], "k int")  # INT, stored is BIGINT
-    rows = t.read_for(probe_int).filter(F.col("k") == 7).collect()
-    assert [(r.k, r.v) for r in rows] == [(7, 70)]
+    KeyedTable(spark, path, key_col="k", n_buckets=8).upsert(base)
+    real_rename = fs.rename
+
+    def crash_mid_swap(fn):
+        calls = []
+
+        def rename(*a):
+            calls.append(a)
+            if len(calls) == 2:
+                raise RuntimeError("injected crash mid-swap")
+            return real_rename(*a)
+
+        monkeypatch.setattr(fs, "rename", rename)
+        with pytest.raises(RuntimeError, match="mid-swap"):
+            fn(KeyedTable(spark, path, key_col="k"))
+        monkeypatch.setattr(fs, "rename", real_rename)
+        fn(KeyedTable(spark, path, key_col="k"))
+        return {r.k: r.v for r in KeyedTable(spark, path, "k").read().collect()}
+
+    upd = spark.createDataFrame([("key7", 700)], "k string, v int")
+    out = crash_mid_swap(lambda t: t.upsert(upd))
+    assert out == {**{f"key{i}": i for i in range(64)}, "key7": 700}
+
+    doomed = ["key3", "key7", "key20", "key41"]
+    req = spark.createDataFrame([(k,) for k in doomed], "k string")
+    out = crash_mid_swap(lambda t: t.erase(req))
+    assert out == {f"key{i}": i for i in range(64) if f"key{i}" not in doomed}
 
 
 def test_keyed_table_versionless_upsert_handles_map_columns(spark, tmp_path):

@@ -1854,34 +1854,6 @@ def test_pagerank_stats_observability(spark):
     assert stats == {"iters": 2, "n_nodes": 3, "n_edges": 3}
 
 
-def test_ingest_pipeline_checkpoint_variants_agree(spark):
-    """The q141 pipeline's checkpoint policy ('eager' local checkpoint
-    vs no cut at all) must not change results — it is purely a
-    plan-shape/evaluation-count knob; also pin the invalid-value
-    error."""
-    import pytest as _pytest
-
-    from data_lake_project_spark.operators.dataset import ingest_pipeline
-    from data_lake_project_spark.queries import _Q140_MERGES
-
-    d = load_table(spark, "/root/testdata/sf0.001", "documents")
-    corpus = d.filter("doc_id % 5 != 0")
-    batch = d.filter("doc_id % 5 = 0")
-
-    def rows(ckpt):
-        return sorted(
-            tuple(r)
-            for r in ingest_pipeline(
-                corpus, batch, _Q140_MERGES, checkpoint=ckpt
-            ).collect()
-        )
-
-    eager = rows("eager")
-    assert eager == rows("none") and len(eager) > 0
-    with _pytest.raises(ValueError, match="checkpoint must be"):
-        ingest_pipeline(corpus, batch, _Q140_MERGES, checkpoint="bogus")
-
-
 def test_infer_json_schema_type_lattice(spark):
     from data_lake_project_spark.operators.sketches import infer_json_schema
 
@@ -2354,13 +2326,10 @@ def test_dedup_lane_counts_empty_text_doc_once(spark, tmp_path):
     assert erase_dedup_index(spark, path, empty.select("doc_id")) == 1
 
 
-def test_only_lane_module_builds_lane_sidecar_paths():
-    """Tooling guard: ``operators/lane.py`` is the ONE place a lane
-    sidecar path (``model.json`` / ``params.json``) is built, so
-    per-lane sidecar handling (and the two-name drift that silently
-    rebuilt the BM25 cache every run) cannot grow back. Scans every
-    library string literal, f-string pieces included, skipping
-    docstrings; HLL's ``_hll_params.json`` is its own format."""
+def _library_literals_outside(owner: str, pattern: str) -> list[str]:
+    """Every library string literal (f-string pieces included,
+    docstrings skipped) matching ``pattern`` outside the ``owner``
+    module, as ``path:line: literal``."""
     import ast
     import pathlib
     import re
@@ -2368,10 +2337,10 @@ def test_only_lane_module_builds_lane_sidecar_paths():
     import data_lake_project_spark as pkg
 
     root = pathlib.Path(pkg.__file__).parent
-    sidecar = re.compile(r"(?:^|/)(?:model|params)\.json$")
+    rx = re.compile(pattern)
     hits = []
     for f in sorted(root.rglob("*.py")):
-        if f.relative_to(root).as_posix() == "operators/lane.py":
+        if f.relative_to(root).as_posix() == owner:
             continue
         tree = ast.parse(f.read_text())
         docs = {
@@ -2385,9 +2354,35 @@ def test_only_lane_module_builds_lane_sidecar_paths():
             if isinstance(n, ast.Constant)
             and isinstance(n.value, str)
             and id(n) not in docs
-            and sidecar.search(n.value)
+            and rx.search(n.value)
         ]
+    return hits
+
+
+def test_only_lane_module_builds_lane_sidecar_paths():
+    """Tooling guard: ``operators/lane.py`` is the ONE place a lane
+    sidecar path (``model.json`` / ``params.json``) is built, so
+    per-lane sidecar handling (and the two-name drift that silently
+    rebuilt the BM25 cache every run) cannot grow back. HLL's
+    ``_hll_params.json`` is its own format."""
+    hits = _library_literals_outside(
+        "operators/lane.py", r"(?:^|/)(?:model|params)\.json$"
+    )
     assert not hits, "lane sidecar path built outside lane.py:\n" + "\n".join(
+        hits
+    )
+
+
+def test_only_keyed_table_builds_hash_bucket_paths():
+    """Tooling guard: ``sources.KeyedTable`` is the ONE hash-bucket
+    table layout (its ``_keyed_meta.json`` sidecar and ``__kbucket``
+    dirs), so a second bucket layout — like erasure's former
+    ``_idbucket.json`` / ``__idb`` twin — cannot grow back."""
+    hits = _library_literals_outside(
+        "sources/__init__.py",
+        r"_keyed_meta\.json|_idbucket\.json|__kbucket|__idb",
+    )
+    assert not hits, "bucket layout literal outside KeyedTable:\n" + "\n".join(
         hits
     )
 
@@ -4426,11 +4421,7 @@ def test_sq_index_id_bucketed_erase_prunes_to_touched_dirs(
     the ANN-lane standard) — while erase == never-ingested still holds."""
     import os
 
-    from data_lake_project_spark.operators.erasure import (
-        erase_sq_index,
-        id_bucket_expr,
-        id_bucket_params,
-    )
+    from data_lake_project_spark.operators.erasure import erase_sq_index
     from data_lake_project_spark.operators.similarity import sq_encode
     from data_lake_project_spark.operators.sq_index import (
         SqIndex,
@@ -4440,6 +4431,7 @@ def test_sq_index_id_bucketed_erase_prunes_to_touched_dirs(
         search_sq_index,
         sq_index_apply,
     )
+    from data_lake_project_spark.sources import KeyedTable
 
     e = load_table(spark, SF_DIR, "embeddings")
     head = e.filter(F.col("vec_id") < 400)
@@ -4453,8 +4445,9 @@ def test_sq_index_id_bucketed_erase_prunes_to_touched_dirs(
     path = str(tmp_path / "sqb")
     idx = build_sq_index(head, dim=64)
     save_sq_index(idx, path, id_buckets=8)
-    codes_dir = f"{path}/codes"
-    assert id_bucket_params(spark, codes_dir)["n_buckets"] == 8
+    codes = KeyedTable(spark, f"{path}/codes", "vec_id")
+    assert codes.exists() and codes.n_buckets == 8
+    codes_dir = f"{path}/codes/buckets"
 
     # serving: identical to the unbucketed twin (bucket col dropped)
     plain_path = str(tmp_path / "sqp")
@@ -4480,14 +4473,14 @@ def test_sq_index_id_bucketed_erase_prunes_to_touched_dirs(
     )
     touched = {
         r[0]
-        for r in erased.select(id_bucket_expr("vec_id", 8).alias("b"))
+        for r in erased.select(codes._bucket_expr(F.col("vec_id")))
         .distinct()
         .collect()
     }
     assert 0 < len(touched) < 8  # the pin is vacuous if all touched
     untouched_files = {}
     for d in os.listdir(codes_dir):
-        if d.startswith("__idb=") and int(d.split("=")[1]) not in touched:
+        if d.startswith("__kbucket=") and int(d.split("=")[1]) not in touched:
             full = os.path.join(codes_dir, d)
             untouched_files[d] = {
                 f: os.stat(os.path.join(full, f)).st_mtime_ns
@@ -4551,6 +4544,7 @@ def test_gdpr_capstone_composed_pipeline(spark, tmp_path):
         _GDPR_VEC_PRED,
         _published_gdpr_lanes,
     )
+    from data_lake_project_spark.sources import KeyedTable
 
     sf = "/root/testdata/sf0.001"
     root = _published_gdpr_lanes(spark, sf)
@@ -4738,7 +4732,7 @@ def test_gdpr_capstone_composed_pipeline(spark, tmp_path):
             "pband3",
         )
     )
-    got_kf = spark.read.parquet(f"{root}/keyframes").drop("__idb")
+    got_kf = KeyedTable(spark, f"{root}/keyframes", "clip_id").read()
     assert rows(got_kf.select(*twin_kf.columns)) == rows(twin_kf)
     clip_pred = _GDPR_DOC_PRED.replace("doc_id", "clip_id")
     assert got_kf.filter(clip_pred).count() == 0

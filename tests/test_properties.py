@@ -10,7 +10,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from data_lake_project_spark.operators.grid import _nms, reconstruct_page
@@ -1427,36 +1427,59 @@ def test_ranking_quality_report_matches_python_reference(
             assert 0.0 <= row.ndcg <= 1.0
 
 
-@given(ids=st.lists(st.integers(0, 10**9), min_size=1, max_size=30))
-@settings(max_examples=8, deadline=None)
-def test_id_bucket_expr_stable_across_integer_widths(spark, ids):
-    """The erase layout's bucket derivation must agree between the
-    write side and a deletion-request frame regardless of integer
-    width (xxhash64 is type-sensitive; the string cast is the
-    stability contract) — a width-dependent bucket would prune the
-    wrong dirs: a silent no-op erase."""
-    from data_lake_project_spark.operators.erasure import id_bucket_expr
-
-    rows = [(i,) for i in set(ids)]
-    as_long = spark.createDataFrame(rows, "id long")
-    as_int = spark.createDataFrame(
-        [(i,) for i in set(ids) if i < 2**31], "id int"
+@given(
+    ids=st.lists(
+        st.integers(0, 2**31 - 1), min_size=8, max_size=30, unique=True
     )
-    bl = {
-        r.id: r.b
-        for r in as_long.select(
-            "id", id_bucket_expr("id", 8).alias("b")
-        ).collect()
-    }
-    bi = {
-        r.id: r.b
-        for r in as_int.select(
-            "id", id_bucket_expr("id", 8).alias("b")
-        ).collect()
-    }
-    for i, b in bi.items():
-        assert bl[i] == b
-    assert all(0 <= b < 8 for b in bl.values())
+)
+@example(ids=[7, *range(7), *range(8, 20)])  # int probe 7 of 20 bigints
+@settings(max_examples=1, deadline=None)
+def test_keyed_table_bucket_rule_stable_across_key_dtypes(spark, ids):
+    """The one hash-bucket rule (``KeyedTable``: xxhash64 of the key
+    cast to the table's pinned dtype) must agree between the write
+    side and a request frame of ANY castable key type: ``int``,
+    ``long`` and ``string`` probes reach the stored (bigint) rows
+    through both ``read_for`` and ``erase`` — a dtype-dependent bucket
+    would read the wrong dirs (a missed row) or make the erase a
+    silent no-op. An erase that empties a bucket deletes its dir:
+    erased rows left on disk there are the worst failure an erase can
+    have."""
+    import os
+    import shutil
+    import tempfile
+
+    from hypothesis import assume
+
+    from data_lake_project_spark.sources import KeyedTable
+
+    root = tempfile.mkdtemp(prefix="kt_rule_")
+    try:
+        t = KeyedTable(spark, root, key_col="k", n_buckets=8)
+        t.upsert(
+            spark.createDataFrame([(i, i * 10) for i in ids], "k long, v long")
+        )
+        probes = dict(zip(("int", "bigint", "string"), ids))
+        for dtype, i in probes.items():
+            req = spark.createDataFrame([(i,)], "k long").select(
+                F.col("k").cast(dtype).alias("k")
+            )
+            got = t.read_for(req).filter(F.col("k") == i).collect()
+            assert [(r.k, r.v) for r in got] == [(i, i * 10)], dtype
+            assert t.erase(req) == 1, dtype
+        left = set(ids) - set(probes.values())
+        assert {r.k for r in t.read().collect()} == left
+
+        bdir = os.path.join(root, "buckets")
+        dirs = sorted(d for d in os.listdir(bdir) if d.startswith("__kbucket="))
+        assume(len(dirs) >= 2)
+        victim = os.path.join(bdir, dirs[0])
+        doomed = {r.k for r in spark.read.parquet(victim).collect()}
+        req = spark.createDataFrame([(k,) for k in doomed], "k long")
+        assert t.erase(req) == len(doomed)
+        assert not os.path.exists(victim)
+        assert {r.k for r in t.read().collect()} == left - doomed
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
