@@ -137,6 +137,19 @@ def test_keyed_table_intra_batch_version_wins(spark, tmp_path):
     assert {r.k: r.v for r in t.read().collect()}["a"] == 99
 
 
+def test_keyed_table_read_for_casts_key_dtype(spark, tmp_path):
+    """xxhash64 is type-sensitive; a read_for probe whose keys frame
+    carries a different (castable) integer width than the stored
+    column must still land on the right buckets."""
+    t = KeyedTable(spark, str(tmp_path / "ktdt"), key_col="k", n_buckets=8)
+    t.upsert(
+        spark.createDataFrame([(i, i * 10) for i in range(20)], "k long, v int")
+    )
+    probe_int = spark.createDataFrame([(7,)], "k int")  # INT, stored is BIGINT
+    rows = t.read_for(probe_int).filter(F.col("k") == 7).collect()
+    assert [(r.k, r.v) for r in rows] == [(7, 70)]
+
+
 def test_keyed_table_swap_crash_window_loses_no_rows(
     spark, tmp_path, monkeypatch
 ):

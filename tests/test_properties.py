@@ -1427,6 +1427,43 @@ def test_ranking_quality_report_matches_python_reference(
             assert 0.0 <= row.ndcg <= 1.0
 
 
+@given(ids=st.lists(st.integers(0, 10**9), min_size=1, max_size=30))
+@settings(max_examples=8, deadline=None)
+def test_id_bucket_expr_stable_across_integer_widths(spark, ids):
+    """The id-bucket expression (``KeyedTable._bucket_expr``) must
+    agree between the write side and a deletion-request frame
+    regardless of integer width (xxhash64 is type-sensitive; the cast
+    to the table's pinned key dtype is the stability contract) — a
+    width-dependent bucket would prune the wrong dirs: a silent no-op
+    erase."""
+    import shutil
+    import tempfile
+
+    from data_lake_project_spark.sources import KeyedTable
+
+    root = tempfile.mkdtemp(prefix="kt_width_")
+    try:
+        t = KeyedTable(spark, root, key_col="id", n_buckets=8)
+        rows = [(i,) for i in set(ids)]
+        as_long = t._with_bucket(spark.createDataFrame(rows, "id long"))
+        assert t.bucket_dtype == "bigint"  # the write side pins the dtype
+        as_int = spark.createDataFrame(
+            [(i,) for i in set(ids) if i < 2**31], "id int"
+        )
+        bl = {r.id: r["__kbucket"] for r in as_long.collect()}
+        bi = {
+            r.id: r.b
+            for r in as_int.select(
+                "id", t._bucket_expr(F.col("id")).alias("b")
+            ).collect()
+        }
+        for i, b in bi.items():
+            assert bl[i] == b
+        assert all(0 <= b < 8 for b in bl.values())
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 @given(
     ids=st.lists(
         st.integers(0, 2**31 - 1), min_size=8, max_size=30, unique=True
