@@ -37,7 +37,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_lake_project_spark.operators.dedup import (
+    band_join,
     band_keys,
+    jaccard_verify_sets,
     minhash_sets,
     shingle_sets,
 )
@@ -84,8 +86,8 @@ def build_dedup_index(
             "text_col": text_col,
             "id_col": id_col,
         },
-        bands.select(id_col, "band", "bandsig"),
-        sets.select(id_col, "sh"),
+        bands,
+        sets,
     )
 
 
@@ -168,41 +170,16 @@ def dedup_against_index(
     id_col = p["id_col"]
     if b_sets is None:
         b_sets = shingle_sets(batch, p["text_col"], id_col, p["k"])
-    bkeys = None
+    bkeys = band_keys(
+        minhash_sets(b_sets, id_col, p["num_hashes"]), id_col, p["band_size"]
+    )
     if self_dedup:
-        bsig = minhash_sets(b_sets, id_col, p["num_hashes"])
-        bkeys = band_keys(bsig, id_col, p["band_size"])
-        ba = bkeys.select(
-            F.col(id_col).alias("__ia"), "band", "bandsig"
+        scand = band_join(bkeys, bkeys, id_col).filter(
+            F.col("id_a") < F.col("id_b")
         )
-        bb2 = bkeys.select(
-            F.col(id_col).alias("__ib"), "band", "bandsig"
-        )
-        scand = (
-            ba.join(bb2, ["band", "bandsig"])
-            .filter(F.col("__ia") < F.col("__ib"))
-            .select("__ia", "__ib")
-            .distinct()
-        )
-        sa = b_sets.select(
-            F.col(id_col).alias("__ia"), F.col("sh").alias("__sa")
-        )
-        sb = b_sets.select(
-            F.col(id_col).alias("__ib"), F.col("sh").alias("__sb")
-        )
-        sinter = F.size(F.array_intersect("__sa", "__sb"))
         doomed = (
-            scand.join(sa, "__ia")
-            .join(sb, "__ib")
-            .withColumn(
-                "__j",
-                sinter
-                / (F.size("__sa") + F.size("__sb") - sinter).cast(
-                    "double"
-                ),
-            )
-            .filter(F.col("__j") >= threshold)
-            .select(F.col("__ib").alias(id_col))
+            jaccard_verify_sets(scand, b_sets, b_sets, id_col, threshold)
+            .select(F.col("id_b").alias(id_col))
             .distinct()
         )
         batch = batch.join(doomed, id_col, "left_anti")
@@ -211,36 +188,10 @@ def dedup_against_index(
         # the index gate reuses it minus the doomed rows instead of
         # re-deriving minhash+bands over the reduced b_sets
         bkeys = bkeys.join(doomed, id_col, "left_anti")
-    if bkeys is None:
-        bkeys = band_keys(
-            minhash_sets(b_sets, id_col, p["num_hashes"]),
-            id_col,
-            p["band_size"],
-        )
-    bb = bkeys.select(F.col(id_col).alias("__bid"), "band", "bandsig")
-    cb = index.bands.select(
-        F.col(id_col).alias("__cid"), "band", "bandsig"
-    )
-    cand = (
-        bb.join(cb, ["band", "bandsig"]).select("__bid", "__cid").distinct()
-    )
-    x = b_sets.select(
-        F.col(id_col).alias("__bid"), F.col("sh").alias("__bsh")
-    )
-    y = index.sets.select(
-        F.col(id_col).alias("__cid"), F.col("sh").alias("__csh")
-    )
-    inter = F.size(F.array_intersect("__bsh", "__csh"))
+    cand = band_join(bkeys, index.bands, id_col)
     dup = (
-        cand.join(x, "__bid")
-        .join(y, "__cid")
-        .withColumn(
-            "__j",
-            inter
-            / (F.size("__bsh") + F.size("__csh") - inter).cast("double"),
-        )
-        .filter(F.col("__j") >= threshold)
-        .select(F.col("__bid").alias(id_col))
+        jaccard_verify_sets(cand, b_sets, index.sets, id_col, threshold)
+        .select(F.col("id_a").alias(id_col))
         .distinct()
     )
     return batch.join(dup, id_col, "left_anti")

@@ -22,9 +22,10 @@ SIGMOD 2021):
   scale); ``load_type`` casts the key back to its build-side type
   (partition inference reads a bigint ``__tb`` back as int); erase
   rewrites only the partitions holding erased ids;
-- id-bucketed — opt-in per save (``id_buckets=N``, plain tables only):
-  a parquet ``sources.KeyedTable`` keyed on the lane's id column, the
-  engine's one hash-bucket layout. Appends keep the layout, erase
+- id-bucketed — opt-in per save (``id_buckets=N``, plain tables only,
+  recorded in the sidecar so no access path probes for it): a parquet
+  ``sources.KeyedTable`` keyed on the lane's id column, the engine's
+  one hash-bucket layout. Appends keep the layout, erase
   prunes to the buckets the erased ids hash to, and load drops the
   bucket column, so serving never sees it.
 """
@@ -54,26 +55,35 @@ class Table:
     load_type: str | None = None
 
 
+def _layout(spark: SparkSession, path: str) -> tuple[dict, bool]:
+    """(params, whether the plain tables are id-bucketed) from the
+    sidecar: the layout is recorded at save, never probed for, and
+    dropped from the params adapters splat into their builders."""
+    params = json.loads(fs.read_text(spark, f"{path.rstrip('/')}/{SIDECAR}"))
+    return params, params.pop("id_buckets", None) is not None
+
+
 def read_params(spark: SparkSession, path: str) -> dict:
-    """The lane's sidecar (every lane keeps its id column in
+    """The lane's sidecar params (every lane keeps its id column in
     ``id_col``)."""
-    return json.loads(fs.read_text(spark, f"{path.rstrip('/')}/{SIDECAR}"))
+    return _layout(spark, path)[0]
 
 
 def _keyed(
-    spark: SparkSession, table: Table, path: str, id_col: str
+    spark: SparkSession, table: Table, path: str, id_col: str, bucketed: bool
 ) -> KeyedTable | None:
-    """A plain table stored id-bucketed, as its ``KeyedTable``; else
-    None."""
-    if table.partition_col is not None:
+    """A plain table of an id-bucketed lane, as its ``KeyedTable``;
+    else None."""
+    if not bucketed or table.partition_col is not None:
         return None
-    kt = KeyedTable(spark, path, id_col, table_format="parquet")
-    return kt if kt.exists() else None
+    return KeyedTable(spark, path, id_col, table_format="parquet")
 
 
-def _scan(spark: SparkSession, table: Table, path: str, id_col: str):
+def _scan(
+    spark: SparkSession, table: Table, path: str, id_col: str, bucketed: bool
+):
     """One table's rows under its layout (bucket column dropped)."""
-    kt = _keyed(spark, table, path, id_col)
+    kt = _keyed(spark, table, path, id_col, bucketed)
     return kt.read() if kt is not None else spark.read.parquet(path)
 
 
@@ -101,7 +111,7 @@ class Lane:
         """Write every table (overwrite) by its layout, then the
         sidecar. ``frames`` carries one DataFrame attribute per table
         name (the adapter's index dataclass); ``id_buckets``
-        id-buckets every plain table."""
+        id-buckets every plain table (recorded in the sidecar)."""
         p = path.rstrip("/")
         for t in self.tables:
             df, tp = getattr(frames, t.name), f"{p}/{t.name}"
@@ -113,7 +123,8 @@ class Lane:
                 kt.append(df)
             else:
                 _write(df, t.partition_col, tp, "overwrite")
-        fs.write_text(df.sparkSession, f"{p}/{SIDECAR}", json.dumps(params))
+        sidecar = dict(params, id_buckets=id_buckets)
+        fs.write_text(df.sparkSession, f"{p}/{SIDECAR}", json.dumps(sidecar))
 
     def load(
         self, spark: SparkSession, path: str
@@ -121,9 +132,9 @@ class Lane:
         """(sidecar, {table name: parquet scan}) — scans, so partition
         pruning and pushdown apply as with any table."""
         p = path.rstrip("/")
-        params, frames = read_params(spark, p), {}
+        (params, bucketed), frames = _layout(spark, p), {}
         for t in self.tables:
-            df = _scan(spark, t, f"{p}/{t.name}", params["id_col"])
+            df = _scan(spark, t, f"{p}/{t.name}", params["id_col"], bucketed)
             if t.load_type is not None:
                 df = df.withColumn(
                     t.partition_col, F.col(t.partition_col).cast(t.load_type)
@@ -155,18 +166,18 @@ class Lane:
         (no extra Spark job); the standing tables' content is never
         re-read."""
         p = path.rstrip("/")
-        params = read_params(spark, p)
+        params, bucketed = _layout(spark, p)
         id_col = params["id_col"]
         last = self.tables[-1]
         stored = (
-            _scan(spark, last, f"{p}/{last.name}", id_col)
+            _scan(spark, last, f"{p}/{last.name}", id_col, bucketed)
             .select(id_col)
             .distinct()
         )
         delta = encode(params, rows.join(stored, id_col, "left_anti"))
         for t in self.tables:
             tp, df = f"{p}/{t.name}", getattr(delta, t.name)
-            kt = _keyed(spark, t, tp, id_col)
+            kt = _keyed(spark, t, tp, id_col, bucketed)
             if kt is not None:
                 kt.append(df)
             else:
@@ -178,12 +189,13 @@ class Lane:
         distinct ids erased — the rows erased from the one-row-per-id
         table, the uniform ``erase_*`` unit."""
         p = path.rstrip("/")
-        id_col = read_params(spark, p)["id_col"]
+        params, bucketed = _layout(spark, p)
+        id_col = params["id_col"]
         ids = _resolve_ids(ids, id_col, "Lane.erase")
         n = 0
         for t in self.tables:
             tp = f"{p}/{t.name}"
-            kt = _keyed(spark, t, tp, id_col)
+            kt = _keyed(spark, t, tp, id_col, bucketed)
             if kt is not None:
                 n = kt.erase(ids)
             else:

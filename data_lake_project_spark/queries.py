@@ -432,12 +432,7 @@ def q25_minhash_candidates(spark, sf):
 def q26_jaccard_neardup(spark, sf):
     """MinHash candidates verified by exact shingle Jaccard >= 0.5."""
     d = load_table(spark, sf, "documents")
-    sets = D.shingle_sets(d, k=3).localCheckpoint(eager=True)
-    sig = D.minhash_sets(sets, num_hashes=8)
-    cand = D.minhash_candidates_sets(sig, band_size=2)
-    return D.jaccard_verify_sets(cand, sets, threshold=0.5).orderBy(
-        "id_a", "id_b"
-    )
+    return D.minhash_neardup_pairs(d).orderBy("id_a", "id_b")
 
 
 def q27_simhash(spark, sf):
@@ -1550,13 +1545,7 @@ def q51_dedup_clusters(spark, sf):
     dedup ladder. Oracle: DuckDB recursive-CTE transitive closure
     over the identical verified pair set."""
     d = load_table(spark, sf, "documents")
-    # sets feeds the signature subtree AND both verify legs — cut
-    # once or the shingle explode re-runs per reference (r14: q135
-    # 2.87->2.01 s, q198 8.79->7.52 s interleaved medians)
-    sets = D.shingle_sets(d, k=3).localCheckpoint(eager=True)
-    sig = D.minhash_sets(sets, num_hashes=8)
-    cand = D.minhash_candidates_sets(sig, band_size=2)
-    pairs = D.jaccard_verify_sets(cand, sets, threshold=0.5)
+    pairs = D.minhash_neardup_pairs(d)
     return (
         D.connected_components(pairs)
         .select(F.col("id").alias("doc_id"), "cluster_id", "cluster_size")
@@ -1571,13 +1560,7 @@ def q86_dedup_corpus(spark, sf):
     The complete near-dup ladder (shingle → minhash → LSH → verify →
     cluster → materialize) as one oracle-checked plan."""
     d = load_table(spark, sf, "documents")
-    # sets feeds the signature subtree AND both verify legs — cut
-    # once or the shingle explode re-runs per reference (r14: q135
-    # 2.87->2.01 s, q198 8.79->7.52 s interleaved medians)
-    sets = D.shingle_sets(d, k=3).localCheckpoint(eager=True)
-    sig = D.minhash_sets(sets, num_hashes=8)
-    cand = D.minhash_candidates_sets(sig, band_size=2)
-    pairs = D.jaccard_verify_sets(cand, sets, threshold=0.5)
+    pairs = D.minhash_neardup_pairs(d)
     return (
         D.keep_cluster_representatives(
             d.select("doc_id", "n_chars"),
@@ -3529,13 +3512,7 @@ def q131_cluster_safe_split(spark, sf):
     from data_lake_project_spark.operators.dataset import split_column
 
     d = load_table(spark, sf, "documents")
-    # sets feeds the signature subtree AND both verify legs — cut
-    # once or the shingle explode re-runs per reference (r14: q135
-    # 2.87->2.01 s, q198 8.79->7.52 s interleaved medians)
-    sets = D.shingle_sets(d, k=3).localCheckpoint(eager=True)
-    sig = D.minhash_sets(sets, num_hashes=8)
-    cand = D.minhash_candidates_sets(sig, band_size=2)
-    pairs = D.jaccard_verify_sets(cand, sets, threshold=0.5)
+    pairs = D.minhash_neardup_pairs(d)
     comp = D.connected_components(pairs).select(
         F.col("id").alias("doc_id"), "cluster_id"
     )
@@ -3608,13 +3585,7 @@ def q135_dup_source_mix(spark, sf):
     which dedup key the curation ladder needs). Two broadcast-sized
     joins of the pair list against the doc->source map."""
     d = load_table(spark, sf, "documents")
-    # sets feeds the signature subtree AND both verify legs — cut
-    # once or the shingle explode re-runs per reference (r14: q135
-    # 2.87->2.01 s, q198 8.79->7.52 s interleaved medians)
-    sets = D.shingle_sets(d, k=3).localCheckpoint(eager=True)
-    sig = D.minhash_sets(sets, num_hashes=8)
-    cand = D.minhash_candidates_sets(sig, band_size=2)
-    pairs = D.jaccard_verify_sets(cand, sets, threshold=0.5)
+    pairs = D.minhash_neardup_pairs(d)
     src = d.select("doc_id", "source")
     sa = src.select(
         F.col("doc_id").alias("id_a"), F.col("source").alias("src_a")
@@ -4579,7 +4550,7 @@ def _published_gdpr_lanes(spark, sf) -> str:
         spark,
         sf,
         ["documents", "embeddings", "events"],
-        "gdpr12",
+        "gdpr13",
         _gdpr_build_fn(spark, sf),
     )
 
@@ -6224,13 +6195,7 @@ def _crossmodal_pop_and_edges(spark, sf):
     pairs_img = phash_neardup(fp, id_col="doc_id", max_hamming=3).select(
         "id_a", "id_b"
     )
-    # cut: sets feeds sig AND both verify legs (r14 rule above)
-    sets = D.shingle_sets(pop, k=3).localCheckpoint(eager=True)
-    sig = D.minhash_sets(sets, num_hashes=8)
-    cand = D.minhash_candidates_sets(sig, band_size=2)
-    pairs_txt = D.jaccard_verify_sets(cand, sets, threshold=0.5).select(
-        "id_a", "id_b"
-    )
+    pairs_txt = D.minhash_neardup_pairs(pop).select("id_a", "id_b")
     edges = pairs_img.unionByName(pairs_txt).distinct()
     return pop, edges
 

@@ -230,6 +230,28 @@ def write_stream_upsert(stream: DataFrame, table, checkpoint_dir: str):
     )
 
 
+def _apply_once(spark, marker: str, apply) -> None:
+    """The replay-marker protocol of the stateful sinks
+    (:func:`write_stream_scd2`, :func:`write_stream_ivm`), whose fold
+    reads its own prior output and so cannot be re-run: a
+    ``committed`` marker skips the batch, a ``pending`` one raises for
+    operator repair, and otherwise the marker goes ``pending`` ->
+    ``apply()`` -> ``committed``."""
+    if fs.exists(spark, marker):
+        if fs.read_text(spark, marker).strip() == "committed":
+            return  # same batch content already folded
+        raise RuntimeError(
+            f"stream sink: marker {marker} is 'pending' — a prior "
+            "attempt on this batch started and did not commit, so its "
+            "fold may be fully, partially, or not at all applied. "
+            "Verify the rows the batch touches against it (or rebuild "
+            "them), then delete the marker to resume."
+        )
+    fs.write_text(spark, marker, "pending")
+    apply()
+    fs.write_text(spark, marker, "committed")
+
+
 def write_stream_scd2(
     stream: DataFrame,
     table,
@@ -282,8 +304,8 @@ def write_stream_scd2(
     transaction log closes the window atomically on a real
     deployment. Markers accumulate one tiny file per batch — prune
     anything older than the source's replay horizon with
-    :func:`scd2_marker_gc` (a replay can only re-deliver what the
-    source retains)."""
+    :func:`marker_gc` on the ``_scd2_committed`` dir (a replay can
+    only re-deliver what the source retains)."""
     from data_lake_project_spark.lakehouse import scd2_apply
 
     commits_dir = f"{table.path}/_scd2_committed"
@@ -308,54 +330,24 @@ def write_stream_scd2(
             f"{commits_dir}/"
             f"{fp_row['n']}_{fp_row['lo']}_{fp_row['hi']}_{fp_row['h']}"
         )
-        if fs.exists(spark, marker):
-            if fs.read_text(spark, marker).strip() == "committed":
-                return  # same batch content already folded
-            raise RuntimeError(
-                f"scd2 sink: marker {marker} is 'pending' — a prior "
-                "attempt on this batch started and did not commit, so "
-                "the merge may be fully, partially, or not at all "
-                "applied. Verify the touched entities' histories "
-                "against the batch (or rebuild them), then delete the "
-                "marker to resume."
-            )
-        fs.write_text(spark, marker, "pending")
-        scd2_apply(
-            table,
-            batch_df,
-            entity_col=entity_col,
-            attr_col=attr_col,
-            ts_col=ts_col,
-            seq_col=seq_col,
+        _apply_once(
+            spark,
+            marker,
+            lambda: scd2_apply(
+                table,
+                batch_df,
+                entity_col=entity_col,
+                attr_col=attr_col,
+                ts_col=ts_col,
+                seq_col=seq_col,
+            ),
         )
-        fs.write_text(spark, marker, "committed")
 
     return (
         stream.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
         .start()
-    )
-
-
-def scd2_marker_gc(
-    spark, table_path: str, max_age_s: float, now_ms: int | None = None
-) -> int:
-    """Prune committed replay markers older than ``max_age_s`` seconds.
-
-    Markers accumulate one tiny file per micro-batch; a replay can
-    only re-deliver what the source still retains, so markers older
-    than the source's replay horizon (Kafka ``retention.ms``, file
-    landing-zone TTL, ...) are dead weight. ``pending`` markers are
-    NEVER pruned regardless of age — they flag an unrepaired crash
-    window. Returns the number of markers deleted. Run it from the
-    same maintenance cadence as ``compact``.
-    """
-    return marker_gc(
-        spark,
-        f"{table_path.rstrip('/')}/_scd2_committed",
-        max_age_s,
-        now_ms=now_ms,
     )
 
 
@@ -438,25 +430,7 @@ def write_stream_ivm(
         f"`{c}`" for c in [op_col, key_col, *sum_cols.keys()]
     )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        fp_row = batch_df.agg(
-            F.count("*").alias("n"),
-            F.expr(f"bit_xor(xxhash64({hash_cols}))").alias("h"),
-        ).first()
-        if fp_row["n"] == 0:
-            return
-        marker = f"{commits_dir}/b{batch_id}_{fp_row['n']}_{fp_row['h']}"
-        if fs.exists(spark, marker):
-            if fs.read_text(spark, marker).strip() == "committed":
-                return  # same batch content already folded
-            raise RuntimeError(
-                f"ivm sink: marker {marker} is 'pending' — a prior "
-                "attempt on this batch started and did not commit. "
-                "Verify the touched keys against the change batch "
-                "(or recompute them), then delete the marker."
-            )
-        fs.write_text(spark, marker, "pending")
+    def fold(batch_df: DataFrame) -> None:
         touched = batch_df.select(key_col).distinct()
         existing = table.read_for(touched, keys_col=key_col)
         if count_col in existing.columns:
@@ -481,7 +455,17 @@ def write_stream_ivm(
             keep_zero=True,
         )
         table.upsert(folded)
-        fs.write_text(spark, marker, "committed")
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        fp_row = batch_df.agg(
+            F.count("*").alias("n"),
+            F.expr(f"bit_xor(xxhash64({hash_cols}))").alias("h"),
+        ).first()
+        if fp_row["n"] == 0:
+            return
+        marker = f"{commits_dir}/b{batch_id}_{fp_row['n']}_{fp_row['h']}"
+        _apply_once(spark, marker, lambda: fold(batch_df))
 
     return (
         stream.writeStream.foreachBatch(write_batch)

@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import hashlib
 import json
-import math
 import sys
 import time
 
@@ -24,25 +23,9 @@ import duckdb
 
 sys.path.insert(0, ".")
 
+from compare import canon  # noqa: E402 -- one canonical row form
 from data_lake_project_spark.queries import ORACLE, QUERIES
 from data_lake_project_spark.session import get_spark
-
-
-def canon(rows, cols):
-    """Sort columns by name, rows by stringified values (the same
-    canonicalization as scripts/compare.py / the driver's t2)."""
-    idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = []
-    for r in rows:
-        vals = []
-        for i in idx:
-            v = r[i]
-            if isinstance(v, float):
-                v = "NaN" if math.isnan(v) else f"{v:.6g}"
-            vals.append(str(v))
-        out.append(tuple(vals))
-    out.sort()
-    return [cols[i] for i in idx], out
 
 
 def value_hash(rows):

@@ -1143,11 +1143,8 @@ def test_crossmodal_union_family_needs_both_matchers(spark):
         (r.id_a, r.id_b)
         for r in phash_neardup(fp, id_col="doc_id", max_hamming=3).collect()
     )
-    sets = D.shingle_sets(allpop, k=3)
-    cand = D.minhash_candidates_sets(D.minhash_sets(sets, num_hashes=8))
     txt_pairs = sorted(
-        (r.id_a, r.id_b)
-        for r in D.jaccard_verify_sets(cand, sets, threshold=0.5).collect()
+        (r.id_a, r.id_b) for r in D.minhash_neardup_pairs(allpop).collect()
     )
     # each matcher sees exactly its own twin
     assert img_pairs == [(1, 101)]

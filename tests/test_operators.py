@@ -126,14 +126,14 @@ def test_minhash_finds_planted_neardup(spark):
     df = spark.createDataFrame(
         [(1, base), (2, near), (3, far)], ["doc_id", "text"]
     )
-    sh = D.shingles(df, k=3)
-    sig = D.minhash_signatures(sh, num_hashes=8)
-    cand = {(r.id_a, r.id_b) for r in D.minhash_candidates(sig, band_size=2).collect()}
+    sig = D.minhash_sets(D.shingle_sets(df, k=3), num_hashes=8)
+    cand = {
+        (r.id_a, r.id_b)
+        for r in D.minhash_candidates_sets(sig, band_size=2).collect()
+    }
     assert (1, 2) in cand
     assert (1, 3) not in cand and (2, 3) not in cand
-    verified = D.jaccard_verify(
-        D.minhash_candidates(sig, band_size=2), sh, threshold=0.5
-    ).collect()
+    verified = D.minhash_neardup_pairs(df).collect()
     assert [(r.id_a, r.id_b) for r in verified] == [(1, 2)]
 
 
@@ -2300,6 +2300,34 @@ def test_lane_apply_replayed_delta_is_noop(spark, tmp_path, lane):
         assert left.filter(F.col(id_col).isin(doomed)).count() == 0, t
 
 
+@pytest.mark.parametrize("lane", ["dedup", "sq_id_buckets"])
+def test_lane_reads_its_layout_from_the_sidecar(spark, tmp_path, monkeypatch, lane):
+    """``Lane.save`` records ``id_buckets`` in the sidecar, and fold
+    and erase take the layout from there: no table of a plain lane is
+    probed for ``KeyedTable`` metadata. The params a lane hands out
+    (dedup and BM25 splat them into their builders) never carry the
+    record."""
+    import json
+
+    from data_lake_project_spark import fs
+    from data_lake_project_spark.operators.lane import SIDECAR
+
+    save, fold, erase, _, ids = _lane_case(spark, lane)
+    path = str(tmp_path / lane)
+    save(path)
+    sidecar = json.loads(fs.read_text(spark, f"{path}/{SIDECAR}"))
+    assert sidecar["id_buckets"] == (8 if lane == "sq_id_buckets" else None)
+    probes = []
+    exists = fs.exists
+    monkeypatch.setattr(
+        fs, "exists", lambda s, p: probes.append(p) or exists(s, p)
+    )
+    assert "id_buckets" not in fold(path).params
+    erase(spark, path, ids.limit(3))
+    if lane == "dedup":
+        assert not [p for p in probes if p.endswith("_keyed_meta.json")]
+
+
 def test_dedup_lane_counts_empty_text_doc_once(spark, tmp_path):
     """An empty-text doc has a ``sets`` row but no ``bands`` rows. The
     fold's replay guard must read the one-row-per-id ``sets`` table:
@@ -2383,6 +2411,17 @@ def test_only_keyed_table_builds_hash_bucket_paths():
         r"_keyed_meta\.json|_idbucket\.json|__kbucket|__idb",
     )
     assert not hits, "bucket layout literal outside KeyedTable:\n" + "\n".join(
+        hits
+    )
+
+
+def test_only_dedup_module_joins_minhash_bands():
+    """Tooling guard: ``operators/dedup.py`` owns the MinHash ladder
+    (``band_join`` + ``jaccard_verify_sets``), so no other module
+    names the band-signature column — a hand-rolled band join or
+    verify, like the ingest gate's former copies, cannot grow back."""
+    hits = _library_literals_outside("operators/dedup.py", r"^bandsig$")
+    assert not hits, "MinHash band join outside dedup.py:\n" + "\n".join(
         hits
     )
 

@@ -654,7 +654,7 @@ def test_scd2_marker_protocol_pending_detection_and_gc(spark, tmp_path):
     from data_lake_project_spark import fs
     from data_lake_project_spark.sources import KeyedTable
     from data_lake_project_spark.streaming.pipeline import (
-        scd2_marker_gc,
+        marker_gc,
         write_stream_scd2,
     )
 
@@ -715,7 +715,15 @@ def test_scd2_marker_protocol_pending_detection_and_gc(spark, tmp_path):
     fs.write_text(spark, orphan, "pending")
     _, _, mt = fs.list_statuses(spark, f"{t.path}/_scd2_committed")[0]
     far_future = mt + 10 * 86400 * 1000
-    assert scd2_marker_gc(spark, t.path, max_age_s=86400, now_ms=far_future) == 1
+    assert (
+        marker_gc(
+            spark,
+            f"{t.path}/_scd2_committed",
+            max_age_s=86400,
+            now_ms=far_future,
+        )
+        == 1
+    )
     left = [n for n, _, _ in fs.list_statuses(spark, f"{t.path}/_scd2_committed")]
     # list_statuses returns fully-qualified URIs — compare by suffix
     assert [n.split("/")[-1] for n in left] == ["9_9_9_9"]
