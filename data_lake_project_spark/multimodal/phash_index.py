@@ -88,7 +88,7 @@ def phash_index_apply(
     new_images: DataFrame,
     image_col: str = "image",
     delta_codes: DataFrame | None = None,
-) -> PhashIndex:
+) -> None:
     """The O(delta) maintenance fold (``Lane.fold``): fingerprint ONLY
     the new images and append — the corpus is never rescanned; ids
     already stored fold in as a no-op. ``delta_codes``: precomputed
@@ -102,7 +102,6 @@ def phash_index_apply(
         delta_codes = build_phash_index(new_images, image_col, id_col).codes
     # the codes ARE the delta table: PhashIndex(params, codes) carries it
     _LANE.fold(spark, path, delta_codes, PhashIndex)
-    return load_phash_index(spark, path)
 
 
 def erase_phash_index(

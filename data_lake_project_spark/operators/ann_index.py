@@ -411,14 +411,14 @@ def _lane_of(spark: SparkSession, path: str) -> Lane:
 
 def ann_index_apply(
     spark: SparkSession, path: str, new_corpus: DataFrame
-) -> AnnIndex:
+) -> None:
     """Persisted O(delta) maintenance fold (``Lane.fold``) — the
     growing-corpus story: encode ONLY ``new_corpus`` with the SAVED
     model (no retraining — the codebooks/centroids are the frozen
     artifact, exactly how a production FAISS index absorbs new
     vectors) and append the codes next to the standing ones; ids
     already stored fold in as a no-op (duplicated codes would
-    duplicate search results). Returns the reloaded index.
+    duplicate search results).
     Incremental ≡ full rebuild is CI-pinned (same model → the encode
     is a pure deterministic map, so fold order cannot matter).
     """
@@ -428,7 +428,6 @@ def ann_index_apply(
         new_corpus,
         lambda m, rows: _encoded(_from_sidecar(m, None), rows),
     )
-    return load_ann_index(spark, path)
 
 
 def load_ann_index(spark: SparkSession, path: str) -> AnnIndex:

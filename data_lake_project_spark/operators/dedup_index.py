@@ -115,15 +115,14 @@ def load_dedup_index(spark: SparkSession, path: str) -> DedupIndex:
 
 def dedup_index_apply(
     spark: SparkSession, path: str, new_docs: DataFrame
-) -> DedupIndex:
+) -> None:
     """Persisted maintenance fold (``Lane.fold``): index ONLY
     ``new_docs`` with the stored params and APPEND — the standing
     corpus's CONTENT is never recomputed or reshuffled; ids already in
-    ``sets`` fold in as a no-op. Returns the reloaded index."""
+    ``sets`` fold in as a no-op."""
     _LANE.fold(
         spark, path, new_docs, lambda p, docs: build_dedup_index(docs, **p)
     )
-    return load_dedup_index(spark, path)
 
 
 def dedup_against_index(

@@ -173,16 +173,15 @@ def load_bm25_index(spark, path: str) -> Bm25Index:
     return Bm25Index(params, t["tfs"], t["dl"], persisted=True)
 
 
-def bm25_index_apply(spark, path: str, new_docs: DataFrame) -> Bm25Index:
+def bm25_index_apply(spark, path: str, new_docs: DataFrame) -> None:
     """Persisted maintenance fold (``Lane.fold``): index ONLY
     ``new_docs`` and APPEND to the stored tf/dl tables — the standing
     corpus's content is never re-tokenized or reshuffled; ids already
     in ``dl`` fold in as a no-op. df/avgdl need no maintenance — they
-    are derived at serve time. Returns the reloaded index."""
+    are derived at serve time."""
     _LANE.fold(
         spark, path, new_docs, lambda p, docs: build_bm25_index(docs, **p)
     )
-    return load_bm25_index(spark, path)
 
 
 def search_bm25_index(

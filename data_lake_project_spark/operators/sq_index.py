@@ -84,7 +84,7 @@ def load_sq_index(spark: SparkSession, path: str) -> SqIndex:
 
 def sq_index_apply(
     spark: SparkSession, path: str, new_corpus: DataFrame
-) -> SqIndex:
+) -> None:
     """O(delta) fold (``Lane.fold``): encode ONLY the delta with the
     saved stats and append, inside the saved layout; ids already
     stored fold in as a no-op (a positional codes table DOES duplicate
@@ -96,7 +96,6 @@ def sq_index_apply(
         return SqIndex(codes, mins, maxs, p)
 
     _LANE.fold(spark, path, new_corpus, encode)
-    return load_sq_index(spark, path)
 
 
 def search_sq_index(

@@ -552,7 +552,7 @@ def q133_ivfpq_topk(spark, sf):
 
 def _dataset_fingerprint(sf: str, table: str) -> str:
     """Driver-side CONTENT fingerprint of a fixture table folded into
-    /tmp index-cache keys, so a cached artifact is REBUILT when the
+    the lane-cache keys, so a cached artifact is REBUILT when the
     underlying data changes instead of silently serving results from a
     previous corpus. Hashes actual bytes (full file below 16 MB, else
     size + head/tail 1 MB samples) AND the mtime — size+mtime alone
@@ -560,7 +560,7 @@ def _dataset_fingerprint(sf: str, table: str) -> str:
     same mtime second (round-5 review), and content samples alone
     would miss a middle-only rewrite of a large file (round-6 review):
     together, a stale hit needs identical samples in the same mtime
-    second. Local paths only — which is what the /tmp build-if-absent
+    second. Local paths only — which is what the temp-dir build-if-absent
     lifecycle is for; a cluster deployment versions its indexes
     explicitly."""
     import glob as _glob
@@ -591,7 +591,7 @@ def _dataset_fingerprint(sf: str, table: str) -> str:
 
 
 def _publish_if_absent(spark, path: str, build_fn) -> None:
-    """Single-winner build-if-absent publish for /tmp index caches:
+    """Single-winner build-if-absent publish for the temp-dir caches:
     build into a unique temp directory next to ``path`` and atomically
     ``os.rename`` it in. Concurrent runs never observe a half-written
     index (readers either see nothing — and build their own — or a
@@ -629,26 +629,30 @@ def _publish_if_absent(spark, path: str, build_fn) -> None:
         _shutil.rmtree(tmp, ignore_errors=True)
     except BaseException:
         # failed build (OOM, interrupt, disk full): never leave the
-        # partial temp dir accumulating in /tmp
+        # partial temp dir accumulating in the cache root
         _shutil.rmtree(tmp, ignore_errors=True)
         raise
 
 
-# Root of the persisted-lane caches (``operators/lane.py`` layout: one
-# ``params.json`` sidecar per lane). Bump the version whenever that
-# on-disk format changes, so a cache an older layout published is
-# never loaded by new code.
-_LANE_CACHE = "/tmp/spark_graft_ann_idx/v3"
+def _cache_path(name: str, sf: str, *key: str) -> str:
+    """``<root>/<name>/<fixture tag>_<key...>``: the one root of every
+    library cache is the temp dir at call time (``/tmp`` by default;
+    a run that sets ``TMPDIR`` keeps its caches to itself)."""
+    import tempfile as _tempfile
+
+    tag = sf.rstrip("/").replace("/", "_").replace(".", "_")
+    return f"{_tempfile.gettempdir()}/{name}/" + "_".join((tag, *key))
 
 
 def _published_lane(spark, sf, tables, key: str, build_fn) -> str:
     """Publish-if-absent a lane cache keyed by the fixture dir, the
     content fingerprints of ``tables`` (a changed fixture forces a
     rebuild — a stale index would silently serve old results) and
-    ``key`` (the lane config / layout version); returns its path."""
-    tag = sf.rstrip("/").replace("/", "_").replace(".", "_")
-    fp = "_".join(_dataset_fingerprint(sf, t) for t in tables)
-    path = f"{_LANE_CACHE}/{tag}_{fp}_{key}"
+    ``key`` (the lane config / layout version); returns its path.
+    ``v3`` is the ``operators/lane.py`` on-disk format: bump it when
+    that changes, so new code never loads an older layout's cache."""
+    fps = [_dataset_fingerprint(sf, t) for t in tables]
+    path = _cache_path("spark_graft_ann_idx/v3", sf, *fps, key)
     _publish_if_absent(spark, path, build_fn)
     return path
 
@@ -3829,8 +3833,8 @@ def q100_json_schema_infer(spark, sf):
 def _published_hll_rollup(spark, sf):
     """The q151/q158 shared artifact: per-(event_type, day) HLL
     sketches of distinct users, built once per (sf, fingerprint) and
-    published under /tmp; both queries serve from this table and the
-    raw events are never rescanned."""
+    published under the cache root; both queries serve from this
+    table and the raw events are never rescanned."""
     from data_lake_project_spark.operators.sketches import (
         build_hll_rollup,
         load_hll_rollup,
@@ -5083,18 +5087,16 @@ def _stream_table_source(spark, sf, table: str):
     """A fixture table as a Structured Streaming file source. The
     file source needs a DIRECTORY (basePath on a file path fails in
     FileStreamSource), so the fixture file is exposed through a
-    content-keyed /tmp symlink dir — no data copy, publish-if-absent
-    keyed on (size, mtime) like the index lifecycles. Batch-read
-    schema, so nanos handling matches ``load_table`` exactly."""
+    symlink dir under the cache root — no data copy, publish-if-absent
+    keyed on (fixture dir, size, mtime) like the index lifecycles.
+    Batch-read schema, so nanos handling matches ``load_table``."""
     import os as _os
 
     load_table(spark, sf, table)  # pins TZ + nanos confs
     path = f"{sf.rstrip('/')}/{table}.parquet"
     st = _os.stat(path)
-    src_dir = (
-        f"/tmp/spark_graft_stream_src_{table}_"
-        f"{st.st_size}_{int(st.st_mtime)}"
-    )
+    key = (table, str(st.st_size), str(int(st.st_mtime)))
+    src_dir = _cache_path("spark_graft_stream_src", sf, *key)
     _os.makedirs(src_dir, exist_ok=True)
     link = _os.path.join(src_dir, f"{table}.parquet")
     if not _os.path.exists(link):
@@ -5136,8 +5138,8 @@ def q177_stream_funnel_report(spark, sf):
     across 4 batches, here made driver-visible (the q175 recipe
     applied to the stateful family; the last equivalence-only lane
     gains a driver row). The file source needs a DIRECTORY, so the
-    fixture file is exposed through a content-keyed /tmp symlink dir
-    (no data copy). Scale: state is O(stages) epoch-micros per key in
+    fixture file is exposed through a symlink dir under the cache
+    root (no data copy). Scale: state is O(stages) epoch-micros per key in
     the executor state store (RocksDB on a cluster); the memory-sink
     snapshot here is per-key depth rows — a deployment writes the
     idempotent parquet sink (``write_stream_idempotent``) instead."""
@@ -5499,7 +5501,7 @@ def q187_knn_index_maintained(spark, sf):
     EXACT, because cosines never change when the corpus grows (a new
     top-k is always a subset of stored-top-k UNION delta), then the
     mutual graph serves straight off the maintained edge table. The
-    published /tmp artifact IS the post-fold state (built inside one
+    published cache artifact IS the post-fold state (built inside one
     publish-if-absent step — replay-idempotent, the q168 pattern),
     and the oracle is q180's FROM-SCRATCH full-graph SQL verbatim:
     the driver hash proves maintained == rebuilt, the equality that

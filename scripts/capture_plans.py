@@ -1,11 +1,13 @@
-"""Capture `.explain("formatted")` for named queries into plans/r14/.
+"""Capture `.explain("formatted")` for named queries into plans/<dir>/.
 
-Usage: python scripts/capture_plans.py before|after q05_multiway_join_agg [...]
+Usage: python scripts/capture_plans.py <dir> before|after q05_multiway_join_agg [...]
 
-Writes plans/r14/<name>_<tag>.txt. Plan capture only *builds* the
-frame (no action) — except for the streaming/temp-dir queries (q194,
-q200, q201...) whose construction executes the pipeline; their file
-records the plan of the returned (checkpointed) result plus a note.
+Writes plans/<dir>/<name>_<tag>.txt, so each capture set (r14,
+minhash_ladder, ...) keeps its own directory. Plan capture only
+*builds* the frame (no action) — except for the streaming/temp-dir
+queries (q194, q200, q201...) whose construction executes the
+pipeline; their file records the plan of the returned (checkpointed)
+result plus a note.
 """
 
 from __future__ import annotations
@@ -30,11 +32,10 @@ EAGER = {
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    sub, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "..", "plans", "r14"
+        os.path.dirname(os.path.abspath(__file__)), "..", "plans", sub
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("capture_plans")

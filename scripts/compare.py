@@ -37,46 +37,61 @@ def canon(rows, cols):
     return [cols[i] for i in idx], out
 
 
+FIXTURE_TABLES = (
+    "region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings",
+)
+
+
+def oracle_db(sf_dir):
+    """A DuckDB connection with every fixture table of ``sf_dir`` as a view."""
+    con = duckdb.connect()
+    for t in FIXTURE_TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def run_both(spark, con, name, sf_dir):
+    """``(spark, oracle, err)``: query ``name`` on Spark and on its DuckDB
+    oracle, each as ``canon`` output. ``oracle`` is None when the query
+    has none or a side failed; ``err`` is ``"spark: ..."`` (``spark``
+    None too) or ``"oracle: ..."`` then."""
+    try:
+        sdf = QUERIES[name](spark, sf_dir)
+        s = canon([tuple(r) for r in sdf.collect()], sdf.columns)
+    except Exception as e:  # noqa: BLE001
+        return None, None, f"spark: {e}"
+    if name not in ORACLE:
+        return s, None, None
+    try:
+        res = con.execute(ORACLE[name])
+        return s, canon(res.fetchall(), [d[0] for d in res.description]), None
+    except Exception as e:  # noqa: BLE001
+        return s, None, f"oracle: {e}"
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
     spark = get_spark("compare", shuffle_partitions=8)
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-
+    con = oracle_db(sf_dir)
     n_pass = n_fail = 0
-    for name, fn in QUERIES.items():
+    for name in QUERIES:
         if only and name not in only:
             continue
-        try:
-            sdf = fn(spark, sf_dir)
-            s_cols = sdf.columns
-            s_rows = [tuple(r) for r in sdf.collect()]
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: spark error: {e}")
+        s, d, err = run_both(spark, con, name, sf_dir)
+        if err:
+            print(f"FAIL {name}: {err}")
             n_fail += 1
             continue
-        if name not in ORACLE:
-            print(f"ok   {name}: rows-only ({len(s_rows)} rows)")
+        sc, sr = s
+        if d is None:
+            print(f"ok   {name}: rows-only ({len(sr)} rows)")
             n_pass += 1
             continue
-        try:
-            res = con.execute(ORACLE[name])
-            d_cols = [d[0] for d in res.description]
-            d_rows = res.fetchall()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: duckdb error: {e}")
-            n_fail += 1
-            continue
-
-        sc, sr = canon(s_rows, s_cols)
-        dc, dr = canon(d_rows, d_cols)
+        dc, dr = d
         if sc != dc:
             print(f"FAIL {name}: columns {sc} vs {dc}")
             n_fail += 1

@@ -19,12 +19,10 @@ import json
 import sys
 import time
 
-import duckdb
-
 sys.path.insert(0, ".")
 
-from compare import canon  # noqa: E402 -- one canonical row form
-from data_lake_project_spark.queries import ORACLE, QUERIES
+from compare import oracle_db, run_both  # noqa: E402 -- one comparison
+from data_lake_project_spark.queries import QUERIES
 from data_lake_project_spark.session import get_spark
 
 
@@ -42,69 +40,40 @@ def main():
         sys.argv[2] if len(sys.argv) > 2 else "CORRECTNESS_SELF.json"
     )
     spark = get_spark("self_correctness", shuffle_partitions=8)
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.execute(
-            f"CREATE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = oracle_db(sf_dir)
 
     report: dict[str, dict] = {}
     t_total = time.perf_counter()
-    for name, fn in QUERIES.items():
-        entry = {
-            "rows_match": None,
-            "schema_match": None,
-            "hash_match": None,
-            "spark_rows": None,
-            "oracle_rows": None,
-            "err": None,
-        }
-        t0 = time.perf_counter()
-        try:
-            sdf = fn(spark, sf_dir)
-            s_cols = sdf.columns
-            s_rows = [tuple(r) for r in sdf.collect()]
-            entry["spark_rows"] = len(s_rows)
-        except Exception as e:  # noqa: BLE001
-            entry["err"] = f"spark: {e}"[:300]
-            entry["seconds"] = round(time.perf_counter() - t0, 3)
-            report[name] = entry
-            print(f"ERR  {name}: {entry['err']}")
-            continue
-        if name not in ORACLE:
-            entry["err"] = "no_oracle"
-            entry["seconds"] = round(time.perf_counter() - t0, 3)
-            report[name] = entry
-            print(f"rows {name}: {len(s_rows)} rows (no oracle)")
-            continue
-        try:
-            res = con.execute(ORACLE[name])
-            d_cols = [d[0] for d in res.description]
-            d_rows = res.fetchall()
-        except Exception as e:  # noqa: BLE001
-            entry["err"] = f"oracle: {e}"[:300]
-            entry["seconds"] = round(time.perf_counter() - t0, 3)
-            report[name] = entry
-            print(f"ERR  {name}: {entry['err']}")
-            continue
-        sc, sr = canon(s_rows, s_cols)
-        dc, dr = canon(d_rows, d_cols)
-        entry["oracle_rows"] = len(dr)
-        entry["rows_match"] = len(sr) == len(dr)
-        entry["schema_match"] = sc == dc
-        entry["hash_match"] = (
-            entry["rows_match"]
-            and entry["schema_match"]
-            and value_hash(sr) == value_hash(dr)
+    for name in QUERIES:
+        entry = dict.fromkeys(
+            ("rows_match", "schema_match", "hash_match", "spark_rows",
+             "oracle_rows", "err")
         )
+        t0 = time.perf_counter()
+        s, d, err = run_both(spark, con, name, sf_dir)
+        if s is not None:
+            entry["spark_rows"] = len(s[1])
+        if d is not None:
+            (sc, sr), (dc, dr) = s, d
+            entry["oracle_rows"] = len(dr)
+            entry["rows_match"] = len(sr) == len(dr)
+            entry["schema_match"] = sc == dc
+            entry["hash_match"] = (
+                entry["rows_match"]
+                and entry["schema_match"]
+                and value_hash(sr) == value_hash(dr)
+            )
+        else:
+            entry["err"] = err[:300] if err else "no_oracle"
         entry["seconds"] = round(time.perf_counter() - t0, 3)
         report[name] = entry
-        tag = "PASS" if entry["hash_match"] else "FAIL"
-        print(f"{tag} {name} ({len(sr)} rows, {entry['seconds']}s)")
+        if err:
+            print(f"ERR  {name}: {entry['err']}")
+        elif d is None:
+            print(f"rows {name}: {entry['spark_rows']} rows (no oracle)")
+        else:
+            tag = "PASS" if entry["hash_match"] else "FAIL"
+            print(f"{tag} {name} ({len(sr)} rows, {entry['seconds']}s)")
 
     n_green = sum(1 for e in report.values() if e["hash_match"])
     n_rows_only = sum(

@@ -12,6 +12,8 @@ import json
 import os
 import sys
 
+import pytest
+
 sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
 )
@@ -77,3 +79,58 @@ def test_compact_line_is_bounded_json():
     line = json.dumps(out)
     assert len(line) < 2000
     assert json.loads(line)["n_queries"] == 1000
+
+
+SCRIPTS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "scripts")
+
+
+def _script(name: str):
+    """Import ``scripts/<name>.py`` as a module; ``main`` does not run."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        f"scripts_{name}", os.path.join(SCRIPTS, f"{name}.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_ab_pairs_alternate_and_summarize():
+    """``scripts/ab.py`` on canned ``perfbench/run.py`` stdout."""
+    ab = _script("ab")
+    assert [ab.order(p)[0] for p in range(3)] == ["base", "change", "base"]
+    runs = []
+    for pair, side, pass_s, suspect, failed in [
+        (1, "base", 10.0, False, 0), (1, "change", 9.0, False, 0),
+        (2, "base", 12.0, False, 0), (2, "change", 12.0, False, 1),
+        (3, "base", 11.0, False, 0), (3, "change", 13.0, True, 0),
+    ]:
+        out = [{"stamp": {"nproc": 4, "suspect": suspect}}]
+        out += [{"failure": "op"}] * failed + [{
+            "correct": not failed, "attempted": 10, "failed": failed,
+            "metrics": {"pass_s": {"value": pass_s, "unit": "s"}},
+        }]
+        stdout = "\n".join(json.dumps(x) for x in out) + "\n"
+        runs.append(dict(ab.parse_run(stdout), pair=pair, side=side))
+    e2e = [{"name": "pass_s", "unit": "s", "better": "lower", "bound": 0.25}]
+    row, base, change = ab.summarize(runs[::-1], e2e)
+    assert row["base"] == {"q1": 10.5, "median": 11.0, "q3": 11.5}
+    assert row["change"] == {"q1": 10.5, "median": 12.0, "q3": 12.5}
+    assert row["ratio"] == round(12 / 11, 3)
+    assert row["wins"] == "1/3"  # pair 1 won, pair 2 tied, pair 3 lost
+    assert base == {"side": "base", "suspect": [False] * 3,
+                    "correct": True, "failed": 0}
+    assert change == {"side": "change", "suspect": [False, False, True],
+                      "correct": False, "failed": 1}
+
+
+@pytest.mark.parametrize(
+    "name", sorted(f[:-3] for f in os.listdir(SCRIPTS) if f.endswith(".py"))
+)
+def test_script_imports(name, monkeypatch):
+    """Every script still imports against the library (several use
+    private ``queries`` helpers), without running its ``main``. The
+    scripts dir leads ``sys.path``, as when Python runs a script."""
+    monkeypatch.syspath_prepend(SCRIPTS)
+    _script(name)

@@ -308,14 +308,16 @@ def test_bm25_index_roundtrip_and_incremental_fold(spark, tmp_path):
     save_bm25_index(
         build_bm25_index(d.filter("doc_id % 2 = 0")), path2
     )
-    folded = bm25_index_apply(spark, path2, d.filter("doc_id % 2 = 1"))
+    bm25_index_apply(spark, path2, d.filter("doc_id % 2 = 1"))
+    folded = load_bm25_index(spark, path2)
     assert inline == sorted(
         tuple(r)
         for r in search_bm25_index(folded, q, k=5).collect()
     )
     # replayed delta is a no-op under the default guard
     n = folded.tfs.count()
-    replayed = bm25_index_apply(spark, path2, d.filter("doc_id % 2 = 1"))
+    bm25_index_apply(spark, path2, d.filter("doc_id % 2 = 1"))
+    replayed = load_bm25_index(spark, path2)
     assert replayed.tfs.count() == n
 
 
@@ -1951,7 +1953,8 @@ def test_dedup_index_incremental_equals_recompute(spark, tmp_path):
     # persisted fold: save part1's index, apply part2 as the delta
     path = str(tmp_path / "dedup_idx")
     save_dedup_index(build_dedup_index(part1), path)
-    applied = dedup_index_apply(spark, path, part2)
+    dedup_index_apply(spark, path, part2)
+    applied = load_dedup_index(spark, path)
     assert snap(applied) == snap(rebuilt)
     # serving path against the maintained index == one-shot operator
     kept_idx = sorted(
@@ -2310,7 +2313,9 @@ def test_lane_reads_its_layout_from_the_sidecar(spark, tmp_path, monkeypatch, la
     import json
 
     from data_lake_project_spark import fs
+    from data_lake_project_spark.operators.dedup_index import load_dedup_index
     from data_lake_project_spark.operators.lane import SIDECAR
+    from data_lake_project_spark.operators.sq_index import load_sq_index
 
     save, fold, erase, _, ids = _lane_case(spark, lane)
     path = str(tmp_path / lane)
@@ -2322,7 +2327,9 @@ def test_lane_reads_its_layout_from_the_sidecar(spark, tmp_path, monkeypatch, la
     monkeypatch.setattr(
         fs, "exists", lambda s, p: probes.append(p) or exists(s, p)
     )
-    assert "id_buckets" not in fold(path).params
+    fold(path)
+    load = load_dedup_index if lane == "dedup" else load_sq_index
+    assert "id_buckets" not in load(spark, path).params
     erase(spark, path, ids.limit(3))
     if lane == "dedup":
         assert not [p for p in probes if p.endswith("_keyed_meta.json")]
@@ -2424,6 +2431,35 @@ def test_only_dedup_module_joins_minhash_bands():
     assert not hits, "MinHash band join outside dedup.py:\n" + "\n".join(
         hits
     )
+
+
+def test_no_library_literal_hard_codes_tmp():
+    """Tooling guard: every library cache is built under
+    ``queries._cache_path`` (the temp dir resolved at call time), so
+    no library string literal names ``/tmp`` — a run that points
+    ``TMPDIR`` at its own directory writes nothing outside it."""
+    hits = _library_literals_outside("", r"^/tmp(/|$)")
+    assert not hits, "hard-wired /tmp path:\n" + "\n".join(hits)
+
+
+def test_caches_follow_the_temp_dir(spark, tmp_path, monkeypatch):
+    """A lane cache (``_published_lane``) and a stream-source symlink
+    dir (``_stream_table_source``) both land under the temp dir in
+    force at call time."""
+    import glob
+    import os
+    import tempfile
+
+    from data_lake_project_spark.queries import (
+        _published_lane,
+        _stream_table_source,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    lane = _published_lane(spark, SF_DIR, ["events"], "probe", os.makedirs)
+    assert lane.startswith(f"{tmp_path}/") and os.path.isdir(lane)
+    assert _stream_table_source(spark, SF_DIR, "events").isStreaming
+    assert glob.glob(f"{tmp_path}/*/*/events.parquet")
 
 
 def test_dedup_against_index_precomputed_sets_identical(spark):
@@ -3042,6 +3078,7 @@ def test_ann_index_apply_incremental_equals_rebuild(spark, tmp_path):
     from data_lake_project_spark.operators.ann_index import (
         ann_index_apply,
         build_ann_index,
+        load_ann_index,
         save_ann_index,
         search_ann_index,
     )
@@ -3071,7 +3108,8 @@ def test_ann_index_apply_incremental_equals_rebuild(spark, tmp_path):
             ),
             path,
         )
-        folded = ann_index_apply(spark, path, half2)
+        ann_index_apply(spark, path, half2)
+        folded = load_ann_index(spark, path)
         want = sorted(
             tuple(r) for r in search_ann_index(full, probes, k=7).collect()
         )
