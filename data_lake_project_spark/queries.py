@@ -7,6 +7,14 @@ total ORDER BY, ``round()`` on floating aggregates, explicit BIGINT
 casts on counts/positions, timestamps rendered as strings, identical
 column aliases on both sides.
 
+Oracle fragments: an algorithm that two oracles replay (the shingle
+and MinHash ladder, the quality score, the vector prelude and recall
+tail, the pHash gate, the fake AV decoders, ...) is ONE named SQL
+fragment — a constant or a ``_*_sql``/``_*_ctes`` function next to
+its first user — and every oracle composes it. Fragments are plain
+DuckDB SQL shared only between oracles: they never import, call or
+copy the Spark-side code, so the differential stays independent.
+
 Determinism notes:
 - all content hashing is md5 (same hex on any engine);
 - every top-k ranks on a *rounded* score + unique id tie-break so
@@ -5799,6 +5807,7 @@ def q192_stream_phash_gate(spark, sf):
     through the gate must admit exactly the rows a batch gate admits
     — micro-batch boundaries cannot change a per-row decision against
     a static index."""
+    import shutil as _shutil
     import tempfile as _tempfile
 
     from data_lake_project_spark.multimodal.phash_index import (
@@ -5835,7 +5844,10 @@ def q192_stream_phash_gate(spark, sf):
         .drop("keep")
     )
 
+    from data_lake_project_spark.streaming.pipeline import read_sink
+
     out = _tempfile.mkdtemp(prefix="spark_graft_q192_out_")
+    ckpt = _tempfile.mkdtemp(prefix="spark_graft_q192_ckpt_")
 
     def gate_batch(bdf, batch_id):
         # per-batch dir + overwrite (the write_idempotent_foreach_batch
@@ -5849,19 +5861,21 @@ def q192_stream_phash_gate(spark, sf):
             .parquet(f"{out}/data/__batch={batch_id}")
         )
 
-    q = (
-        roles.writeStream.foreachBatch(gate_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            _tempfile.mkdtemp(prefix="spark_graft_q192_ckpt_"),
+    # both per-call dirs go in the finally; the sink read is eagerly
+    # checkpointed first, so the result outlives the deleted files
+    try:
+        q = (
+            roles.writeStream.foreachBatch(gate_batch)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .start()
         )
-        .start()
-    )
-    _await_stream(q)
-    from data_lake_project_spark.streaming.pipeline import read_sink
-
-    return read_sink(spark, out).orderBy("doc_id")
+        _await_stream(q)
+        kept = read_sink(spark, out).localCheckpoint(eager=True)
+    finally:
+        for d_ in (out, ckpt):
+            _shutil.rmtree(d_, ignore_errors=True)
+    return kept.orderBy("doc_id")
 
 
 def q193_perceptual_waterfall(spark, sf):
@@ -6763,20 +6777,182 @@ QUERIES: dict[str, QueryFn] = {
     "q201_stream_text_ingest_fold": q201_stream_text_ingest_fold,
 }
 
-_SHINGLE_CTE = """
-    d AS (
-        SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
+# Oracle fragments (the module docstring's rule): each is written once,
+# here or next to its first user below, so a fix to a replayed
+# algorithm reaches every oracle that composes it.
+
+# q07/q56: each order's latest event at or before it (as-of rank 1).
+_ASOF_RANKED = """ranked AS (
+            SELECT o.o_orderkey, o.o_custkey, o.o_orderdate, e.ts, e.event_type,
+                   row_number() OVER (
+                       PARTITION BY o.o_orderkey
+                       ORDER BY e.ts DESC NULLS LAST, e.event_id DESC NULLS LAST
+                   ) AS rn
+            FROM orders o
+            LEFT JOIN events e
+              ON e.user_id = o.o_custkey AND e.ts <= o.o_orderdate
+        )"""
+
+
+# q97/q142/q173: the 32-token windows at stride 24 over each doc's
+# non-empty tokens, ``g(doc_id, toks, chunk_id)``.
+_CHUNK_CTES = """t AS (
+        SELECT doc_id,
+               list_filter(
+                   regexp_split_to_array(trim(text), '\\s+'),
+                   x -> x <> '') AS toks
         FROM documents
+    ), c0 AS (
+        SELECT doc_id, toks,
+               CASE WHEN len(toks) <= 32 THEN 1
+                    ELSE CAST(floor((len(toks) - 32 + 23) / 24)
+                              AS BIGINT) + 1
+               END AS nc
+        FROM t
+    ), g AS (
+        SELECT doc_id, toks,
+               unnest(generate_series(0, nc - 1)) AS chunk_id
+        FROM c0
+    )"""
+
+
+def _quality_ctes(src: str = "documents", carry: str = "") -> str:
+    """t/s/r: the q30 quality inputs of every ``src`` row — char and
+    token counts, punctuation and stopword ratios (pround-4), the
+    length term. ``carry`` (``", col"``) rides along after doc_id."""
+    return f"""t AS (
+            SELECT doc_id{carry}, text,
+                   regexp_split_to_array(trim(text), '\\s+') AS toks
+            FROM {src}
+        ),
+        s AS (
+            SELECT doc_id{carry},
+                   length(text) AS n_chars_m,
+                   len(toks) AS n_tokens,
+                   len(regexp_extract_all(text, '[^\\w\\s]')) AS n_punct,
+                   len(list_filter(list_transform(toks, x -> lower(x)),
+                       x -> list_contains(
+                           ['the','a','of','and','to','in','is',
+                            'le','la','et','les','des','un','une',
+                            'el','y','los','de','una',
+                            'der','die','das','und','ein','zu','von',
+                            'de5','shi4','le5','zai4','he2','you3','wo3'], x)))
+                       AS n_stop
+            FROM t
+        ),
+        r AS (
+            SELECT doc_id{carry}, n_chars_m, n_tokens,
+                   floor(n_punct / greatest(n_chars_m, 1)::DOUBLE * 10000.0 + 0.5)
+                       / 10000.0 AS punct_ratio,
+                   floor(n_stop / greatest(n_tokens, 1)::DOUBLE * 10000.0 + 0.5)
+                       / 10000.0 AS stop_ratio,
+                   least(n_tokens::DOUBLE / 100.0, 1.0) AS length_term
+            FROM s
+        )"""
+
+
+# The q30 composite over an ``r`` row of _quality_ctes, pround-4.
+_QUALITY = """floor((0.5 * length_term + 0.3 * (1.0 - punct_ratio)
+                     + 0.2 * stop_ratio) * 10000.0 + 0.5) / 10000.0"""
+
+
+def _textfacts_sql(src: str) -> str:
+    """The q34 fact extractor over ``src(doc_id, text)``: positional
+    tokens, value+unit tokens paired with the nearest following year,
+    signed by the nearest preceding trend word within 25 tokens. Ends
+    in the final SELECT."""
+    return f"""toks AS (
+            SELECT doc_id,
+                   generate_subscripts(arr, 1) - 1 AS pos,
+                   unnest(arr) AS tok
+            FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS arr
+                  FROM {src})
+        ),
+        toks2 AS (
+            SELECT *, lead(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS next_tok
+            FROM toks
+        ),
+        vals AS (
+            SELECT doc_id, pos AS v_pos,
+                   tok || CASE WHEN coalesce(
+                                   regexp_matches(next_tok, '^(?:%|\\$|bbl|dollars|millions)$'),
+                                   false)
+                               AND NOT regexp_matches(tok, '(?:%|\\$|bbl)$')
+                          THEN ' ' || next_tok ELSE '' END AS value_text
+            FROM toks2
+            WHERE regexp_matches(tok, '^[0-9]+(?:[.,][0-9]+)?(?:%|\\$|bbl)?$')
+              AND NOT regexp_matches(tok, '^(?:1[89][0-9]{{2}}|20[0-9]{{2}})$')
+              AND (regexp_matches(tok, '(?:%|\\$|bbl)$')
+                   OR coalesce(regexp_matches(next_tok, '^(?:%|\\$|bbl|dollars|millions)$'), false))
+        ),
+        years AS (
+            SELECT doc_id, pos AS y_pos, tok AS year FROM toks
+            WHERE regexp_matches(tok, '^(?:1[89][0-9]{{2}}|20[0-9]{{2}})$')
+        ),
+        paired AS (
+            SELECT * FROM (
+                SELECT v.doc_id, v.v_pos, v.value_text, y.year,
+                       row_number() OVER (PARTITION BY v.doc_id, v.v_pos
+                           ORDER BY y.y_pos - v.v_pos, y.y_pos) AS rn
+                FROM vals v JOIN years y
+                  ON v.doc_id = y.doc_id AND y.y_pos >= v.v_pos
+            ) WHERE rn = 1
+        ),
+        sents AS (
+            SELECT doc_id, pos AS s_pos,
+                   CASE WHEN lower(tok) IN
+                       ('hausse','augmentation','appreciation','excedent','accroissement')
+                   THEN '+' ELSE '-' END AS sign
+            FROM toks
+            WHERE lower(tok) IN ('hausse','augmentation','appreciation',
+                                 'excedent','accroissement',
+                                 'baisse','diminution','deficit')
+        ),
+        signed AS (
+            SELECT * FROM (
+                SELECT p.doc_id, p.v_pos, p.value_text, p.year,
+                       CASE WHEN s.s_pos < p.v_pos AND p.v_pos - s.s_pos <= 25
+                            THEN s.sign END AS sign,
+                       row_number() OVER (PARTITION BY p.doc_id, p.v_pos
+                           ORDER BY CASE WHEN s.s_pos < p.v_pos
+                                          AND p.v_pos - s.s_pos <= 25
+                                     THEN p.v_pos - s.s_pos
+                                     ELSE 1000000 END) AS srn
+                FROM paired p LEFT JOIN sents s ON p.doc_id = s.doc_id
+            ) WHERE srn = 1
+        )
+        SELECT doc_id, year,
+               coalesce(sign, '') || value_text AS signed_value,
+               CAST(v_pos AS BIGINT) AS v_pos
+        FROM signed ORDER BY doc_id, v_pos"""
+
+
+def _shingle_ctes(src: str = "documents", carry: str = "") -> str:
+    """d/sh0/sh: the DISTINCT word 3-shingles of every ``src`` doc (a
+    doc under 3 tokens is one shingle). ``carry`` (``", col"``) rides
+    along after doc_id."""
+    return f"""
+    d AS (
+        SELECT doc_id{carry}, regexp_split_to_array(trim(text), '\\s+') AS toks
+        FROM {src}
     ),
     sh0 AS (
-        SELECT doc_id,
+        SELECT doc_id{carry},
                unnest(CASE WHEN len(toks) >= 3
                       THEN list_transform(range(len(toks) - 2),
                            i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])
                       ELSE [array_to_string(toks, ' ')] END) AS shingle
         FROM d
     ),
-    sh AS (SELECT DISTINCT doc_id, shingle FROM sh0 WHERE shingle <> ''),
+    sh AS (SELECT DISTINCT doc_id{carry}, shingle FROM sh0 WHERE shingle <> '')"""
+
+
+def _minhash_ctes(src: str = "documents") -> str:
+    """_shingle_ctes + sig/band/cand: 8 md5 minhashes per doc, 4 bands
+    of 2, and the symmetric (id_a < id_b) shared-band candidates."""
+    return (
+        _shingle_ctes(src)
+        + """,
     sig AS (
         SELECT s.doc_id, hs.h,
                min(substr(md5((hs.h // CAST(4 AS BIGINT))::VARCHAR || ':' || s.shingle),
@@ -6794,6 +6970,73 @@ _SHINGLE_CTE = """
         FROM band a JOIN band b
           ON a.band = b.band AND a.bandsig = b.bandsig AND a.doc_id < b.doc_id
     )
+"""
+    )
+
+
+def _jaccard_ok(x: str, y: str) -> str:
+    """Exact shingle-set Jaccard of the ``sets`` rows ``x``, ``y`` >= 0.5."""
+    return f"""len(list_intersect({x}.shs, {y}.shs))::DOUBLE
+              / (len({x}.shs) + len({y}.shs)
+                 - len(list_intersect({x}.shs, {y}.shs)))::DOUBLE >= 0.5"""
+
+
+# Each doc's sorted shingle set (needs ``sh``).
+_SETS_CTE = """sets AS (
+        SELECT doc_id, list_sort(list(DISTINCT shingle)) AS shs
+        FROM sh GROUP BY doc_id
+    )"""
+
+# The MinHash ladder's verify: candidates whose exact Jaccard passes.
+_VERIFIED_CTE = f"""{_SETS_CTE},
+    verified AS (
+        SELECT c.id_a, c.id_b
+        FROM cand c
+        JOIN sets a ON a.doc_id = c.id_a
+        JOIN sets b ON b.doc_id = c.id_b
+        WHERE {_jaccard_ok("a", "b")}
+    )"""
+
+# q102/q141 gate: batch docs (doc_id % 5 = 0) with a verified near-dup
+# in the corpus (the rest), as ``dup(bid)``.
+_GATE_DUP_CTE = f"""{_SETS_CTE},
+    cand2 AS (
+        SELECT DISTINCT b.doc_id AS bid, a.doc_id AS cid
+        FROM band b JOIN band a
+          ON a.band = b.band AND a.bandsig = b.bandsig
+        WHERE b.doc_id % 5 = 0 AND a.doc_id % 5 <> 0
+    ),
+    dup AS (
+        SELECT DISTINCT c.bid FROM cand2 c
+        JOIN sets x ON x.doc_id = c.bid
+        JOIN sets y ON y.doc_id = c.cid
+        WHERE {_jaccard_ok("x", "y")}
+    )"""
+
+
+def _components_ctes(pairs: str) -> str:
+    """edges/nodes/reach/comp: connected components of the undirected
+    ``pairs(id_a, id_b)`` graph, each node labelled with the lowest id
+    it reaches (``comp(id, cluster_id)``; needs WITH RECURSIVE)."""
+    return f"""edges AS (
+        SELECT id_a AS src, id_b AS dst FROM {pairs}
+        UNION ALL
+        SELECT id_b AS src, id_a AS dst FROM {pairs}
+    ),
+    nodes AS (SELECT DISTINCT src AS id FROM edges),
+    reach(id, r) AS (
+        SELECT id, id FROM nodes
+        UNION
+        SELECT e.src, re.r FROM edges e JOIN reach re ON re.id = e.dst
+    ),
+    comp AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)"""
+
+
+# Every clustered node with its cluster and the cluster's size.
+_CLUSTERS_SELECT = """
+    SELECT id AS doc_id, cluster_id,
+           count(*) OVER (PARTITION BY cluster_id) AS cluster_size
+    FROM comp ORDER BY doc_id
 """
 
 ORACLE: dict[str, str] = {
@@ -6835,17 +7078,8 @@ ORACLE: dict[str, str] = {
                         AND o.o_orderstatus = 'O')
         ORDER BY c_custkey
     """,
-    "q07_asof_join": """
-        WITH ranked AS (
-            SELECT o.o_orderkey, o.o_custkey, o.o_orderdate, e.ts, e.event_type,
-                   row_number() OVER (
-                       PARTITION BY o.o_orderkey
-                       ORDER BY e.ts DESC NULLS LAST, e.event_id DESC NULLS LAST
-                   ) AS rn
-            FROM orders o
-            LEFT JOIN events e
-              ON e.user_id = o.o_custkey AND e.ts <= o.o_orderdate
-        )
+    "q07_asof_join": f"""
+        WITH {_ASOF_RANKED}
         SELECT o_orderkey, o_custkey,
                strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS order_ts,
                strftime(ts, '%Y-%m-%d %H:%M:%S') AS event_ts,
@@ -7050,11 +7284,11 @@ ORACLE: dict[str, str] = {
         GROUP BY cell_row, cell_col ORDER BY cell_row, cell_col
     """,
     "q25_minhash_candidates": f"""
-        WITH {_SHINGLE_CTE}
+        WITH {_minhash_ctes()}
         SELECT id_a, id_b FROM cand ORDER BY id_a, id_b
     """,
     "q26_jaccard_neardup": f"""
-        WITH {_SHINGLE_CTE},
+        WITH {_minhash_ctes()},
         sets AS (
             SELECT doc_id, list_sort(list(DISTINCT shingle)) AS shs
             FROM sh GROUP BY doc_id
@@ -7150,40 +7384,11 @@ ORACLE: dict[str, str] = {
                mx::INT AS lid_score
         FROM m ORDER BY doc_id
     """,
-    "q30_quality_score": """
-        WITH t AS (
-            SELECT doc_id, text,
-                   regexp_split_to_array(trim(text), '\\s+') AS toks
-            FROM documents
-        ),
-        s AS (
-            SELECT doc_id,
-                   length(text) AS n_chars_m,
-                   len(toks) AS n_tokens,
-                   len(regexp_extract_all(text, '[^\\w\\s]')) AS n_punct,
-                   len(list_filter(list_transform(toks, x -> lower(x)),
-                       x -> list_contains(
-                           ['the','a','of','and','to','in','is',
-                            'le','la','et','les','des','un','une',
-                            'el','y','los','de','una',
-                            'der','die','das','und','ein','zu','von',
-                            'de5','shi4','le5','zai4','he2','you3','wo3'], x)))
-                       AS n_stop
-            FROM t
-        ),
-        r AS (
-            SELECT doc_id, n_chars_m, n_tokens,
-                   floor(n_punct / greatest(n_chars_m, 1)::DOUBLE * 10000.0 + 0.5)
-                       / 10000.0 AS punct_ratio,
-                   floor(n_stop / greatest(n_tokens, 1)::DOUBLE * 10000.0 + 0.5)
-                       / 10000.0 AS stop_ratio,
-                   least(n_tokens::DOUBLE / 100.0, 1.0) AS length_term
-            FROM s
-        )
+    "q30_quality_score": f"""
+        WITH {_quality_ctes()}
         SELECT doc_id, n_chars_m::BIGINT AS n_chars_m, n_tokens::BIGINT AS n_tokens,
                punct_ratio, stop_ratio,
-               floor((0.5 * length_term + 0.3 * (1.0 - punct_ratio)
-                     + 0.2 * stop_ratio) * 10000.0 + 0.5) / 10000.0 AS quality
+               {_QUALITY} AS quality
         FROM r ORDER BY doc_id
     """,
     "q31_fingerprint": """
@@ -7197,70 +7402,7 @@ ORACLE: dict[str, str] = {
         WITH docs AS (
             SELECT doc_id, {FACTS_CORPUS_EXPR} AS text FROM documents
         ),
-        toks AS (
-            SELECT doc_id,
-                   generate_subscripts(arr, 1) - 1 AS pos,
-                   unnest(arr) AS tok
-            FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS arr
-                  FROM docs)
-        ),
-        toks2 AS (
-            SELECT *, lead(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS next_tok
-            FROM toks
-        ),
-        vals AS (
-            SELECT doc_id, pos AS v_pos,
-                   tok || CASE WHEN coalesce(
-                                   regexp_matches(next_tok, '^(?:%|\\$|bbl|dollars|millions)$'),
-                                   false)
-                               AND NOT regexp_matches(tok, '(?:%|\\$|bbl)$')
-                          THEN ' ' || next_tok ELSE '' END AS value_text
-            FROM toks2
-            WHERE regexp_matches(tok, '^[0-9]+(?:[.,][0-9]+)?(?:%|\\$|bbl)?$')
-              AND NOT regexp_matches(tok, '^(?:1[89][0-9]{{2}}|20[0-9]{{2}})$')
-              AND (regexp_matches(tok, '(?:%|\\$|bbl)$')
-                   OR coalesce(regexp_matches(next_tok, '^(?:%|\\$|bbl|dollars|millions)$'), false))
-        ),
-        years AS (
-            SELECT doc_id, pos AS y_pos, tok AS year FROM toks
-            WHERE regexp_matches(tok, '^(?:1[89][0-9]{{2}}|20[0-9]{{2}})$')
-        ),
-        paired AS (
-            SELECT * FROM (
-                SELECT v.doc_id, v.v_pos, v.value_text, y.year,
-                       row_number() OVER (PARTITION BY v.doc_id, v.v_pos
-                           ORDER BY y.y_pos - v.v_pos, y.y_pos) AS rn
-                FROM vals v JOIN years y
-                  ON v.doc_id = y.doc_id AND y.y_pos >= v.v_pos
-            ) WHERE rn = 1
-        ),
-        sents AS (
-            SELECT doc_id, pos AS s_pos,
-                   CASE WHEN lower(tok) IN
-                       ('hausse','augmentation','appreciation','excedent','accroissement')
-                   THEN '+' ELSE '-' END AS sign
-            FROM toks
-            WHERE lower(tok) IN ('hausse','augmentation','appreciation',
-                                 'excedent','accroissement',
-                                 'baisse','diminution','deficit')
-        ),
-        signed AS (
-            SELECT * FROM (
-                SELECT p.doc_id, p.v_pos, p.value_text, p.year,
-                       CASE WHEN s.s_pos < p.v_pos AND p.v_pos - s.s_pos <= 25
-                            THEN s.sign END AS sign,
-                       row_number() OVER (PARTITION BY p.doc_id, p.v_pos
-                           ORDER BY CASE WHEN s.s_pos < p.v_pos
-                                          AND p.v_pos - s.s_pos <= 25
-                                     THEN p.v_pos - s.s_pos
-                                     ELSE 1000000 END) AS srn
-                FROM paired p LEFT JOIN sents s ON p.doc_id = s.doc_id
-            ) WHERE srn = 1
-        )
-        SELECT doc_id, year,
-               coalesce(sign, '') || value_text AS signed_value,
-               CAST(v_pos AS BIGINT) AS v_pos
-        FROM signed ORDER BY doc_id, v_pos
+        {_textfacts_sql("docs")}
     """,
     "q35_deplot_parse": """
         SELECT r_regionkey AS chart_id,
@@ -7455,70 +7597,7 @@ ORACLE: dict[str, str] = {
                       FROM chosen)
             )
         ),
-        toks AS (
-            SELECT doc_id,
-                   generate_subscripts(arr, 1) - 1 AS pos,
-                   unnest(arr) AS tok
-            FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS arr
-                  FROM trimmedt)
-        ),
-        toks2 AS (
-            SELECT *, lead(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS next_tok
-            FROM toks
-        ),
-        vals AS (
-            SELECT doc_id, pos AS v_pos,
-                   tok || CASE WHEN coalesce(
-                                   regexp_matches(next_tok, '^(?:%|\\$|bbl|dollars|millions)$'),
-                                   false)
-                               AND NOT regexp_matches(tok, '(?:%|\\$|bbl)$')
-                          THEN ' ' || next_tok ELSE '' END AS value_text
-            FROM toks2
-            WHERE regexp_matches(tok, '^[0-9]+(?:[.,][0-9]+)?(?:%|\\$|bbl)?$')
-              AND NOT regexp_matches(tok, '^(?:1[89][0-9]{{2}}|20[0-9]{{2}})$')
-              AND (regexp_matches(tok, '(?:%|\\$|bbl)$')
-                   OR coalesce(regexp_matches(next_tok, '^(?:%|\\$|bbl|dollars|millions)$'), false))
-        ),
-        years AS (
-            SELECT doc_id, pos AS y_pos, tok AS year FROM toks
-            WHERE regexp_matches(tok, '^(?:1[89][0-9]{{2}}|20[0-9]{{2}})$')
-        ),
-        paired AS (
-            SELECT * FROM (
-                SELECT v.doc_id, v.v_pos, v.value_text, y.year,
-                       row_number() OVER (PARTITION BY v.doc_id, v.v_pos
-                           ORDER BY y.y_pos - v.v_pos, y.y_pos) AS rn
-                FROM vals v JOIN years y
-                  ON v.doc_id = y.doc_id AND y.y_pos >= v.v_pos
-            ) WHERE rn = 1
-        ),
-        sents AS (
-            SELECT doc_id, pos AS s_pos,
-                   CASE WHEN lower(tok) IN
-                       ('hausse','augmentation','appreciation','excedent','accroissement')
-                   THEN '+' ELSE '-' END AS sign
-            FROM toks
-            WHERE lower(tok) IN ('hausse','augmentation','appreciation',
-                                 'excedent','accroissement',
-                                 'baisse','diminution','deficit')
-        ),
-        signed AS (
-            SELECT * FROM (
-                SELECT p.doc_id, p.v_pos, p.value_text, p.year,
-                       CASE WHEN s.s_pos < p.v_pos AND p.v_pos - s.s_pos <= 25
-                            THEN s.sign END AS sign,
-                       row_number() OVER (PARTITION BY p.doc_id, p.v_pos
-                           ORDER BY CASE WHEN s.s_pos < p.v_pos
-                                          AND p.v_pos - s.s_pos <= 25
-                                     THEN p.v_pos - s.s_pos
-                                     ELSE 1000000 END) AS srn
-                FROM paired p LEFT JOIN sents s ON p.doc_id = s.doc_id
-            ) WHERE srn = 1
-        )
-        SELECT doc_id, year,
-               coalesce(sign, '') || value_text AS signed_value,
-               CAST(v_pos AS BIGINT) AS v_pos
-        FROM signed ORDER BY doc_id, v_pos
+        {_textfacts_sql("trimmedt")}
     """,
     "q45_tfidf_topterms": """
         WITH toks AS (
@@ -7583,43 +7662,9 @@ ORACLE: dict[str, str] = {
         SELECT doc_id, canon_hash, n_dups::BIGINT AS n_dups
         FROM h WHERE rn = 1 ORDER BY doc_id
     """,
-    "q48_source_quota": """
-        WITH t AS (
-            SELECT doc_id, source,
-                   regexp_split_to_array(trim(text), '\\s+') AS toks,
-                   length(text) AS n_chars_m,
-                   text
-            FROM documents
-        ),
-        s AS (
-            SELECT doc_id, source, n_chars_m,
-                   len(toks) AS n_tokens,
-                   len(regexp_extract_all(text, '[^\\w\\s]')) AS n_punct,
-                   len(list_filter(list_transform(toks, x -> lower(x)),
-                       x -> list_contains(
-                           ['the','a','of','and','to','in','is',
-                            'le','la','et','les','des','un','une',
-                            'el','y','los','de','una',
-                            'der','die','das','und','ein','zu','von',
-                            'de5','shi4','le5','zai4','he2','you3','wo3'], x)))
-                       AS n_stop
-            FROM t
-        ),
-        r AS (
-            SELECT doc_id, source,
-                   floor(n_punct / greatest(n_chars_m, 1)::DOUBLE * 10000.0 + 0.5)
-                       / 10000.0 AS punct_ratio,
-                   floor(n_stop / greatest(n_tokens, 1)::DOUBLE * 10000.0 + 0.5)
-                       / 10000.0 AS stop_ratio,
-                   least(n_tokens::DOUBLE / 100.0, 1.0) AS length_term
-            FROM s
-        ),
-        q AS (
-            SELECT doc_id, source,
-                   floor((0.5 * length_term + 0.3 * (1.0 - punct_ratio)
-                         + 0.2 * stop_ratio) * 10000.0 + 0.5) / 10000.0 AS quality
-            FROM r
-        ),
+    "q48_source_quota": f"""
+        WITH {_quality_ctes(carry=", source")},
+        q AS (SELECT doc_id, source, {_QUALITY} AS quality FROM r),
         ranked AS (
             SELECT *, row_number() OVER (PARTITION BY source
                        ORDER BY quality DESC, doc_id) AS rk
@@ -7628,20 +7673,8 @@ ORACLE: dict[str, str] = {
         SELECT source, doc_id, quality FROM ranked
         WHERE rk <= 10 ORDER BY source, quality DESC, doc_id
     """,
-    "q49_decontaminate": """
-        WITH d AS (
-            SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-            FROM documents
-        ),
-        sh0 AS (
-            SELECT doc_id,
-                   unnest(CASE WHEN len(toks) >= 3
-                          THEN list_transform(range(len(toks) - 2),
-                               i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])
-                          ELSE [array_to_string(toks, ' ')] END) AS shingle
-            FROM d
-        ),
-        sh AS (SELECT DISTINCT doc_id, shingle FROM sh0 WHERE shingle <> ''),
+    "q49_decontaminate": f"""
+        WITH {_shingle_ctes()},
         probe AS (
             SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0
         ),
@@ -7673,35 +7706,10 @@ ORACLE: dict[str, str] = {
         FROM w ORDER BY source, doc_id
     """,
     "q51_dedup_clusters": f"""
-        WITH RECURSIVE {_SHINGLE_CTE},
-        sets AS (
-            SELECT doc_id, list_sort(list(DISTINCT shingle)) AS shs
-            FROM sh GROUP BY doc_id
-        ),
-        verified AS (
-            SELECT c.id_a, c.id_b
-            FROM cand c
-            JOIN sets a ON a.doc_id = c.id_a
-            JOIN sets b ON b.doc_id = c.id_b
-            WHERE len(list_intersect(a.shs, b.shs))::DOUBLE
-                  / (len(a.shs) + len(b.shs)
-                     - len(list_intersect(a.shs, b.shs)))::DOUBLE >= 0.5
-        ),
-        edges AS (
-            SELECT id_a AS src, id_b AS dst FROM verified
-            UNION ALL
-            SELECT id_b AS src, id_a AS dst FROM verified
-        ),
-        nodes AS (SELECT DISTINCT src AS id FROM edges),
-        reach(id, r) AS (
-            SELECT id, id FROM nodes
-            UNION
-            SELECT e.src, re.r FROM edges e JOIN reach re ON re.id = e.dst
-        ),
-        comp AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)
-        SELECT id AS doc_id, cluster_id,
-               count(*) OVER (PARTITION BY cluster_id) AS cluster_size
-        FROM comp ORDER BY doc_id
+        WITH RECURSIVE {_minhash_ctes()},
+        {_VERIFIED_CTE},
+        {_components_ctes("verified")}
+        {_CLUSTERS_SELECT}
     """,
     "q52_repetition": """
         WITH t AS (
@@ -7776,17 +7784,8 @@ ORACLE: dict[str, str] = {
         FROM pairs WHERE tok <> ''
         GROUP BY tok ORDER BY tok
     """,
-    "q56_asof_tolerance": """
-        WITH ranked AS (
-            SELECT o.o_orderkey, o.o_custkey, o.o_orderdate, e.ts, e.event_type,
-                   row_number() OVER (
-                       PARTITION BY o.o_orderkey
-                       ORDER BY e.ts DESC NULLS LAST, e.event_id DESC NULLS LAST
-                   ) AS rn
-            FROM orders o
-            LEFT JOIN events e
-              ON e.user_id = o.o_custkey AND e.ts <= o.o_orderdate
-        )
+    "q56_asof_tolerance": f"""
+        WITH {_ASOF_RANKED}
         SELECT o_orderkey, o_custkey,
                strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS order_ts,
                CASE WHEN ts IS NOT NULL
@@ -8113,7 +8112,7 @@ ORACLE: dict[str, str] = {
           ON d.user_id = c.user_id AND d.day = c.day
         ORDER BY c.user_id, day
     """,
-    "q79_curation_pipeline": """
+    "q79_curation_pipeline": f"""
         -- The q21/q49/q30/q48/q41 ladder composed end-to-end.
         WITH dedup AS (  -- stage 1: exact dedup, lowest id per md5(text)
             SELECT doc_id, text, source FROM (
@@ -8123,19 +8122,8 @@ ORACLE: dict[str, str] = {
                 FROM documents
             ) WHERE rn = 1
         ),
-        dtoks AS (
-            SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-            FROM dedup
-        ),
-        sh0 AS (         -- stage 2: word 3-gram shingles of survivors
-            SELECT doc_id,
-                   unnest(CASE WHEN len(toks) >= 3
-                          THEN list_transform(range(len(toks) - 2),
-                               i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])
-                          ELSE [array_to_string(toks, ' ')] END) AS shingle
-            FROM dtoks
-        ),
-        sh AS (SELECT DISTINCT doc_id, shingle FROM sh0 WHERE shingle <> ''),
+        -- stage 2: word 3-gram shingles of survivors
+        {_shingle_ctes("dedup")},
         probe AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0),
         clean AS (
             SELECT d.* FROM dedup d
@@ -8143,36 +8131,9 @@ ORACLE: dict[str, str] = {
                 SELECT DISTINCT doc_id FROM sh
                 WHERE shingle IN (SELECT shingle FROM probe))
         ),
-        t AS (           -- stage 3: quality composite on clean docs
-            SELECT doc_id, source, text,
-                   regexp_split_to_array(trim(text), '\\s+') AS toks,
-                   length(text) AS n_chars_m
-            FROM clean
-        ),
-        s AS (
-            SELECT doc_id, source, n_chars_m,
-                   len(toks) AS n_tokens,
-                   len(regexp_extract_all(text, '[^\\w\\s]')) AS n_punct,
-                   len(list_filter(list_transform(toks, x -> lower(x)),
-                       x -> list_contains(
-                           ['the','a','of','and','to','in','is',
-                            'le','la','et','les','des','un','une',
-                            'el','y','los','de','una',
-                            'der','die','das','und','ein','zu','von',
-                            'de5','shi4','le5','zai4','he2','you3','wo3'], x)))
-                       AS n_stop
-            FROM t
-        ),
-        q AS (
-            SELECT doc_id, source,
-                   floor((0.5 * least(n_tokens::DOUBLE / 100.0, 1.0)
-                        + 0.3 * (1.0 - floor(n_punct / greatest(n_chars_m, 1)::DOUBLE
-                                             * 10000.0 + 0.5) / 10000.0)
-                        + 0.2 * floor(n_stop / greatest(n_tokens, 1)::DOUBLE
-                                      * 10000.0 + 0.5) / 10000.0)
-                       * 10000.0 + 0.5) / 10000.0 AS quality
-            FROM s
-        ),
+        -- stage 3: quality composite on clean docs
+        {_quality_ctes("clean", ", source")},
+        q AS (SELECT doc_id, source, {_QUALITY} AS quality FROM r),
         capped AS (      -- stage 4: per-source quota, 15 best
             SELECT doc_id, source, quality FROM (
                 SELECT *, row_number() OVER (PARTITION BY source
@@ -8235,20 +8196,8 @@ ORACLE: dict[str, str] = {
                                    ORDER BY pos), '') AS clean_text
         FROM j GROUP BY doc_id ORDER BY doc_id
     """,
-    "q82_contamination_score": """
-        WITH d AS (
-            SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-            FROM documents
-        ),
-        sh0 AS (
-            SELECT doc_id,
-                   unnest(CASE WHEN len(toks) >= 3
-                          THEN list_transform(range(len(toks) - 2),
-                               i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])
-                          ELSE [array_to_string(toks, ' ')] END) AS shingle
-            FROM d
-        ),
-        sh AS (SELECT DISTINCT doc_id, shingle FROM sh0 WHERE shingle <> ''),
+    "q82_contamination_score": f"""
+        WITH {_shingle_ctes()},
         probe AS (
             SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0
         ),
@@ -8344,34 +8293,9 @@ ORACLE: dict[str, str] = {
         FROM w WHERE cum_tokens <= 300 ORDER BY doc_id
     """,
     "q86_dedup_corpus": f"""
-        WITH RECURSIVE {_SHINGLE_CTE},
-        sets AS (
-            SELECT doc_id, list_sort(list(DISTINCT shingle)) AS shs
-            FROM sh GROUP BY doc_id
-        ),
-        verified AS (
-            SELECT c.id_a, c.id_b
-            FROM cand c
-            JOIN sets a ON a.doc_id = c.id_a
-            JOIN sets b ON b.doc_id = c.id_b
-            WHERE len(list_intersect(a.shs, b.shs))::DOUBLE
-                  / (len(a.shs) + len(b.shs)
-                     - len(list_intersect(a.shs, b.shs)))::DOUBLE >= 0.5
-        ),
-        edges AS (
-            SELECT id_a AS src, id_b AS dst FROM verified
-            UNION ALL
-            SELECT id_b AS src, id_a AS dst FROM verified
-        ),
-        nodes AS (SELECT DISTINCT src AS id FROM edges),
-        reach(id, r) AS (
-            SELECT id, id FROM nodes
-            UNION
-            SELECT e.src, re.r FROM edges e JOIN reach re ON re.id = e.dst
-        ),
-        comp AS (
-            SELECT id, min(r) AS cluster_id FROM reach GROUP BY id
-        ),
+        WITH RECURSIVE {_minhash_ctes()},
+        {_VERIFIED_CTE},
+        {_components_ctes("verified")},
         sized AS (
             SELECT id, cluster_id,
                    count(*) OVER (PARTITION BY cluster_id) AS csize
@@ -8660,25 +8584,8 @@ ORACLE: dict[str, str] = {
         WHERE abs(value - ewma_prev) > 150.0
         ORDER BY event_id
     """,
-    "q97_chunk_documents": """
-        WITH t AS (
-            SELECT doc_id,
-                   list_filter(
-                       regexp_split_to_array(trim(text), '\\s+'),
-                       x -> x <> '') AS toks
-            FROM documents
-        ), c AS (
-            SELECT doc_id, toks,
-                   CASE WHEN len(toks) <= 32 THEN 1
-                        ELSE CAST(floor((len(toks) - 32 + 23) / 24)
-                                  AS BIGINT) + 1
-                   END AS nc
-            FROM t
-        ), g AS (
-            SELECT doc_id, toks,
-                   unnest(generate_series(0, nc - 1)) AS chunk_id
-            FROM c
-        )
+    "q97_chunk_documents": f"""
+        WITH {_CHUNK_CTES}
         SELECT doc_id, chunk_id::BIGINT AS chunk_id,
                len(toks[chunk_id * 24 + 1 : chunk_id * 24 + 32])::BIGINT
                    AS n_chunk_toks,
@@ -8812,20 +8719,8 @@ ORACLE["q100_json_schema_infer"] = (
     """
 )
 
-ORACLE["q101_bloom_decontaminate"] = """
-    WITH d AS (
-        SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-        FROM documents
-    ),
-    sh0 AS (
-        SELECT doc_id,
-               unnest(CASE WHEN len(toks) >= 3
-                      THEN list_transform(range(len(toks) - 2),
-                           i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])
-                      ELSE [array_to_string(toks, ' ')] END) AS shingle
-        FROM d
-    ),
-    sh AS (SELECT DISTINCT doc_id, shingle FROM sh0 WHERE shingle <> ''),
+ORACLE["q101_bloom_decontaminate"] = f"""
+    WITH {_shingle_ctes()},
     probe AS (
         SELECT DISTINCT shingle FROM sh WHERE doc_id % 89 = 0
     ),
@@ -8866,25 +8761,8 @@ ORACLE["q101_bloom_decontaminate"] = """
 # symmetric `cand` leg goes unused) and adds the asymmetric
 # batch-vs-corpus candidate join + exact-Jaccard verify.
 ORACLE["q102_dedup_against"] = f"""
-    WITH {_SHINGLE_CTE},
-    sets AS (
-        SELECT doc_id, list_sort(list(DISTINCT shingle)) AS shs
-        FROM sh GROUP BY doc_id
-    ),
-    cand2 AS (
-        SELECT DISTINCT b.doc_id AS bid, a.doc_id AS cid
-        FROM band b JOIN band a
-          ON a.band = b.band AND a.bandsig = b.bandsig
-        WHERE b.doc_id % 5 = 0 AND a.doc_id % 5 <> 0
-    ),
-    dup AS (
-        SELECT DISTINCT c.bid FROM cand2 c
-        JOIN sets x ON x.doc_id = c.bid
-        JOIN sets y ON y.doc_id = c.cid
-        WHERE len(list_intersect(x.shs, y.shs))::DOUBLE
-              / (len(x.shs) + len(y.shs)
-                 - len(list_intersect(x.shs, y.shs)))::DOUBLE >= 0.5
-    )
+    WITH {_minhash_ctes()},
+    {_GATE_DUP_CTE}
     SELECT doc_id, n_chars::BIGINT AS n_chars
     FROM documents
     WHERE doc_id % 5 = 0 AND doc_id NOT IN (SELECT bid FROM dup)
@@ -9173,18 +9051,16 @@ ORACLE["q113_attribution"] = """
                coalesce(first_value(
                    CASE WHEN event_type <> 'purchase'
                         THEN event_type END IGNORE NULLS
-               ) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-               ), 'direct') AS ft,
+               ) OVER earlier, 'direct') AS ft,
                coalesce(last_value(
                    CASE WHEN event_type <> 'purchase'
                         THEN event_type END IGNORE NULLS
-               ) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-               ), 'direct') AS lt
+               ) OVER earlier, 'direct') AS lt
         FROM events
+        WINDOW earlier AS (
+            PARTITION BY user_id ORDER BY ts, event_id
+            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+        )
     ),
     conv AS (SELECT ft, lt FROM touched WHERE event_type = 'purchase'),
     f AS (
@@ -9477,24 +9353,8 @@ ORACLE["q121_pii_report"] = f"""
     FROM counted GROUP BY segment ORDER BY segment
 """
 
-ORACLE["q122_snapshot_novelty"] = """
-    WITH d AS (
-        SELECT doc_id, source,
-               regexp_split_to_array(trim(text), '\\s+') AS toks
-        FROM documents
-    ),
-    sh0 AS (
-        SELECT doc_id, source,
-               unnest(CASE WHEN len(toks) >= 3
-                      THEN list_transform(range(len(toks) - 2),
-                           i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])
-                      ELSE [array_to_string(toks, ' ')] END) AS shingle
-        FROM d
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id, source, shingle FROM sh0
-        WHERE shingle <> ''
-    ),
+ORACLE["q122_snapshot_novelty"] = f"""
+    WITH {_shingle_ctes(carry=", source")},
     old_sh AS (
         SELECT DISTINCT shingle FROM sh WHERE doc_id % 2 = 0
     ),
@@ -9635,23 +9495,9 @@ ORACLE["q128_equidepth_hist"] = """
 """
 
 
-ORACLE["q130_source_overlap"] = """
-    WITH d AS (
-        SELECT doc_id, source,
-               regexp_split_to_array(trim(text), '\\s+') AS toks
-        FROM documents
-    ),
-    sh0 AS (
-        SELECT doc_id, source,
-               unnest(CASE WHEN len(toks) >= 3
-                      THEN list_transform(range(len(toks) - 2),
-                           i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])
-                      ELSE [array_to_string(toks, ' ')] END) AS shingle
-        FROM d
-    ),
-    ss AS (
-        SELECT DISTINCT source, shingle FROM sh0 WHERE shingle <> ''
-    ),
+ORACLE["q130_source_overlap"] = f"""
+    WITH {_shingle_ctes(carry=", source")},
+    ss AS (SELECT DISTINCT source, shingle FROM sh),
     sizes AS (
         SELECT source, count(*)::BIGINT AS n_sh FROM ss GROUP BY source
     ),
@@ -9672,32 +9518,9 @@ ORACLE["q130_source_overlap"] = """
 """
 
 ORACLE["q131_cluster_safe_split"] = f"""
-    WITH RECURSIVE {_SHINGLE_CTE},
-    sets AS (
-        SELECT doc_id, list_sort(list(DISTINCT shingle)) AS shs
-        FROM sh GROUP BY doc_id
-    ),
-    verified AS (
-        SELECT c.id_a, c.id_b
-        FROM cand c
-        JOIN sets a ON a.doc_id = c.id_a
-        JOIN sets b ON b.doc_id = c.id_b
-        WHERE len(list_intersect(a.shs, b.shs))::DOUBLE
-              / (len(a.shs) + len(b.shs)
-                 - len(list_intersect(a.shs, b.shs)))::DOUBLE >= 0.5
-    ),
-    edges AS (
-        SELECT id_a AS src, id_b AS dst FROM verified
-        UNION ALL
-        SELECT id_b AS src, id_a AS dst FROM verified
-    ),
-    nodes AS (SELECT DISTINCT src AS id FROM edges),
-    reach(id, r) AS (
-        SELECT id, id FROM nodes
-        UNION
-        SELECT e.src, re.r FROM edges e JOIN reach re ON re.id = e.dst
-    ),
-    comp AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
+    WITH RECURSIVE {_minhash_ctes()},
+    {_VERIFIED_CTE},
+    {_components_ctes("verified")},
     fam AS (
         SELECT d2.doc_id,
                coalesce(c.cluster_id, d2.doc_id) AS family
@@ -9776,20 +9599,8 @@ ORACLE["q134_new_vs_returning"] = '''
 '''
 
 ORACLE["q135_dup_source_mix"] = f"""
-    WITH {_SHINGLE_CTE},
-    sets AS (
-        SELECT doc_id, list_sort(list(DISTINCT shingle)) AS shs
-        FROM sh GROUP BY doc_id
-    ),
-    verified AS (
-        SELECT c.id_a, c.id_b
-        FROM cand c
-        JOIN sets a ON a.doc_id = c.id_a
-        JOIN sets b ON b.doc_id = c.id_b
-        WHERE len(list_intersect(a.shs, b.shs))::DOUBLE
-              / (len(a.shs) + len(b.shs)
-                 - len(list_intersect(a.shs, b.shs)))::DOUBLE >= 0.5
-    )
+    WITH {_minhash_ctes()},
+    {_VERIFIED_CTE}
     SELECT (da.source = db.source) AS intra_source,
            count(*)::BIGINT AS n_pairs
     FROM verified v
@@ -9815,6 +9626,37 @@ def _q140_replace_chain(expr: str) -> str:
     return expr
 
 
+# A word ``w`` as separator-wrapped character symbols plus the
+# end-of-word marker: the BPE input form.
+_BPE_SYMBOLS = """array_to_string(
+                 list_transform(string_split(w, ''),
+                                c -> chr(31) || c || chr(31)),
+                 '') || chr(31) || '</w>' || chr(31)"""
+
+
+def _bpe_count_ctes(src: str, key: str) -> str:
+    """bw0/bw/bs/bm/nt: every word of ``src(key, text)`` through the
+    q140 merge chain, subwords summed per ``key`` as
+    ``nt(key, n_subtoks)``; ``bw(key, w)`` holds the words."""
+    return f"""bw0 AS (
+        SELECT {key},
+               unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
+        FROM {src}
+    ),
+    bw AS (
+        SELECT {key}, replace(w, chr(31), '') AS w
+        FROM bw0 WHERE len(w) > 0
+    ),
+    bs AS (SELECT {key}, {_BPE_SYMBOLS} AS s FROM bw),
+    bm AS (SELECT {key}, {_q140_replace_chain('s')} AS s FROM bs),
+    nt AS (
+        SELECT {key},
+               sum(len(string_split(substring(s, 2, len(s) - 2),
+                                    chr(31) || chr(31))))::BIGINT AS n_subtoks
+        FROM bm GROUP BY {key}
+    )"""
+
+
 ORACLE["q140_bpe_tokenize"] = f"""
     WITH w0 AS (
         SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
@@ -9824,10 +9666,7 @@ ORACLE["q140_bpe_tokenize"] = f"""
         SELECT replace(w, chr(31), '') AS w FROM w0 WHERE len(w) > 0
     ),
     s AS (
-        SELECT array_to_string(
-                 list_transform(string_split(w, ''),
-                                c -> chr(31) || c || chr(31)),
-                 '') || chr(31) || '</w>' || chr(31) AS s
+        SELECT {_BPE_SYMBOLS} AS s
         FROM w
     ),
     m AS (SELECT {_q140_replace_chain('s')} AS s FROM s),
@@ -9845,90 +9684,19 @@ ORACLE["q140_bpe_tokenize"] = f"""
 # tokenizer + q85 budget oracles into one pipeline — each fragment is
 # the already-hash-green formula of its source query, verbatim.
 ORACLE["q141_ingest_pipeline"] = f"""
-    WITH {_SHINGLE_CTE},
-    sets AS (
-        SELECT doc_id, list_sort(list(DISTINCT shingle)) AS shs
-        FROM sh GROUP BY doc_id
-    ),
-    gate_cand AS (
-        SELECT DISTINCT b.doc_id AS bid, a.doc_id AS cid
-        FROM band b JOIN band a
-          ON a.band = b.band AND a.bandsig = b.bandsig
-        WHERE b.doc_id % 5 = 0 AND a.doc_id % 5 <> 0
-    ),
-    dup AS (
-        SELECT DISTINCT c.bid FROM gate_cand c
-        JOIN sets x ON x.doc_id = c.bid
-        JOIN sets y ON y.doc_id = c.cid
-        WHERE len(list_intersect(x.shs, y.shs))::DOUBLE
-              / (len(x.shs) + len(y.shs)
-                 - len(list_intersect(x.shs, y.shs)))::DOUBLE >= 0.5
-    ),
+    WITH {_minhash_ctes()},
+    {_GATE_DUP_CTE},
     fresh AS (
         SELECT doc_id, source, text FROM documents
         WHERE doc_id % 5 = 0 AND doc_id NOT IN (SELECT bid FROM dup)
     ),
-    qt AS (
-        SELECT doc_id, text,
-               regexp_split_to_array(trim(text), '\\s+') AS toks
-        FROM fresh
-    ),
-    qs AS (
-        SELECT doc_id,
-               length(text) AS n_chars_m,
-               len(toks) AS n_tokens,
-               len(regexp_extract_all(text, '[^\\w\\s]')) AS n_punct,
-               len(list_filter(list_transform(toks, x -> lower(x)),
-                   x -> list_contains(
-                       ['the','a','of','and','to','in','is',
-                        'le','la','et','les','des','un','une',
-                        'el','y','los','de','una',
-                        'der','die','das','und','ein','zu','von',
-                        'de5','shi4','le5','zai4','he2','you3','wo3'], x)))
-                   AS n_stop
-        FROM qt
-    ),
-    qr AS (
-        SELECT doc_id,
-               floor(n_punct / greatest(n_chars_m, 1)::DOUBLE * 10000.0 + 0.5)
-                   / 10000.0 AS punct_ratio,
-               floor(n_stop / greatest(n_tokens, 1)::DOUBLE * 10000.0 + 0.5)
-                   / 10000.0 AS stop_ratio,
-               least(n_tokens::DOUBLE / 100.0, 1.0) AS length_term
-        FROM qs
-    ),
+    {_quality_ctes("fresh")},
     kept AS (
-        SELECT doc_id,
-               floor((0.5 * length_term + 0.3 * (1.0 - punct_ratio)
-                     + 0.2 * stop_ratio) * 10000.0 + 0.5) / 10000.0 AS quality
-        FROM qr
-        WHERE floor((0.5 * length_term + 0.3 * (1.0 - punct_ratio)
-                    + 0.2 * stop_ratio) * 10000.0 + 0.5) / 10000.0 >= 0.6
+        SELECT doc_id, quality FROM (
+            SELECT doc_id, {_QUALITY} AS quality FROM r
+        ) WHERE quality >= 0.6
     ),
-    bw0 AS (
-        SELECT f.doc_id,
-               unnest(regexp_split_to_array(lower(trim(f.text)), '\\s+')) AS w
-        FROM fresh f JOIN kept k ON k.doc_id = f.doc_id
-    ),
-    bw AS (
-        SELECT doc_id, replace(w, chr(31), '') AS w
-        FROM bw0 WHERE len(w) > 0
-    ),
-    bs AS (
-        SELECT doc_id,
-               array_to_string(
-                 list_transform(string_split(w, ''),
-                                c -> chr(31) || c || chr(31)),
-                 '') || chr(31) || '</w>' || chr(31) AS s
-        FROM bw
-    ),
-    bm AS (SELECT doc_id, {_q140_replace_chain('s')} AS s FROM bs),
-    nt AS (
-        SELECT doc_id,
-               sum(len(string_split(substring(s, 2, len(s) - 2),
-                                    chr(31) || chr(31))))::BIGINT AS n_subtoks
-        FROM bm GROUP BY doc_id
-    ),
+    {_bpe_count_ctes("fresh WHERE doc_id IN (SELECT doc_id FROM kept)", "doc_id")},
     staged AS (
         SELECT k.doc_id, f.source, k.quality,
                coalesce(nt.n_subtoks, 0)::BIGINT AS n_subtoks
@@ -9958,24 +9726,8 @@ _Q142_QUERY_ROWS = ", ".join(
 )
 
 ORACLE["q142_chunk_retrieval"] = f"""
-    WITH t AS (
-        SELECT doc_id,
-               list_filter(
-                   regexp_split_to_array(trim(text), '\\s+'),
-                   x -> x <> '') AS toks
-        FROM documents
-    ), c0 AS (
-        SELECT doc_id, toks,
-               CASE WHEN len(toks) <= 32 THEN 1
-                    ELSE CAST(floor((len(toks) - 32 + 23) / 24)
-                              AS BIGINT) + 1
-               END AS nc
-        FROM t
-    ), g AS (
-        SELECT doc_id, toks,
-               unnest(generate_series(0, nc - 1)) AS chunk_id
-        FROM c0
-    ), ch AS (
+    WITH {_CHUNK_CTES},
+    ch AS (
         SELECT doc_id, chunk_id::BIGINT AS chunk_id,
                array_to_string(
                    toks[chunk_id * 24 + 1 : chunk_id * 24 + 32], ' ')
@@ -10072,6 +9824,48 @@ def _bm25_lane_sql(query_rows: str | None = None) -> str:
     )"""
 
 
+def _dense_lane_sql(query_rows: str | None = None) -> str:
+    """The dense lane beside _bm25_lane_sql: doc and query hash
+    embeddings (the q142 recipe), pround-4 cosine, ranked as
+    ``den(query_id, doc_id, rk)``. ``query_rows`` as there."""
+    rows = query_rows or _Q142_QUERY_ROWS
+    return f"""dv AS (
+        SELECT doc_id, {_Q142_EMBED.format(src="text")} AS v
+        FROM documents
+    ),
+    dn AS (
+        SELECT doc_id, v,
+               sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
+        FROM dv
+    ),
+    qv AS (
+        SELECT query_id, {_Q142_EMBED.format(src="qtext")} AS p
+        FROM (VALUES {rows}) AS qq2(query_id, qtext)
+    ),
+    qn2 AS (
+        SELECT query_id, p,
+               sqrt(list_sum(list_transform(p, x -> x * x))) AS pn
+        FROM qv
+    ),
+    ds AS (
+        SELECT q.query_id, d.doc_id,
+               floor(list_sum(list_transform(range(len(d.v)),
+                         i -> q.p[i+1] * d.v[i+1])) / (q.pn * d.nrm)
+                     * 10000.0 + 0.5) / 10000.0 AS cosine
+        FROM qn2 q, dn d
+    ),
+    den AS (
+        SELECT query_id, doc_id,
+               row_number() OVER (PARTITION BY query_id
+                                  ORDER BY cosine DESC, doc_id) AS rk
+        FROM ds
+    )"""
+
+
+# The q176/q178 query set as a VALUES list.
+_Q176_QUERY_ROWS = ", ".join(f"({qid}, '{qt}')" for qid, qt in _Q176_QUERIES)
+
+
 ORACLE["q144_bm25_retrieval"] = f"""
     WITH {_bm25_lane_sql()}
     SELECT query_id, doc_id, bm25, rk::BIGINT AS rk
@@ -10092,37 +9886,7 @@ ORACLE["q150_bm25_index_search"] = ORACLE["q144_bm25_retrieval"]
 # division (60.0 + BIGINT would be exact-decimal arithmetic).
 ORACLE["q145_hybrid_retrieval"] = f"""
     WITH {_bm25_lane_sql()},
-    dv AS (
-        SELECT doc_id, {_Q142_EMBED.format(src="text")} AS v
-        FROM documents
-    ),
-    dn AS (
-        SELECT doc_id, v,
-               sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
-        FROM dv
-    ),
-    qv AS (
-        SELECT query_id, {_Q142_EMBED.format(src="qtext")} AS p
-        FROM (VALUES {_Q142_QUERY_ROWS}) AS qq2(query_id, qtext)
-    ),
-    qn2 AS (
-        SELECT query_id, p,
-               sqrt(list_sum(list_transform(p, x -> x * x))) AS pn
-        FROM qv
-    ),
-    ds AS (
-        SELECT q.query_id, d.doc_id,
-               floor(list_sum(list_transform(range(len(d.v)),
-                         i -> q.p[i+1] * d.v[i+1])) / (q.pn * d.nrm)
-                     * 10000.0 + 0.5) / 10000.0 AS cosine
-        FROM qn2 q, dn d
-    ),
-    den AS (
-        SELECT query_id, doc_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cosine DESC, doc_id) AS rk
-        FROM ds
-    ),
+    {_dense_lane_sql()},
     den10 AS (SELECT * FROM den WHERE rk <= 10),
     lex10 AS (SELECT query_id, doc_id, rk FROM lex WHERE rk <= 10),
     fused AS (
@@ -10150,30 +9914,7 @@ ORACLE["q145_hybrid_retrieval"] = f"""
 # counts (the q141 nt CTE shape) over ALL documents, ratioed against
 # the character length.
 ORACLE["q146_bpe_compression"] = f"""
-    WITH bw0 AS (
-        SELECT doc_id,
-               unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
-        FROM documents
-    ),
-    bw AS (
-        SELECT doc_id, replace(w, chr(31), '') AS w
-        FROM bw0 WHERE len(w) > 0
-    ),
-    bs AS (
-        SELECT doc_id,
-               array_to_string(
-                 list_transform(string_split(w, ''),
-                                c -> chr(31) || c || chr(31)),
-                 '') || chr(31) || '</w>' || chr(31) AS s
-        FROM bw
-    ),
-    bm AS (SELECT doc_id, {_q140_replace_chain('s')} AS s FROM bs),
-    nt AS (
-        SELECT doc_id,
-               sum(len(string_split(substring(s, 2, len(s) - 2),
-                                    chr(31) || chr(31))))::BIGINT AS n_subtoks
-        FROM bm GROUP BY doc_id
-    ),
+    WITH {_bpe_count_ctes("documents", "doc_id")},
     base AS (
         SELECT doc_id, len(text)::BIGINT AS n_chars
         FROM documents WHERE len(text) > 0
@@ -10236,7 +9977,7 @@ ORACLE["q147_importance_weights"] = """
 # >= 1/2 (2*inter >= union — the prefix_filter_join boundary, no
 # float compare anywhere).
 ORACLE["q148_lsh_quality_report"] = f"""
-    WITH {_SHINGLE_CTE.strip()},
+    WITH {_minhash_ctes().strip()},
     ss AS (SELECT doc_id, count(*)::BIGINT AS sz FROM sh GROUP BY doc_id),
     pair_inter AS (
         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -10274,35 +10015,12 @@ ORACLE["q148_lsh_quality_report"] = f"""
 
 # q149: word counts + the q140 BPE replace chain rolled up per source.
 ORACLE["q149_tokenizer_fertility"] = f"""
-    WITH w0 AS (
-        SELECT doc_id, source,
-               unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
-        FROM documents
-    ),
-    w AS (
-        SELECT doc_id, source, replace(w, chr(31), '') AS w
-        FROM w0 WHERE len(w) > 0
-    ),
-    nw AS (SELECT source, count(*)::BIGINT AS n_words FROM w GROUP BY source),
-    bs AS (
-        SELECT source,
-               array_to_string(
-                 list_transform(string_split(w, ''),
-                                c -> chr(31) || c || chr(31)),
-                 '') || chr(31) || '</w>' || chr(31) AS s
-        FROM w
-    ),
-    bm AS (SELECT source, {_q140_replace_chain('s')} AS s FROM bs),
-    ns AS (
-        SELECT source,
-               sum(len(string_split(substring(s, 2, len(s) - 2),
-                                    chr(31) || chr(31))))::BIGINT AS n_subtoks
-        FROM bm GROUP BY source
-    )
+    WITH {_bpe_count_ctes("documents", "source")},
+    nw AS (SELECT source, count(*)::BIGINT AS n_words FROM bw GROUP BY source)
     SELECT source, n_words, n_subtoks,
            floor(CAST(n_subtoks AS DOUBLE) / CAST(n_words AS DOUBLE)
                  * 10000.0 + 0.5) / 10000.0 AS fertility
-    FROM nw JOIN ns USING (source)
+    FROM nw JOIN nt USING (source)
     ORDER BY source
 """
 
@@ -10554,7 +10272,7 @@ ORACLE["q159_basket_lift"] = """
     ORDER BY p.n_ab DESC, p.item_a, p.item_b LIMIT 50
 """
 
-ORACLE["q160_golden_record"] = """
+ORACLE["q160_golden_record"] = f"""
     WITH RECURSIVE d AS (
         SELECT doc_id, lang, source, n_chars, substr(text, 1, 24) AS p
         FROM documents
@@ -10566,18 +10284,7 @@ ORACLE["q160_golden_record"] = """
          AND a.doc_id < b.doc_id
         WHERE levenshtein(a.p, b.p) <= 14
     ),
-    edges AS (
-        SELECT id_a AS src, id_b AS dst FROM pr
-        UNION ALL
-        SELECT id_b AS src, id_a AS dst FROM pr
-    ),
-    nodes AS (SELECT DISTINCT src AS id FROM edges),
-    reach(id, r) AS (
-        SELECT id, id FROM nodes
-        UNION
-        SELECT e.src, re.r FROM edges e JOIN reach re ON re.id = e.dst
-    ),
-    comp AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
+    {_components_ctes("pr")},
     lab AS (
         SELECT doc.doc_id, doc.source, doc.n_chars,
                COALESCE(c.cluster_id, doc.doc_id)::BIGINT AS cluster_id
@@ -10660,13 +10367,11 @@ ORACLE["q162_cohort_ltv"] = """
     FROM purch ORDER BY cohort_day, age
 """
 
-# q163: the oracle re-derives the ENTIRE injected-centroid IVF search —
-# assignment (argmax cosine, ties to the higher centroid index, the
-# reverse(array_sort) contract), nprobe=3 probe buckets, candidate
-# equi-join with self-exclusion, rounded-cosine ranking — then the
-# exact baseline (q22 logic) and the per-probe recall arithmetic.
-ORACLE["q163_ivf_recall_report"] = """
-    WITH v AS (
+# Vector-search oracle fragments (q163-q173, q183).
+
+# The embeddings as DOUBLE lists, ``v(vec_id, v)``, and with their L2
+# norms, ``n(vec_id, v, nrm)``.
+_VEC_NORMS = """v AS (
         SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
         FROM embeddings
     ),
@@ -10674,79 +10379,219 @@ ORACLE["q163_ivf_recall_report"] = """
         SELECT vec_id, v,
                sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
         FROM v
-    ),
-    c AS (
-        SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci, v AS cv,
-               sqrt(list_sum(list_transform(v, x -> x * x))) AS cn
-        FROM v ORDER BY vec_id LIMIT 16
-    ),
-    asg AS (
-        SELECT vec_id, ci AS bucket FROM (
-            SELECT n.vec_id, c.ci,
-                   row_number() OVER (
-                       PARTITION BY n.vec_id
-                       ORDER BY list_sum(list_transform(range(len(n.v)),
-                                i -> n.v[i+1] * c.cv[i+1])) / (n.nrm * c.cn)
-                                DESC, c.ci DESC) AS rk
-            FROM n, c
-        ) WHERE rk = 1
-    ),
-    p AS (
+    )"""
+
+# Unit vectors (a zero vector stays zero): ``u(vec_id, v, uv, nrm)``.
+_VEC_UNIT = """u AS (
+        SELECT vec_id, v,
+               CASE WHEN nrm = 0 THEN v
+                    ELSE list_transform(v, x -> x / nrm) END AS uv,
+               nrm
+        FROM n
+    )"""
+
+# The probes: vec_id < 5, raw ``p(probe_id, pv, pn)`` or unit
+# ``p(probe_id, pu)``.
+_VEC_PROBES = """p AS (
         SELECT vec_id AS probe_id, v AS pv, nrm AS pn FROM n
         WHERE vec_id < 5
+    )"""
+_UNIT_PROBES = """p AS (
+        SELECT vec_id AS probe_id,
+               CASE WHEN nrm = 0 THEN v
+                    ELSE list_transform(v, x -> x / nrm) END AS pu
+        FROM n WHERE vec_id < 5
+    )"""
+
+
+def _unit_centroids(k: int) -> str:
+    """``cent(ci, cu)``: the ``k`` lowest-id unit vectors, injected as
+    centroids."""
+    return f"""cent AS (
+        SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci,
+               CASE WHEN nrm = 0 THEN v
+                    ELSE list_transform(v, x -> x / nrm) END AS cu
+        FROM n ORDER BY vec_id LIMIT {k}
+    )"""
+
+
+def _nearest_centroid(name: str, col: str) -> str:
+    """``name(vec_id, col)``: each ``u`` row's argmax-dot ``cent`` row,
+    ties to the lowest index (the numpy argmax contract)."""
+    return f"""{name} AS (
+        SELECT vec_id, ci AS {col} FROM (
+            SELECT u.vec_id, cent.ci,
+                   row_number() OVER (PARTITION BY u.vec_id
+                       ORDER BY list_sum(list_transform(range(len(u.uv)),
+                           i -> u.uv[i+1] * cent.cu[i+1])) DESC,
+                           cent.ci ASC) AS rk
+            FROM u, cent
+        ) WHERE rk = 1
+    )"""
+
+
+# q171/q172: every vector's cluster among 8 injected unit centroids,
+# ``asg(vec_id, cluster)``.
+_CLUSTER_ASSIGN = f"""{_VEC_NORMS},
+    {_VEC_UNIT},
+    {_unit_centroids(8)},
+    {_nearest_centroid("asg", "cluster")}"""
+
+# PQ codebook and encode: ``cw(ci, cu)`` the 64 lowest-id unit vectors,
+# ``cbs(all_cu)`` the same as one list, ``enc0(vec_id, s, code)`` the
+# per-4-dim-subspace squared-L2 argmin (ties to the lowest code — the
+# numpy argmin contract). Needs ``u``.
+_PQ_ENCODE = """cw AS (
+        SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci,
+               CASE WHEN nrm > 0 THEN list_transform(v, x -> x / nrm)
+                    ELSE v END AS cu
+        FROM n ORDER BY vec_id LIMIT 64
     ),
+    cbs AS (SELECT list(cu ORDER BY ci) AS all_cu FROM cw),
+    enc0 AS (
+        SELECT vec_id, s, ci AS code FROM (
+            SELECT u.vec_id, s.s, cw.ci,
+                   row_number() OVER (
+                       PARTITION BY u.vec_id, s.s
+                       ORDER BY list_sum(list_transform(range(4), j ->
+                           (u.uv[s.s*4 + j + 1] - cw.cu[s.s*4 + j + 1])
+                         * (u.uv[s.s*4 + j + 1] - cw.cu[s.s*4 + j + 1])))
+                           ASC, cw.ci ASC) AS rk
+            FROM u, range(16) s(s), cw
+        ) WHERE rk = 1
+    )"""
+
+# ADC score of unit probe ``p`` against PQ codes ``e.codes``: the
+# ORDERED 16-term fold (the JVM aggregate's s=0..15 order), pround-4.
+_ADC_SCORE = """floor(list_sum(list_transform(range(16), s ->
+                   list_sum(list_transform(range(4), j ->
+                       p.pu[s*4 + j + 1]
+                     * cbs.all_cu[e.codes[s+1] + 1][s*4 + j + 1]))))
+                   * 10000.0 + 0.5) / 10000.0"""
+
+# q165/q170: the IVF-PQ search — corpus bucketed to its nearest of 16
+# unit centroids and PQ-encoded; each probe scores the codes of its 4
+# nearest buckets by ADC, ``scored(probe_id, vec_id, score)``.
+_IVFPQ_SCORED = f"""{_VEC_NORMS},
+    {_VEC_UNIT},
+    {_unit_centroids(16)},
+    {_PQ_ENCODE},
+    {_nearest_centroid("vbucket", "bucket")},
+    enc AS (
+        SELECT e0.vec_id, vb.bucket, list(e0.code ORDER BY e0.s) AS codes
+        FROM enc0 e0 JOIN vbucket vb ON vb.vec_id = e0.vec_id
+        GROUP BY e0.vec_id, vb.bucket
+    ),
+    {_UNIT_PROBES},
     pb AS (
         SELECT probe_id, ci AS bucket FROM (
-            SELECT p.probe_id, c.ci,
-                   row_number() OVER (
-                       PARTITION BY p.probe_id
-                       ORDER BY list_sum(list_transform(range(len(p.pv)),
-                                i -> p.pv[i+1] * c.cv[i+1])) / (p.pn * c.cn)
-                                DESC, c.ci DESC) AS rk
-            FROM p, c
-        ) WHERE rk <= 3
-    ),
-    cand AS (
-        SELECT pb.probe_id, a.vec_id
-        FROM pb JOIN asg a ON a.bucket = pb.bucket
-        WHERE a.vec_id <> pb.probe_id
-    ),
-    appr AS (
-        SELECT probe_id, vec_id FROM (
-            SELECT cd.probe_id, cd.vec_id,
-                   row_number() OVER (PARTITION BY cd.probe_id
-                       ORDER BY floor(list_sum(list_transform(
-                           range(len(cc.v)),
-                           i -> pp.pv[i+1] * cc.v[i+1])) / (pp.pn * cc.nrm)
-                           * 10000.0 + 0.5) / 10000.0 DESC,
-                           cd.vec_id) AS rk
-            FROM cand cd
-            JOIN n cc ON cc.vec_id = cd.vec_id
-            JOIN p pp ON pp.probe_id = cd.probe_id
-        ) WHERE rk <= 10
-    ),
-    ex AS (
-        SELECT probe_id, vec_id FROM (
-            SELECT p.probe_id, c2.vec_id,
+            SELECT p.probe_id, cent.ci,
                    row_number() OVER (PARTITION BY p.probe_id
-                       ORDER BY floor(list_sum(list_transform(
-                           range(len(c2.v)),
-                           i -> p.pv[i+1] * c2.v[i+1])) / (p.pn * c2.nrm)
-                           * 10000.0 + 0.5) / 10000.0 DESC,
-                           c2.vec_id) AS rk
-            FROM p, n c2 WHERE c2.vec_id <> p.probe_id
-        ) WHERE rk <= 10
+                       ORDER BY list_sum(list_transform(range(64),
+                           i -> p.pu[i+1] * cent.cu[i+1])) DESC,
+                           cent.ci ASC) AS rk
+            FROM p, cent
+        ) WHERE rk <= 4
     ),
-    ne AS (SELECT probe_id, count(*)::BIGINT AS n_exact FROM ex GROUP BY 1),
-    na AS (SELECT probe_id, count(*)::BIGINT AS n_approx FROM appr GROUP BY 1),
+    scored AS (
+        SELECT p.probe_id, e.vec_id, {_ADC_SCORE} AS score
+        FROM p
+        JOIN pb ON pb.probe_id = p.probe_id
+        JOIN enc e ON e.bucket = pb.bucket
+        CROSS JOIN cbs
+    )"""
+
+# The ADC lane's top-10 (self-matches ranked, then dropped — the
+# report's self-filter), ``appr(probe_id, vec_id)``.
+_ADC_APPR = """appr AS (
+        SELECT probe_id, vec_id FROM (
+            SELECT probe_id, vec_id,
+                   row_number() OVER (PARTITION BY probe_id
+                       ORDER BY score DESC, vec_id) AS rk
+            FROM scored
+        ) WHERE rk <= 10 AND probe_id <> vec_id
+    )"""
+
+
+def _cosine_centroids(src: str, k: int) -> str:
+    """``c(ci, cv, cn)``: the ``k`` lowest-id ``src(vec_id, v, nrm)``
+    rows, injected as IVF centroids."""
+    return f"""c AS (
+        SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci, v AS cv,
+               nrm AS cn
+        FROM {src} ORDER BY vec_id LIMIT {k}
+    )"""
+
+
+def _cosine_buckets(name: str, src: str, key: str, vec: str, nrm: str,
+                    k: int) -> str:
+    """``name(key, bucket)``: each ``src`` row's top-``k`` centroids of
+    ``c`` by cosine, ties to the HIGHER index (the reverse(array_sort)
+    contract); ``vec``/``nrm`` name its vector and norm columns."""
+    return f"""{name} AS (
+        SELECT {key}, ci AS bucket FROM (
+            SELECT r.{key}, c.ci,
+                   row_number() OVER (
+                       PARTITION BY r.{key}
+                       ORDER BY list_sum(list_transform(range(len(r.{vec})),
+                                i -> r.{vec}[i+1] * c.cv[i+1])) / (r.{nrm} * c.cn)
+                                DESC, c.ci DESC) AS rk
+            FROM {src} r, c
+        ) WHERE rk <= {k}
+    )"""
+
+
+def _cosine_topk(name: str, k: int, src: str, p: tuple, c: tuple) -> str:
+    """``name(probe_id, vec_id)``: per probe, the top-``k`` rows of the
+    FROM clause ``src`` by pround-4 cosine DESC, vec_id ASC. ``p`` and
+    ``c`` are the probe and candidate sides as ``(id, vector, norm)``
+    column expressions."""
+    (pid, pv, pn), (cid, cv, cn) = p, c
+    return f"""{name} AS (
+        SELECT probe_id, vec_id FROM (
+            SELECT {pid} AS probe_id, {cid} AS vec_id,
+                   row_number() OVER (PARTITION BY {pid}
+                       ORDER BY floor(list_sum(list_transform(
+                           range(len({cv})),
+                           i -> {pv}[i+1] * {cv}[i+1])) / ({pn} * {cn})
+                           * 10000.0 + 0.5) / 10000.0 DESC,
+                           {cid}) AS rk
+            FROM {src}
+        ) WHERE rk <= {k}
+    )"""
+
+
+# The exact baseline: each probe's (vec_id < 5) true top-10, self
+# excluded, ``ex(probe_id, vec_id)``.
+_EXACT_TOP10 = _cosine_topk(
+    "ex", 10, "n pp, n c2 WHERE pp.vec_id < 5 AND c2.vec_id <> pp.vec_id",
+    ("pp.vec_id", "pp.v", "pp.nrm"), ("c2.vec_id", "c2.v", "c2.nrm"),
+)
+
+# The rounded-cosine rerank of ``cand(probe_id, vec_id)`` against the
+# raw probes ``p``, top-10, ``appr(probe_id, vec_id)``.
+_PROBE_APPR = _cosine_topk(
+    "appr", 10,
+    "cand cd JOIN n cc ON cc.vec_id = cd.vec_id"
+    " JOIN p pp ON pp.probe_id = cd.probe_id",
+    ("cd.probe_id", "pp.pv", "pp.pn"), ("cd.vec_id", "cc.v", "cc.nrm"),
+)
+
+
+def _recall_tail(key: str = "probe_id", exact: str = "ex",
+                 approx: str = "appr", item: str = "vec_id") -> str:
+    """ne/na/nh and the report SELECT: per ``key``, the exact and
+    approximate result counts, their overlap on ``item`` and the
+    pround-4 recall. The FULL join mirrors the recall operator: a key
+    seen ONLY by the approx lane round-trips as an n_exact=0 anomaly
+    row on both engines, not as an opaque hash mismatch."""
+    return f"""ne AS (SELECT {key}, count(*)::BIGINT AS n_exact FROM {exact} GROUP BY 1),
+    na AS (SELECT {key}, count(*)::BIGINT AS n_approx FROM {approx} GROUP BY 1),
     nh AS (
-        SELECT e.probe_id, count(*)::BIGINT AS n_hit
-        FROM ex e JOIN appr a USING (probe_id, vec_id) GROUP BY 1
+        SELECT e.{key}, count(*)::BIGINT AS n_hit
+        FROM {exact} e JOIN {approx} a USING ({key}, {item}) GROUP BY 1
     )
-    -- FULL join mirrors recall_report (similarity.py): a probe seen
-    -- ONLY by the approx lane must round-trip as an n_exact=0 anomaly
-    -- row on BOTH engines, not surface as an opaque hash mismatch
-    SELECT probe_id,
+    SELECT {key},
            coalesce(n_exact, 0)::BIGINT AS n_exact,
            coalesce(n_approx, 0)::BIGINT AS n_approx,
            coalesce(n_hit, 0)::BIGINT AS n_hit,
@@ -10754,8 +10599,30 @@ ORACLE["q163_ivf_recall_report"] = """
                floor(coalesce(n_hit, 0)::DOUBLE / n_exact::DOUBLE
                      * 10000.0 + 0.5) / 10000.0
            END AS recall
-    FROM ne FULL JOIN na USING (probe_id) LEFT JOIN nh USING (probe_id)
-    ORDER BY probe_id
+    FROM ne FULL JOIN na USING ({key}) LEFT JOIN nh USING ({key})
+    ORDER BY {key}"""
+
+
+# q163: the oracle re-derives the ENTIRE injected-centroid IVF search —
+# assignment (argmax cosine, ties to the higher centroid index, the
+# reverse(array_sort) contract), nprobe=3 probe buckets, candidate
+# equi-join with self-exclusion, rounded-cosine ranking — then the
+# exact baseline (q22 logic) and the per-probe recall arithmetic.
+ORACLE["q163_ivf_recall_report"] = f"""
+    WITH {_VEC_NORMS},
+    {_cosine_centroids("n", 16)},
+    {_cosine_buckets("asg", "n", "vec_id", "v", "nrm", 1)},
+    {_VEC_PROBES},
+    {_cosine_buckets("pb", "p", "probe_id", "pv", "pn", 3)},
+
+    cand AS (
+        SELECT pb.probe_id, a.vec_id
+        FROM pb JOIN asg a ON a.bucket = pb.bucket
+        WHERE a.vec_id <> pb.probe_id
+    ),
+    {_PROBE_APPR},
+    {_EXACT_TOP10},
+    {_recall_tail()}
 """
 
 # q167: exact distincts are hard oracle values; the within-10pct flags
@@ -10798,93 +10665,48 @@ def _lsh_planes_literal(bits=6, n_tables=4, dim=64):
     return "[" + ", ".join(vals) + "]"
 
 
-# q166: the one ANN lane whose whole index is SQL-expressible — the
-# oracle embeds the same ±1 planes and re-derives signatures (MSB-first
-# sign fold), composite bucket ids, Hamming-1 multiprobe, the distinct
-# candidate union, rounded-cosine ranking, and the recall arithmetic.
-ORACLE["q166_lsh_recall_report"] = f"""
-    WITH pl AS (SELECT {_lsh_planes_literal()}::DOUBLE[] AS flat),
-    v AS (
-        SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-        FROM embeddings
-    ),
-    n AS (
-        SELECT vec_id, v,
-               sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
-        FROM v
-    ),
+def _lsh_candidates(probe_filter: str) -> str:
+    """pl/v/n/sigs/pbuckets/cand: the LSH index re-derived — the
+    embedded planes, MSB-first 6-bit signatures in 4 tables (bucket =
+    table * 64 + signature), the Hamming-1 multiprobe of the ``sigs s``
+    rows ``probe_filter`` keeps (a WHERE clause, or ""), and each
+    probe's distinct non-self candidates ``cand(probe_id, vec_id)``."""
+    return f"""pl AS (SELECT {_lsh_planes_literal()}::DOUBLE[] AS flat),
+    {_VEC_NORMS},
     sigs AS (
         SELECT n.vec_id, t.t,
                (t.t * 64 + list_sum(list_transform(range(6), b ->
-                   CASE WHEN list_sum(list_transform(range(64),
+                   CASE WHEN list_sum(list_transform(range(len(n.v)),
                         i -> n.v[i+1] * pl.flat[(t.t*6 + b)*64 + i + 1]))
                         >= 0
                    THEN (1 << (5 - b)) ELSE 0 END)))::INT AS bucket
         FROM n, range(4) t(t), pl
     ),
-    p AS (
-        SELECT vec_id AS probe_id, v AS pv, nrm AS pn FROM n
-        WHERE vec_id < 5
-    ),
     pbuckets AS (
         SELECT DISTINCT probe_id, bucket FROM (
-            SELECT s.vec_id AS probe_id, s.bucket FROM sigs s
-            WHERE s.vec_id < 5
+            SELECT s.vec_id AS probe_id, s.bucket FROM sigs s {probe_filter}
             UNION ALL
             SELECT s.vec_id AS probe_id, xor(s.bucket, (1 << f.i)::INT)
-            FROM sigs s, range(6) f(i) WHERE s.vec_id < 5
+            FROM sigs s, range(6) f(i) {probe_filter}
         )
     ),
     cand AS (
         SELECT DISTINCT pb.probe_id, s.vec_id
         FROM pbuckets pb JOIN sigs s ON s.bucket = pb.bucket
         WHERE s.vec_id <> pb.probe_id
-    ),
-    appr AS (
-        SELECT probe_id, vec_id FROM (
-            SELECT cd.probe_id, cd.vec_id,
-                   row_number() OVER (PARTITION BY cd.probe_id
-                       ORDER BY floor(list_sum(list_transform(
-                           range(len(cc.v)),
-                           i -> pp.pv[i+1] * cc.v[i+1])) / (pp.pn * cc.nrm)
-                           * 10000.0 + 0.5) / 10000.0 DESC,
-                           cd.vec_id) AS rk
-            FROM cand cd
-            JOIN n cc ON cc.vec_id = cd.vec_id
-            JOIN p pp ON pp.probe_id = cd.probe_id
-        ) WHERE rk <= 10
-    ),
-    ex AS (
-        SELECT probe_id, vec_id FROM (
-            SELECT p.probe_id, c2.vec_id,
-                   row_number() OVER (PARTITION BY p.probe_id
-                       ORDER BY floor(list_sum(list_transform(
-                           range(len(c2.v)),
-                           i -> p.pv[i+1] * c2.v[i+1])) / (p.pn * c2.nrm)
-                           * 10000.0 + 0.5) / 10000.0 DESC,
-                           c2.vec_id) AS rk
-            FROM p, n c2 WHERE c2.vec_id <> p.probe_id
-        ) WHERE rk <= 10
-    ),
-    ne AS (SELECT probe_id, count(*)::BIGINT AS n_exact FROM ex GROUP BY 1),
-    na AS (SELECT probe_id, count(*)::BIGINT AS n_approx FROM appr GROUP BY 1),
-    nh AS (
-        SELECT e.probe_id, count(*)::BIGINT AS n_hit
-        FROM ex e JOIN appr a USING (probe_id, vec_id) GROUP BY 1
-    )
-    -- FULL join mirrors recall_report (similarity.py): a probe seen
-    -- ONLY by the approx lane must round-trip as an n_exact=0 anomaly
-    -- row on BOTH engines, not surface as an opaque hash mismatch
-    SELECT probe_id,
-           coalesce(n_exact, 0)::BIGINT AS n_exact,
-           coalesce(n_approx, 0)::BIGINT AS n_approx,
-           coalesce(n_hit, 0)::BIGINT AS n_hit,
-           CASE WHEN coalesce(n_exact, 0) > 0 THEN
-               floor(coalesce(n_hit, 0)::DOUBLE / n_exact::DOUBLE
-                     * 10000.0 + 0.5) / 10000.0
-           END AS recall
-    FROM ne FULL JOIN na USING (probe_id) LEFT JOIN nh USING (probe_id)
-    ORDER BY probe_id
+    )"""
+
+
+# q166: the one ANN lane whose whole index is SQL-expressible — the
+# oracle embeds the same ±1 planes and re-derives signatures (MSB-first
+# sign fold), composite bucket ids, Hamming-1 multiprobe, the distinct
+# candidate union, rounded-cosine ranking, and the recall arithmetic.
+ORACLE["q166_lsh_recall_report"] = f"""
+    WITH {_lsh_candidates("WHERE s.vec_id < 5")},
+    {_VEC_PROBES},
+    {_PROBE_APPR},
+    {_EXACT_TOP10},
+    {_recall_tail()}
 """
 
 # q164: the oracle re-derives the injected-codebook PQ search — unit
@@ -10894,263 +10716,69 @@ ORACLE["q166_lsh_recall_report"] = f"""
 # (matching the JVM aggregate's s=0..15 order), (round(score,4) DESC,
 # id) ranking WITH self-matches (the lane keeps them), then the
 # report's self-filter and recall arithmetic.
-ORACLE["q164_pq_recall_report"] = """
-    WITH v AS (
-        SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-        FROM embeddings
-    ),
-    n AS (
-        SELECT vec_id, v,
-               sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
-        FROM v
-    ),
-    u AS (
-        SELECT vec_id, v,
-               CASE WHEN nrm = 0 THEN v
-                    ELSE list_transform(v, x -> x / nrm) END AS uv,
-               nrm
-        FROM n
-    ),
-    cw AS (
-        SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci,
-               CASE WHEN nrm > 0 THEN list_transform(v, x -> x / nrm)
-                    ELSE v END AS cu
-        FROM n ORDER BY vec_id LIMIT 64
-    ),
-    cbs AS (SELECT list(cu ORDER BY ci) AS all_cu FROM cw),
-    enc0 AS (
-        SELECT vec_id, s, ci AS code FROM (
-            SELECT u.vec_id, s.s, cw.ci,
-                   row_number() OVER (
-                       PARTITION BY u.vec_id, s.s
-                       ORDER BY list_sum(list_transform(range(4), j ->
-                           (u.uv[s.s*4 + j + 1] - cw.cu[s.s*4 + j + 1])
-                         * (u.uv[s.s*4 + j + 1] - cw.cu[s.s*4 + j + 1])))
-                           ASC, cw.ci ASC) AS rk
-            FROM u, range(16) s(s), cw
-        ) WHERE rk = 1
-    ),
+ORACLE["q164_pq_recall_report"] = f"""
+    WITH {_VEC_NORMS},
+    {_VEC_UNIT},
+    {_PQ_ENCODE},
     enc AS (
         SELECT vec_id, list(code ORDER BY s) AS codes FROM enc0
         GROUP BY vec_id
     ),
-    p AS (
-        SELECT vec_id AS probe_id,
-               CASE WHEN nrm = 0 THEN v
-                    ELSE list_transform(v, x -> x / nrm) END AS pu
-        FROM n WHERE vec_id < 5
-    ),
+    {_UNIT_PROBES},
     scored AS (
-        SELECT p.probe_id, e.vec_id,
-               floor(list_sum(list_transform(range(16), s ->
-                   list_sum(list_transform(range(4), j ->
-                       p.pu[s*4 + j + 1]
-                     * cbs.all_cu[e.codes[s+1] + 1][s*4 + j + 1]))))
-                   * 10000.0 + 0.5) / 10000.0 AS score
+        SELECT p.probe_id, e.vec_id, {_ADC_SCORE} AS score
         FROM p, enc e, cbs
     ),
-    appr AS (
-        SELECT probe_id, vec_id FROM (
-            SELECT probe_id, vec_id,
-                   row_number() OVER (PARTITION BY probe_id
-                       ORDER BY score DESC, vec_id) AS rk
-            FROM scored
-        ) WHERE rk <= 10 AND probe_id <> vec_id
-    ),
-    ex AS (
-        SELECT probe_id, vec_id FROM (
-            SELECT pp.vec_id AS probe_id, c2.vec_id,
-                   row_number() OVER (PARTITION BY pp.vec_id
-                       ORDER BY floor(list_sum(list_transform(
-                           range(len(c2.v)),
-                           i -> pp.v[i+1] * c2.v[i+1]))
-                           / (pp.nrm * c2.nrm)
-                           * 10000.0 + 0.5) / 10000.0 DESC,
-                           c2.vec_id) AS rk
-            FROM n pp, n c2
-            WHERE pp.vec_id < 5 AND c2.vec_id <> pp.vec_id
-        ) WHERE rk <= 10
-    ),
-    ne AS (SELECT probe_id, count(*)::BIGINT AS n_exact FROM ex GROUP BY 1),
-    na AS (SELECT probe_id, count(*)::BIGINT AS n_approx FROM appr GROUP BY 1),
-    nh AS (
-        SELECT e.probe_id, count(*)::BIGINT AS n_hit
-        FROM ex e JOIN appr a USING (probe_id, vec_id) GROUP BY 1
-    )
-    -- FULL join mirrors recall_report (similarity.py): a probe seen
-    -- ONLY by the approx lane must round-trip as an n_exact=0 anomaly
-    -- row on BOTH engines, not surface as an opaque hash mismatch
-    SELECT probe_id,
-           coalesce(n_exact, 0)::BIGINT AS n_exact,
-           coalesce(n_approx, 0)::BIGINT AS n_approx,
-           coalesce(n_hit, 0)::BIGINT AS n_hit,
-           CASE WHEN coalesce(n_exact, 0) > 0 THEN
-               floor(coalesce(n_hit, 0)::DOUBLE / n_exact::DOUBLE
-                     * 10000.0 + 0.5) / 10000.0
-           END AS recall
-    FROM ne FULL JOIN na USING (probe_id) LEFT JOIN nh USING (probe_id)
-    ORDER BY probe_id
+    {_ADC_APPR},
+    {_EXACT_TOP10},
+    {_recall_tail()}
 """
 
 # q165: q164's ADC oracle composed with the coarse quantizer — corpus
 # bucket = argmax cosine against the 16 unit centroids (ties to the
 # lowest index, the numpy argmax contract), probe buckets = top-nprobe=4
 # by centroid dot, candidates pruned to probed buckets before ADC.
-ORACLE["q165_ivfpq_recall_report"] = """
-    WITH v AS (
-        SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-        FROM embeddings
-    ),
-    n AS (
-        SELECT vec_id, v,
-               sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
-        FROM v
-    ),
-    u AS (
-        SELECT vec_id, v,
-               CASE WHEN nrm = 0 THEN v
-                    ELSE list_transform(v, x -> x / nrm) END AS uv,
-               nrm
-        FROM n
-    ),
-    cent AS (
-        SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci,
-               CASE WHEN nrm = 0 THEN v
-                    ELSE list_transform(v, x -> x / nrm) END AS cu
-        FROM n ORDER BY vec_id LIMIT 16
-    ),
-    cw AS (
-        SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci,
-               CASE WHEN nrm > 0 THEN list_transform(v, x -> x / nrm)
-                    ELSE v END AS cu
-        FROM n ORDER BY vec_id LIMIT 64
-    ),
-    cbs AS (SELECT list(cu ORDER BY ci) AS all_cu FROM cw),
-    vbucket AS (
-        SELECT vec_id, ci AS bucket FROM (
-            SELECT u.vec_id, cent.ci,
-                   row_number() OVER (PARTITION BY u.vec_id
-                       ORDER BY list_sum(list_transform(range(len(u.uv)),
-                           i -> u.uv[i+1] * cent.cu[i+1])) DESC,
-                           cent.ci ASC) AS rk
-            FROM u, cent
-        ) WHERE rk = 1
-    ),
-    enc0 AS (
-        SELECT vec_id, s, ci AS code FROM (
-            SELECT u.vec_id, s.s, cw.ci,
-                   row_number() OVER (
-                       PARTITION BY u.vec_id, s.s
-                       ORDER BY list_sum(list_transform(range(4), j ->
-                           (u.uv[s.s*4 + j + 1] - cw.cu[s.s*4 + j + 1])
-                         * (u.uv[s.s*4 + j + 1] - cw.cu[s.s*4 + j + 1])))
-                           ASC, cw.ci ASC) AS rk
-            FROM u, range(16) s(s), cw
-        ) WHERE rk = 1
-    ),
-    enc AS (
-        SELECT e0.vec_id, vb.bucket, list(e0.code ORDER BY e0.s) AS codes
-        FROM enc0 e0 JOIN vbucket vb ON vb.vec_id = e0.vec_id
-        GROUP BY e0.vec_id, vb.bucket
-    ),
-    p AS (
-        SELECT vec_id AS probe_id,
-               CASE WHEN nrm = 0 THEN v
-                    ELSE list_transform(v, x -> x / nrm) END AS pu
-        FROM n WHERE vec_id < 5
-    ),
-    pb AS (
-        SELECT probe_id, ci AS bucket FROM (
-            SELECT p.probe_id, cent.ci,
-                   row_number() OVER (PARTITION BY p.probe_id
-                       ORDER BY list_sum(list_transform(range(64),
-                           i -> p.pu[i+1] * cent.cu[i+1])) DESC,
-                           cent.ci ASC) AS rk
-            FROM p, cent
-        ) WHERE rk <= 4
-    ),
-    scored AS (
-        SELECT p.probe_id, e.vec_id,
-               floor(list_sum(list_transform(range(16), s ->
-                   list_sum(list_transform(range(4), j ->
-                       p.pu[s*4 + j + 1]
-                     * cbs.all_cu[e.codes[s+1] + 1][s*4 + j + 1]))))
-                   * 10000.0 + 0.5) / 10000.0 AS score
-        FROM p
-        JOIN pb ON pb.probe_id = p.probe_id
-        JOIN enc e ON e.bucket = pb.bucket
-        CROSS JOIN cbs
-    ),
-    appr AS (
-        SELECT probe_id, vec_id FROM (
-            SELECT probe_id, vec_id,
-                   row_number() OVER (PARTITION BY probe_id
-                       ORDER BY score DESC, vec_id) AS rk
-            FROM scored
-        ) WHERE rk <= 10 AND probe_id <> vec_id
-    ),
-    ex AS (
-        SELECT probe_id, vec_id FROM (
-            SELECT pp.vec_id AS probe_id, c2.vec_id,
-                   row_number() OVER (PARTITION BY pp.vec_id
-                       ORDER BY floor(list_sum(list_transform(
-                           range(len(c2.v)),
-                           i -> pp.v[i+1] * c2.v[i+1]))
-                           / (pp.nrm * c2.nrm)
-                           * 10000.0 + 0.5) / 10000.0 DESC,
-                           c2.vec_id) AS rk
-            FROM n pp, n c2
-            WHERE pp.vec_id < 5 AND c2.vec_id <> pp.vec_id
-        ) WHERE rk <= 10
-    ),
-    ne AS (SELECT probe_id, count(*)::BIGINT AS n_exact FROM ex GROUP BY 1),
-    na AS (SELECT probe_id, count(*)::BIGINT AS n_approx FROM appr GROUP BY 1),
-    nh AS (
-        SELECT e.probe_id, count(*)::BIGINT AS n_hit
-        FROM ex e JOIN appr a USING (probe_id, vec_id) GROUP BY 1
-    )
-    -- FULL join mirrors recall_report (similarity.py): a probe seen
-    -- ONLY by the approx lane must round-trip as an n_exact=0 anomaly
-    -- row on BOTH engines, not surface as an opaque hash mismatch
-    SELECT probe_id,
-           coalesce(n_exact, 0)::BIGINT AS n_exact,
-           coalesce(n_approx, 0)::BIGINT AS n_approx,
-           coalesce(n_hit, 0)::BIGINT AS n_hit,
-           CASE WHEN coalesce(n_exact, 0) > 0 THEN
-               floor(coalesce(n_hit, 0)::DOUBLE / n_exact::DOUBLE
-                     * 10000.0 + 0.5) / 10000.0
-           END AS recall
-    FROM ne FULL JOIN na USING (probe_id) LEFT JOIN nh USING (probe_id)
-    ORDER BY probe_id
+ORACLE["q165_ivfpq_recall_report"] = f"""
+    WITH {_IVFPQ_SCORED},
+    {_ADC_APPR},
+    {_EXACT_TOP10},
+    {_recall_tail()}
 """
 
-# q168: the oracle re-derives each lane's post-erasure row count from
-# the SOURCE tables under the same modular erased-id predicates, and
-# asserts zero erased-id visibility — a lane that leaked an erased id
-# (or dropped a survivor during the rewrite) hash-mismatches. The HLL
-# lane's n_remaining is the distinct (event_type, day) keys of the
-# remaining users' events: a key whose rows were ALL erased must
-# vanish in the touched-key rebuild, every other key survives. The
-# kNN edge lane's n_remaining is n x least(k, n - 1): every surviving
-# node holds exactly its top-k over the remaining corpus — the count
-# an index that never ingested the erased ids would hold (the bounded
-# erase rebuild must restore it exactly, never drop an affected
-# node's re-probe or keep a dangling edge).
-# q168's AV lanes replay the fake-decoder arithmetic (the q195/q200
-# CTE chain) to re-derive how many scene keyframes / audio rows a
-# pipeline that NEVER ingested the erased clips would hold.
-ORACLE["q168_gdpr_erasure_report"] = """
-    WITH docs0 AS (
+# The fake AV decoders' input: each document's printable-ASCII bytes,
+# ``docs(doc_id, t)``.
+_AV_DOCS = """docs AS (
         SELECT doc_id,
                regexp_replace(text, '[^\\x20-\\x7E]', '', 'g') AS t
         FROM documents
-    ),
-    pop AS (SELECT doc_id, t FROM docs0 WHERE length(t) > 0),
-    d AS (
+    )"""
+
+
+# The fake audio extractor's clip duration (ms), from md5(t)'s first
+# byte.
+_AUDIO_DMS = "500 * (1 + (('0x' || substr(md5(t), 1, 2))::BIGINT % 20))"
+
+
+def _audio_mel(digest: str) -> str:
+    """A fake mel coefficient: the big-endian first 4 bytes of the md5
+    hex ``digest`` over 2^32, through the portable 1e-6 rounding."""
+    return (
+        f"floor(('0x' || substr({digest}, 1, 8))::BIGINT::DOUBLE"
+        " / 4294967296.0 * 1000000.0 + 0.5) / 1000000.0"
+    )
+
+
+def _video_frames_ctes(src: str) -> str:
+    """d/e/f/vals/fb/ham: the fake video decoder replayed over
+    ``src(doc_id, t)`` — duration 1000*(1 + b%8) from md5(t)'s first
+    byte, one frame per 1024 ms, each frame's 16-byte raster digest,
+    its 16-bit aHash ``b16`` and the x4 Hamming to the clip's previous
+    frame: ``ham(doc_id, frame, b16, hamming)`` (NULL on frame 0)."""
+    return f"""d AS (
         SELECT doc_id, t,
                1000 * (1 + ((strpos('0123456789abcdef',
                              substr(md5(t), 2, 1)) - 1) % 8)) AS dur
-        FROM pop
+        FROM {src}
     ),
     e AS (
         SELECT doc_id, t,
@@ -11183,12 +10811,33 @@ ORACLE["q168_gdpr_erasure_report"] = """
         FROM vals
     ),
     ham AS (
-        SELECT doc_id, frame,
+        SELECT doc_id, frame, b16,
                4 * bit_count(xor(b16,
                    lag(b16) OVER (PARTITION BY doc_id ORDER BY frame)))
                    AS hamming
         FROM fb
-    ),
+    )"""
+
+
+# q168: the oracle re-derives each lane's post-erasure row count from
+# the SOURCE tables under the same modular erased-id predicates, and
+# asserts zero erased-id visibility — a lane that leaked an erased id
+# (or dropped a survivor during the rewrite) hash-mismatches. The HLL
+# lane's n_remaining is the distinct (event_type, day) keys of the
+# remaining users' events: a key whose rows were ALL erased must
+# vanish in the touched-key rebuild, every other key survives. The
+# kNN edge lane's n_remaining is n x least(k, n - 1): every surviving
+# node holds exactly its top-k over the remaining corpus — the count
+# an index that never ingested the erased ids would hold (the bounded
+# erase rebuild must restore it exactly, never drop an affected
+# node's re-probe or keep a dangling edge).
+# q168's AV lanes replay the fake-decoder arithmetic (the q195/q200
+# CTE chain) to re-derive how many scene keyframes / audio rows a
+# pipeline that NEVER ingested the erased clips would hold.
+ORACLE["q168_gdpr_erasure_report"] = f"""
+    WITH {_AV_DOCS},
+    pop AS (SELECT doc_id, t FROM docs WHERE length(t) > 0),
+    {_video_frames_ctes("pop")},
     kf AS (
         SELECT doc_id FROM ham WHERE hamming IS NULL OR hamming > 8
     )
@@ -11279,91 +10928,8 @@ ORACLE["q169_kll_tolerance_report"] = """
 # q170: q165's ADC oracle minus the recall report — the raw persisted
 # search result (coarse bucket pruning at nprobe=4, ordered ADC fold,
 # rounded-score ranking WITH self-matches, the serving default).
-ORACLE["q170_ann_index_injected_search"] = """
-    WITH v AS (
-        SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-        FROM embeddings
-    ),
-    n AS (
-        SELECT vec_id, v,
-               sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
-        FROM v
-    ),
-    u AS (
-        SELECT vec_id, v,
-               CASE WHEN nrm = 0 THEN v
-                    ELSE list_transform(v, x -> x / nrm) END AS uv,
-               nrm
-        FROM n
-    ),
-    cent AS (
-        SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci,
-               CASE WHEN nrm = 0 THEN v
-                    ELSE list_transform(v, x -> x / nrm) END AS cu
-        FROM n ORDER BY vec_id LIMIT 16
-    ),
-    cw AS (
-        SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci,
-               CASE WHEN nrm > 0 THEN list_transform(v, x -> x / nrm)
-                    ELSE v END AS cu
-        FROM n ORDER BY vec_id LIMIT 64
-    ),
-    cbs AS (SELECT list(cu ORDER BY ci) AS all_cu FROM cw),
-    vbucket AS (
-        SELECT vec_id, ci AS bucket FROM (
-            SELECT u.vec_id, cent.ci,
-                   row_number() OVER (PARTITION BY u.vec_id
-                       ORDER BY list_sum(list_transform(range(len(u.uv)),
-                           i -> u.uv[i+1] * cent.cu[i+1])) DESC,
-                           cent.ci ASC) AS rk
-            FROM u, cent
-        ) WHERE rk = 1
-    ),
-    enc0 AS (
-        SELECT vec_id, s, ci AS code FROM (
-            SELECT u.vec_id, s.s, cw.ci,
-                   row_number() OVER (
-                       PARTITION BY u.vec_id, s.s
-                       ORDER BY list_sum(list_transform(range(4), j ->
-                           (u.uv[s.s*4 + j + 1] - cw.cu[s.s*4 + j + 1])
-                         * (u.uv[s.s*4 + j + 1] - cw.cu[s.s*4 + j + 1])))
-                           ASC, cw.ci ASC) AS rk
-            FROM u, range(16) s(s), cw
-        ) WHERE rk = 1
-    ),
-    enc AS (
-        SELECT e0.vec_id, vb.bucket, list(e0.code ORDER BY e0.s) AS codes
-        FROM enc0 e0 JOIN vbucket vb ON vb.vec_id = e0.vec_id
-        GROUP BY e0.vec_id, vb.bucket
-    ),
-    p AS (
-        SELECT vec_id AS probe_id,
-               CASE WHEN nrm = 0 THEN v
-                    ELSE list_transform(v, x -> x / nrm) END AS pu
-        FROM n WHERE vec_id < 5
-    ),
-    pb AS (
-        SELECT probe_id, ci AS bucket FROM (
-            SELECT p.probe_id, cent.ci,
-                   row_number() OVER (PARTITION BY p.probe_id
-                       ORDER BY list_sum(list_transform(range(64),
-                           i -> p.pu[i+1] * cent.cu[i+1])) DESC,
-                           cent.ci ASC) AS rk
-            FROM p, cent
-        ) WHERE rk <= 4
-    ),
-    scored AS (
-        SELECT p.probe_id, e.vec_id,
-               floor(list_sum(list_transform(range(16), s ->
-                   list_sum(list_transform(range(4), j ->
-                       p.pu[s*4 + j + 1]
-                     * cbs.all_cu[e.codes[s+1] + 1][s*4 + j + 1]))))
-                   * 10000.0 + 0.5) / 10000.0 AS score
-        FROM p
-        JOIN pb ON pb.probe_id = p.probe_id
-        JOIN enc e ON e.bucket = pb.bucket
-        CROSS JOIN cbs
-    )
+ORACLE["q170_ann_index_injected_search"] = f"""
+    WITH {_IVFPQ_SCORED}
     SELECT probe_id, vec_id, score FROM (
         SELECT probe_id, vec_id, score,
                row_number() OVER (PARTITION BY probe_id
@@ -11377,38 +10943,8 @@ ORACLE["q170_ann_index_injected_search"] = """
 # injected centroids, argmax cosine with ties to the LOWEST cluster
 # (numpy argmax), zero vectors to cluster 0 (their dots are all zero,
 # so the tie-break lands there on both engines), then the histogram.
-ORACLE["q171_kmeans_assign_report"] = """
-    WITH v AS (
-        SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-        FROM embeddings
-    ),
-    n AS (
-        SELECT vec_id, v,
-               sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
-        FROM v
-    ),
-    u AS (
-        SELECT vec_id,
-               CASE WHEN nrm = 0 THEN v
-                    ELSE list_transform(v, x -> x / nrm) END AS uv
-        FROM n
-    ),
-    cent AS (
-        SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci,
-               CASE WHEN nrm = 0 THEN v
-                    ELSE list_transform(v, x -> x / nrm) END AS cu
-        FROM n ORDER BY vec_id LIMIT 8
-    ),
-    asg AS (
-        SELECT vec_id, ci AS cluster FROM (
-            SELECT u.vec_id, cent.ci,
-                   row_number() OVER (PARTITION BY u.vec_id
-                       ORDER BY list_sum(list_transform(range(len(u.uv)),
-                           i -> u.uv[i+1] * cent.cu[i+1])) DESC,
-                           cent.ci ASC) AS rk
-            FROM u, cent
-        ) WHERE rk = 1
-    )
+ORACLE["q171_kmeans_assign_report"] = f"""
+    WITH {_CLUSTER_ASSIGN}
     SELECT cluster::BIGINT AS cluster, count(*)::BIGINT AS n_members
     FROM asg GROUP BY cluster ORDER BY cluster
 """
@@ -11418,38 +10954,8 @@ ORACLE["q171_kmeans_assign_report"] = """
 # cosine for the within-cluster keep rule (sequential list_sum parity,
 # threshold compared on the UNROUNDED cosine exactly as
 # embedding_neardup filters) → per-cluster kept/dropped counts.
-ORACLE["q172_semantic_dedup_report"] = """
-    WITH v AS (
-        SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-        FROM embeddings
-    ),
-    n AS (
-        SELECT vec_id, v,
-               sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
-        FROM v
-    ),
-    u AS (
-        SELECT vec_id,
-               CASE WHEN nrm = 0 THEN v
-                    ELSE list_transform(v, x -> x / nrm) END AS uv
-        FROM n
-    ),
-    cent AS (
-        SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci,
-               CASE WHEN nrm = 0 THEN v
-                    ELSE list_transform(v, x -> x / nrm) END AS cu
-        FROM n ORDER BY vec_id LIMIT 8
-    ),
-    asg AS (
-        SELECT vec_id, ci AS cluster FROM (
-            SELECT u.vec_id, cent.ci,
-                   row_number() OVER (PARTITION BY u.vec_id
-                       ORDER BY list_sum(list_transform(range(len(u.uv)),
-                           i -> u.uv[i+1] * cent.cu[i+1])) DESC,
-                           cent.ci ASC) AS rk
-            FROM u, cent
-        ) WHERE rk = 1
-    ),
+ORACLE["q172_semantic_dedup_report"] = f"""
+    WITH {_CLUSTER_ASSIGN},
     m AS (
         SELECT n.vec_id, n.v, n.nrm, asg.cluster
         FROM n JOIN asg USING (vec_id)
@@ -11565,10 +11071,6 @@ def _q176_quality_sql(k: int = 5) -> str:
         f"WHEN {j + 1} THEN CAST('{c}' AS DECIMAL(16,12))"
         for j, c in enumerate(cums)
     )
-    q176_rows = ", ".join(
-        f"({qid}, '{qt}')" for qid, qt in _Q176_QUERIES
-    )
-
     def metrics(lane: str, res: str) -> str:
         return f"""
     nret_{lane} AS (
@@ -11608,40 +11110,10 @@ def _q176_quality_sql(k: int = 5) -> str:
     )"""
 
     return f"""
-    WITH {_bm25_lane_sql(q176_rows)},
+    WITH {_bm25_lane_sql(_Q176_QUERY_ROWS)},
     lex10 AS (SELECT query_id, doc_id, rk FROM lex WHERE rk <= 10),
     lex5 AS (SELECT query_id, doc_id, rk FROM lex WHERE rk <= {k}),
-    dv AS (
-        SELECT doc_id, {_Q142_EMBED.format(src="text")} AS v
-        FROM documents
-    ),
-    dn AS (
-        SELECT doc_id, v,
-               sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
-        FROM dv
-    ),
-    qv AS (
-        SELECT query_id, {_Q142_EMBED.format(src="qtext")} AS p
-        FROM (VALUES {q176_rows}) AS qq2(query_id, qtext)
-    ),
-    qn2 AS (
-        SELECT query_id, p,
-               sqrt(list_sum(list_transform(p, x -> x * x))) AS pn
-        FROM qv
-    ),
-    ds AS (
-        SELECT q.query_id, d.doc_id,
-               floor(list_sum(list_transform(range(len(d.v)),
-                         i -> q.p[i+1] * d.v[i+1])) / (q.pn * d.nrm)
-                     * 10000.0 + 0.5) / 10000.0 AS cosine
-        FROM qn2 q, dn d
-    ),
-    den AS (
-        SELECT query_id, doc_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cosine DESC, doc_id) AS rk
-        FROM ds
-    ),
+    {_dense_lane_sql(_Q176_QUERY_ROWS)},
     den10 AS (SELECT query_id, doc_id, rk FROM den WHERE rk <= 10),
     rel AS (SELECT query_id, doc_id FROM den WHERE rk <= {k}),
     fused AS (
@@ -11702,24 +11174,8 @@ ORACLE["q175_stream_interval_join_report"] = """
 # recall arithmetic. NO self-exclusion on either lane (probe ids are a
 # different namespace than packed chunk ids).
 ORACLE["q173_chunk_index_recall_report"] = f"""
-    WITH t AS (
-        SELECT doc_id,
-               list_filter(
-                   regexp_split_to_array(trim(text), '\\s+'),
-                   x -> x <> '') AS toks
-        FROM documents
-    ), c0 AS (
-        SELECT doc_id, toks,
-               CASE WHEN len(toks) <= 32 THEN 1
-                    ELSE CAST(floor((len(toks) - 32 + 23) / 24)
-                              AS BIGINT) + 1
-               END AS nc
-        FROM t
-    ), g AS (
-        SELECT doc_id, toks,
-               unnest(generate_series(0, nc - 1)) AS chunk_id
-        FROM c0
-    ), ch AS (
+    WITH {_CHUNK_CTES},
+    ch AS (
         SELECT doc_id * 4096 + chunk_id::BIGINT AS vec_id,
                array_to_string(
                    toks[chunk_id * 24 + 1 : chunk_id * 24 + 32], ' ')
@@ -11739,87 +11195,32 @@ ORACLE["q173_chunk_index_recall_report"] = f"""
         SELECT vec_id, v,
                sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
         FROM cv
-    ), c AS (
-        SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci, v AS cvv,
-               nrm AS cnn
-        FROM cn ORDER BY vec_id LIMIT 8
-    ), asg AS (
-        SELECT vec_id, ci AS bucket FROM (
-            SELECT cn.vec_id, c.ci,
-                   row_number() OVER (
-                       PARTITION BY cn.vec_id
-                       ORDER BY list_sum(list_transform(range(len(cn.v)),
-                                i -> cn.v[i+1] * c.cvv[i+1]))
-                                / (cn.nrm * c.cnn)
-                                DESC, c.ci DESC) AS rk
-            FROM cn, c
-        ) WHERE rk = 1
-    ), q AS (
+    ), {_cosine_centroids("cn", 8)},
+    {_cosine_buckets("asg", "cn", "vec_id", "v", "nrm", 1)},
+    q AS (
         SELECT query_id AS probe_id,
                {_Q142_EMBED.format(src="qtext")} AS pv
         FROM (VALUES {_Q142_QUERY_ROWS}) AS qq(query_id, qtext)
-    ), p AS (
+    ),
+    p AS (
         SELECT probe_id, pv,
                sqrt(list_sum(list_transform(pv, x -> x * x))) AS pn
         FROM q
-    ), pb AS (
-        SELECT probe_id, ci AS bucket FROM (
-            SELECT p.probe_id, c.ci,
-                   row_number() OVER (
-                       PARTITION BY p.probe_id
-                       ORDER BY list_sum(list_transform(range(len(p.pv)),
-                                i -> p.pv[i+1] * c.cvv[i+1]))
-                                / (p.pn * c.cnn)
-                                DESC, c.ci DESC) AS rk
-            FROM p, c
-        ) WHERE rk <= 4
-    ), cand AS (
+    ),
+    {_cosine_buckets("pb", "p", "probe_id", "pv", "pn", 4)},
+    cand AS (
         SELECT pb.probe_id, a.vec_id
         FROM pb JOIN asg a ON a.bucket = pb.bucket
-    ), appr AS (
-        SELECT probe_id, vec_id FROM (
-            SELECT cd.probe_id, cd.vec_id,
-                   row_number() OVER (PARTITION BY cd.probe_id
-                       ORDER BY floor(list_sum(list_transform(
-                           range(len(pp.pv)),
-                           i -> pp.pv[i+1] * cc.v[i+1])) / (pp.pn * cc.nrm)
-                           * 10000.0 + 0.5) / 10000.0 DESC,
-                           cd.vec_id) AS rk
-            FROM cand cd
-            JOIN cn cc ON cc.vec_id = cd.vec_id
-            JOIN p pp ON pp.probe_id = cd.probe_id
-        ) WHERE rk <= 5
-    ), ex AS (
-        SELECT probe_id, vec_id FROM (
-            SELECT p.probe_id, c2.vec_id,
-                   row_number() OVER (PARTITION BY p.probe_id
-                       ORDER BY floor(list_sum(list_transform(
-                           range(len(p.pv)),
-                           i -> p.pv[i+1] * c2.v[i+1])) / (p.pn * c2.nrm)
-                           * 10000.0 + 0.5) / 10000.0 DESC,
-                           c2.vec_id) AS rk
-            FROM p, cn c2
-        ) WHERE rk <= 5
     ),
-    ne AS (SELECT probe_id, count(*)::BIGINT AS n_exact FROM ex GROUP BY 1),
-    na AS (SELECT probe_id, count(*)::BIGINT AS n_approx FROM appr GROUP BY 1),
-    nh AS (
-        SELECT e.probe_id, count(*)::BIGINT AS n_hit
-        FROM ex e JOIN appr a USING (probe_id, vec_id) GROUP BY 1
-    )
-    -- FULL join mirrors recall_report (similarity.py): a probe seen
-    -- ONLY by the approx lane must round-trip as an n_exact=0 anomaly
-    -- row on BOTH engines, not surface as an opaque hash mismatch
-    SELECT probe_id,
-           coalesce(n_exact, 0)::BIGINT AS n_exact,
-           coalesce(n_approx, 0)::BIGINT AS n_approx,
-           coalesce(n_hit, 0)::BIGINT AS n_hit,
-           CASE WHEN coalesce(n_exact, 0) > 0 THEN
-               floor(coalesce(n_hit, 0)::DOUBLE / n_exact::DOUBLE
-                     * 10000.0 + 0.5) / 10000.0
-           END AS recall
-    FROM ne FULL JOIN na USING (probe_id) LEFT JOIN nh USING (probe_id)
-    ORDER BY probe_id
+    {_cosine_topk("appr", 5,
+                  "cand cd JOIN cn cc ON cc.vec_id = cd.vec_id"
+                  " JOIN p pp ON pp.probe_id = cd.probe_id",
+                  ("cd.probe_id", "pp.pv", "pp.pn"),
+                  ("cd.vec_id", "cc.v", "cc.nrm"))},
+    {_cosine_topk("ex", 5, "p, cn c2",
+                  ("p.probe_id", "p.pv", "p.pn"),
+                  ("c2.vec_id", "c2.v", "c2.nrm"))},
+    {_recall_tail()}
 """
 
 
@@ -11835,43 +11236,10 @@ ORACLE["q177_stream_funnel_report"] = ORACLE["q69_funnel"]
 # with q144/q176) and the dense exact top-3 (the q176 dense lane at
 # k=3); mining is pure integer set algebra, so the whole training
 # frame is hash-checkable.
-_Q178_ROWS = ", ".join(
-    f"({qid}, '{qt}')" for qid, qt in _Q176_QUERIES
-)
 ORACLE["q178_hard_negative_mining"] = f"""
-    WITH {_bm25_lane_sql(_Q178_ROWS)},
+    WITH {_bm25_lane_sql(_Q176_QUERY_ROWS)},
     lex10 AS (SELECT query_id, doc_id, rk FROM lex WHERE rk <= 10),
-    dv AS (
-        SELECT doc_id, {_Q142_EMBED.format(src="text")} AS v
-        FROM documents
-    ),
-    dn AS (
-        SELECT doc_id, v,
-               sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
-        FROM dv
-    ),
-    qv AS (
-        SELECT query_id, {_Q142_EMBED.format(src="qtext")} AS p
-        FROM (VALUES {_Q178_ROWS}) AS qq2(query_id, qtext)
-    ),
-    qn2 AS (
-        SELECT query_id, p,
-               sqrt(list_sum(list_transform(p, x -> x * x))) AS pn
-        FROM qv
-    ),
-    ds AS (
-        SELECT q.query_id, d.doc_id,
-               floor(list_sum(list_transform(range(len(d.v)),
-                         i -> q.p[i+1] * d.v[i+1])) / (q.pn * d.nrm)
-                     * 10000.0 + 0.5) / 10000.0 AS cosine
-        FROM qn2 q, dn d
-    ),
-    den AS (
-        SELECT query_id, doc_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cosine DESC, doc_id) AS rk
-        FROM ds
-    ),
+    {_dense_lane_sql(_Q176_QUERY_ROWS)},
     pos AS (SELECT query_id, doc_id FROM den WHERE rk <= 3),
     neg AS (
         SELECT l.query_id, l.doc_id,
@@ -11947,41 +11315,10 @@ ORACLE["q180_mutual_knn_graph"] = """
 # (quality, doc_id) order (both engines share the remainder-to-
 # leading-buckets ntile rule); cells are counts, one pround division,
 # and min/max of already-rounded scores — no float means anywhere.
-ORACLE["q181_quality_calibration"] = """
-    WITH t AS (
-        SELECT doc_id, text,
-               regexp_split_to_array(trim(text), '\\s+') AS toks
-        FROM documents
-    ),
-    s AS (
-        SELECT doc_id,
-               length(text) AS n_chars_m,
-               len(toks) AS n_tokens,
-               len(regexp_extract_all(text, '[^\\w\\s]')) AS n_punct,
-               len(list_filter(list_transform(toks, x -> lower(x)),
-                   x -> list_contains(
-                       ['the','a','of','and','to','in','is',
-                        'le','la','et','les','des','un','une',
-                        'el','y','los','de','una',
-                        'der','die','das','und','ein','zu','von',
-                        'de5','shi4','le5','zai4','he2','you3','wo3'], x)))
-                   AS n_stop
-        FROM t
-    ),
-    r AS (
-        SELECT doc_id, n_tokens,
-               floor(n_punct / greatest(n_chars_m, 1)::DOUBLE * 10000.0 + 0.5)
-                   / 10000.0 AS punct_ratio,
-               floor(n_stop / greatest(n_tokens, 1)::DOUBLE * 10000.0 + 0.5)
-                   / 10000.0 AS stop_ratio,
-               least(n_tokens::DOUBLE / 100.0, 1.0) AS length_term
-        FROM s
-    ),
+ORACLE["q181_quality_calibration"] = f"""
+    WITH {_quality_ctes()},
     q AS (
-        SELECT doc_id, n_tokens >= 40 AS is_good,
-               floor((0.5 * length_term + 0.3 * (1.0 - punct_ratio)
-                     + 0.2 * stop_ratio) * 10000.0 + 0.5) / 10000.0
-                   AS quality
+        SELECT doc_id, n_tokens >= 40 AS is_good, {_QUALITY} AS quality
         FROM r
     ),
     b AS (
@@ -12012,64 +11349,15 @@ ORACLE["q182_stream_window_report"] = ORACLE["q42_time_bucket"]
 # nodes as probes; mutual filter + per-node incidence + the shared
 # FULL-JOIN recall tail keyed on node.
 ORACLE["q183_knn_graph_recall_report"] = f"""
-    WITH pl AS (SELECT {_lsh_planes_literal()}::DOUBLE[] AS flat),
-    v AS (
-        SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-        FROM embeddings
-    ),
-    n AS (
-        SELECT vec_id, v,
-               sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
-        FROM v
-    ),
-    sigs AS (
-        SELECT n.vec_id, t.t,
-               (t.t * 64 + list_sum(list_transform(range(6), b ->
-                   CASE WHEN list_sum(list_transform(range(len(n.v)),
-                        i -> n.v[i+1] * pl.flat[(t.t*6 + b)*64 + i + 1]))
-                        >= 0
-                   THEN (1 << (5 - b)) ELSE 0 END)))::INT AS bucket
-        FROM n, range(4) t(t), pl
-    ),
-    pbuckets AS (
-        SELECT DISTINCT probe_id, bucket FROM (
-            SELECT s.vec_id AS probe_id, s.bucket FROM sigs s
-            UNION ALL
-            SELECT s.vec_id AS probe_id, xor(s.bucket, (1 << f.i)::INT)
-            FROM sigs s, range(6) f(i)
-        )
-    ),
-    cand AS (
-        SELECT DISTINCT pb.probe_id, s.vec_id
-        FROM pbuckets pb JOIN sigs s ON s.bucket = pb.bucket
-        WHERE s.vec_id <> pb.probe_id
-    ),
-    appr_d AS (
-        SELECT probe_id, vec_id FROM (
-            SELECT cd.probe_id, cd.vec_id,
-                   row_number() OVER (PARTITION BY cd.probe_id
-                       ORDER BY floor(list_sum(list_transform(
-                           range(len(cc.v)),
-                           i -> pp.v[i+1] * cc.v[i+1])) / (pp.nrm * cc.nrm)
-                           * 10000.0 + 0.5) / 10000.0 DESC,
-                           cd.vec_id) AS rk
-            FROM cand cd
-            JOIN n cc ON cc.vec_id = cd.vec_id
-            JOIN n pp ON pp.vec_id = cd.probe_id
-        ) WHERE rk <= 10
-    ),
-    ex_d AS (
-        SELECT probe_id, vec_id FROM (
-            SELECT a.vec_id AS probe_id, b.vec_id,
-                   row_number() OVER (PARTITION BY a.vec_id
-                       ORDER BY floor(list_sum(list_transform(
-                           range(len(a.v)),
-                           i -> a.v[i+1] * b.v[i+1])) / (a.nrm * b.nrm)
-                           * 10000.0 + 0.5) / 10000.0 DESC,
-                           b.vec_id) AS rk
-            FROM n a, n b WHERE b.vec_id <> a.vec_id
-        ) WHERE rk <= 10
-    ),
+    WITH {_lsh_candidates("")},
+    {_cosine_topk("appr_d", 10,
+                  "cand cd JOIN n cc ON cc.vec_id = cd.vec_id"
+                  " JOIN n pp ON pp.vec_id = cd.probe_id",
+                  ("cd.probe_id", "pp.v", "pp.nrm"),
+                  ("cd.vec_id", "cc.v", "cc.nrm"))},
+    {_cosine_topk("ex_d", 10, "n a, n b WHERE b.vec_id <> a.vec_id",
+                  ("a.vec_id", "a.v", "a.nrm"),
+                  ("b.vec_id", "b.v", "b.nrm"))},
     em AS (
         SELECT a.probe_id AS src, a.vec_id AS dst
         FROM ex_d a JOIN ex_d b
@@ -12090,22 +11378,7 @@ ORACLE["q183_knn_graph_recall_report"] = f"""
         SELECT src AS node, dst FROM am
         UNION ALL SELECT dst AS node, src AS dst FROM am
     ),
-    ne AS (SELECT node, count(*)::BIGINT AS n_exact FROM ei GROUP BY 1),
-    na AS (SELECT node, count(*)::BIGINT AS n_approx FROM ai GROUP BY 1),
-    nh AS (
-        SELECT e.node, count(*)::BIGINT AS n_hit
-        FROM ei e JOIN ai a USING (node, dst) GROUP BY 1
-    )
-    SELECT node,
-           coalesce(n_exact, 0)::BIGINT AS n_exact,
-           coalesce(n_approx, 0)::BIGINT AS n_approx,
-           coalesce(n_hit, 0)::BIGINT AS n_hit,
-           CASE WHEN coalesce(n_exact, 0) > 0 THEN
-               floor(coalesce(n_hit, 0)::DOUBLE / n_exact::DOUBLE
-                     * 10000.0 + 0.5) / 10000.0
-           END AS recall
-    FROM ne FULL JOIN na USING (node) LEFT JOIN nh USING (node)
-    ORDER BY node
+    {_recall_tail("node", "ei", "ai", "dst")}
 """
 
 
@@ -12114,44 +11387,14 @@ ORACLE["q183_knn_graph_recall_report"] = f"""
 # the report rows unstack from it. The quota rank orders
 # prior-survivors first (CASE 0/1 == Spark's boolean desc), so
 # qualifying rows rank 1..n among themselves on both engines.
-ORACLE["q184_curation_waterfall"] = """
-    WITH t AS (
-        SELECT doc_id, source, text,
-               regexp_split_to_array(trim(text), '\\s+') AS toks
-        FROM documents
-    ),
-    s AS (
-        SELECT doc_id, source, text,
-               length(text) AS n_chars_m,
-               len(toks) AS n_tokens,
-               len(regexp_extract_all(text, '[^\\w\\s]')) AS n_punct,
-               len(list_filter(list_transform(toks, x -> lower(x)),
-                   x -> list_contains(
-                       ['the','a','of','and','to','in','is',
-                        'le','la','et','les','des','un','une',
-                        'el','y','los','de','una',
-                        'der','die','das','und','ein','zu','von',
-                        'de5','shi4','le5','zai4','he2','you3','wo3'], x)))
-                   AS n_stop
-        FROM t
-    ),
-    r AS (
-        SELECT doc_id, source, text, n_tokens,
-               floor(n_punct / greatest(n_chars_m, 1)::DOUBLE * 10000.0 + 0.5)
-                   / 10000.0 AS punct_ratio,
-               floor(n_stop / greatest(n_tokens, 1)::DOUBLE * 10000.0 + 0.5)
-                   / 10000.0 AS stop_ratio,
-               least(n_tokens::DOUBLE / 100.0, 1.0) AS length_term
-        FROM s
-    ),
+ORACLE["q184_curation_waterfall"] = f"""
+    WITH {_quality_ctes(carry=", source")},
     q AS (
-        SELECT doc_id, source, n_tokens,
-               md5(trim(regexp_replace(regexp_replace(lower(text),
+        SELECT r.doc_id, r.source, r.n_tokens,
+               md5(trim(regexp_replace(regexp_replace(lower(dd.text),
                    '[^\\w\\s]', '', 'g'), '\\s+', ' ', 'g'))) AS canon,
-               floor((0.5 * length_term + 0.3 * (1.0 - punct_ratio)
-                     + 0.2 * stop_ratio) * 10000.0 + 0.5) / 10000.0
-                   AS quality
-        FROM r
+               {_QUALITY} AS quality
+        FROM r JOIN documents dd ON dd.doc_id = r.doc_id
     ),
     flg AS (
         SELECT doc_id, source, quality, n_tokens,
@@ -12264,6 +11507,72 @@ ORACLE["q188_knn_index_erased"] = ORACLE["q180_mutual_knn_graph"].replace(
 )
 
 
+# The 64-bit aHash of ``v`` (64 samples summing to ``tot``) as four
+# 16-bit band columns b0..b3: bit i of band k is set iff sample
+# 16k+i times 64 exceeds the sum.
+_AHASH_BANDS = """list_sum(list_transform(range(16), i -> CASE
+                   WHEN v[CAST(i AS INT) + 1] * 64 > tot
+                   THEN (1::BIGINT << i) ELSE 0 END))::BIGINT AS b0,
+               list_sum(list_transform(range(16), i -> CASE
+                   WHEN v[CAST(i AS INT) + 17] * 64 > tot
+                   THEN (1::BIGINT << i) ELSE 0 END))::BIGINT AS b1,
+               list_sum(list_transform(range(16), i -> CASE
+                   WHEN v[CAST(i AS INT) + 33] * 64 > tot
+                   THEN (1::BIGINT << i) ELSE 0 END))::BIGINT AS b2,
+               list_sum(list_transform(range(16), i -> CASE
+                   WHEN v[CAST(i AS INT) + 49] * 64 > tot
+                   THEN (1::BIGINT << i) ELSE 0 END))::BIGINT AS b3"""
+
+
+def _phash_hamming(x: str, y: str) -> str:
+    """Hamming distance of the banded fingerprints of rows x and y."""
+    return f"""(bit_count(xor({x}.b0, {y}.b0)) + bit_count(xor({x}.b1, {y}.b1))
+                + bit_count(xor({x}.b2, {y}.b2))
+                + bit_count(xor({x}.b3, {y}.b3)))"""
+
+
+def _phash_band_hit(x: str, y: str) -> str:
+    """Rows x and y share at least one band."""
+    return (
+        f"({x}.b0 = {y}.b0 OR {x}.b1 = {y}.b1"
+        f" OR {x}.b2 = {y}.b2 OR {x}.b3 = {y}.b3)"
+    )
+
+
+def _phash_match(x: str, y: str) -> str:
+    """The pHash near-dup rule: a shared band and Hamming <= 3."""
+    return f"{_phash_band_hit(x, y)} AND {_phash_hamming(x, y)} <= 3"
+
+
+def _phash_admitted(batch: str, index: str) -> str:
+    """The ``batch`` rows a gate-and-fold admits: no near-dup in
+    ``index``, and no lower-id near-dup inside ``batch`` itself
+    (keep-lowest-id)."""
+    return f"""
+        SELECT x.* FROM {batch} x
+        WHERE NOT EXISTS (
+            SELECT 1 FROM {index} y WHERE {_phash_match("x", "y")}
+        )
+        AND NOT EXISTS (
+            SELECT 1 FROM {batch} w
+            WHERE w.doc_id < x.doc_id AND {_phash_match("x", "w")}
+        )
+    """
+
+
+# q191/q192: the stored index (originals with doc_id % 4 <> 1) and the
+# gated batch (the held-out originals plus every re-encoded twin).
+_PHASH_GATE_CTES = """
+    , stored AS (
+        SELECT * FROM b WHERE doc_id < 1000000 AND doc_id % 4 <> 1
+    ),
+    batch AS (
+        SELECT * FROM b
+        WHERE (doc_id < 1000000 AND doc_id % 4 = 1)
+           OR doc_id >= 1000000
+    )"""
+
+
 # q189/q190: the oracle replays the 64-bit average-hash byte-for-byte.
 # The raster is the printable-ASCII projection of the text (bytes ==
 # characters on both engines), sample j is the byte at position
@@ -12274,7 +11583,7 @@ ORACLE["q188_knn_index_erased"] = ORACLE["q180_mutual_knn_graph"].replace(
 # pigeonhole over 4 bands) and verify with bit_count(xor). The // 64
 # below is DuckDB INTEGER division (both operands BIGINT — the
 # verify-skill rule about //'s true-division trap on doubles).
-_PHASH_BANDS_SQL = """
+_PHASH_BANDS_SQL = f"""
     WITH a AS (
         SELECT doc_id, source,
                regexp_replace(text, '[^\\x20-\\x7E]', '', 'g') AS t,
@@ -12304,28 +11613,15 @@ _PHASH_BANDS_SQL = """
     ),
     b AS (
         SELECT doc_id, source,
-               list_sum(list_transform(range(16), i -> CASE
-                   WHEN v[CAST(i AS INT) + 1] * 64 > tot
-                   THEN (1::BIGINT << i) ELSE 0 END))::BIGINT AS b0,
-               list_sum(list_transform(range(16), i -> CASE
-                   WHEN v[CAST(i AS INT) + 17] * 64 > tot
-                   THEN (1::BIGINT << i) ELSE 0 END))::BIGINT AS b1,
-               list_sum(list_transform(range(16), i -> CASE
-                   WHEN v[CAST(i AS INT) + 33] * 64 > tot
-                   THEN (1::BIGINT << i) ELSE 0 END))::BIGINT AS b2,
-               list_sum(list_transform(range(16), i -> CASE
-                   WHEN v[CAST(i AS INT) + 49] * 64 > tot
-                   THEN (1::BIGINT << i) ELSE 0 END))::BIGINT AS b3
+               {_AHASH_BANDS}
         FROM f
     ),
     pairs AS (
         SELECT x.doc_id AS id_a, y.doc_id AS id_b,
-               (bit_count(xor(x.b0, y.b0)) + bit_count(xor(x.b1, y.b1))
-                + bit_count(xor(x.b2, y.b2))
-                + bit_count(xor(x.b3, y.b3)))::BIGINT AS hamming
+               {_phash_hamming("x", "y")}::BIGINT AS hamming
         FROM b x JOIN b y
           ON x.doc_id < y.doc_id
-         AND (x.b0 = y.b0 OR x.b1 = y.b1 OR x.b2 = y.b2 OR x.b3 = y.b3)
+         AND {_phash_band_hit("x", "y")}
     )
 """
 
@@ -12345,25 +11641,10 @@ ORACLE["q189_phash_neardup"] = (
 # set per batch row (empty group -> is_dup false, NULL distances).
 ORACLE["q191_phash_index_gate"] = (
     _PHASH_BANDS_SQL
-    + """
-    , stored AS (
-        SELECT * FROM b WHERE doc_id < 1000000 AND doc_id % 4 <> 1
-    ),
-    batch AS (
-        SELECT * FROM b
-        WHERE (doc_id < 1000000 AND doc_id % 4 = 1)
-           OR doc_id >= 1000000
-    ),
+    + f"""{_PHASH_GATE_CTES},
     m AS (
-        SELECT x.doc_id, y.doc_id AS dup_of,
-               (bit_count(xor(x.b0, y.b0)) + bit_count(xor(x.b1, y.b1))
-                + bit_count(xor(x.b2, y.b2))
-                + bit_count(xor(x.b3, y.b3))) AS h
-        FROM batch x JOIN stored y
-          ON (x.b0 = y.b0 OR x.b1 = y.b1 OR x.b2 = y.b2 OR x.b3 = y.b3)
-        WHERE (bit_count(xor(x.b0, y.b0)) + bit_count(xor(x.b1, y.b1))
-               + bit_count(xor(x.b2, y.b2))
-               + bit_count(xor(x.b3, y.b3))) <= 3
+        SELECT x.doc_id, y.doc_id AS dup_of, {_phash_hamming("x", "y")} AS h
+        FROM batch x JOIN stored y ON {_phash_match("x", "y")}
     )
     SELECT t.doc_id,
            count(m.dup_of) > 0 AS is_dup,
@@ -12381,22 +11662,10 @@ ORACLE["q191_phash_index_gate"] = (
 # micro-batch-invariant).
 ORACLE["q192_stream_phash_gate"] = (
     _PHASH_BANDS_SQL
-    + """
-    , stored AS (
-        SELECT * FROM b WHERE doc_id < 1000000 AND doc_id % 4 <> 1
-    ),
-    batch AS (
-        SELECT * FROM b
-        WHERE (doc_id < 1000000 AND doc_id % 4 = 1)
-           OR doc_id >= 1000000
-    ),
+    + f"""{_PHASH_GATE_CTES},
     m AS (
         SELECT DISTINCT x.doc_id
-        FROM batch x JOIN stored y
-          ON (x.b0 = y.b0 OR x.b1 = y.b1 OR x.b2 = y.b2 OR x.b3 = y.b3)
-        WHERE (bit_count(xor(x.b0, y.b0)) + bit_count(xor(x.b1, y.b1))
-               + bit_count(xor(x.b2, y.b2))
-               + bit_count(xor(x.b3, y.b3))) <= 3
+        FROM batch x JOIN stored y ON {_phash_match("x", "y")}
     )
     SELECT t.doc_id FROM batch t LEFT JOIN m USING (doc_id)
     WHERE m.doc_id IS NULL ORDER BY t.doc_id
@@ -12496,7 +11765,7 @@ ORACLE["q190_phash_survivors"] = (
 # twins.
 ORACLE["q194_stream_phash_ingest_fold"] = (
     _PHASH_BANDS_SQL
-    + """
+    + f"""
     , stored0 AS (
         SELECT * FROM b WHERE doc_id < 1000000 AND doc_id % 4 = 0
     ),
@@ -12504,28 +11773,7 @@ ORACLE["q194_stream_phash_ingest_fold"] = (
         SELECT * FROM b
         WHERE doc_id < 1000000 AND doc_id % 4 IN (1, 2)
     ),
-    s1 AS (
-        SELECT x.* FROM b1 x
-        WHERE NOT EXISTS (
-            SELECT 1 FROM stored0 y
-            WHERE (x.b0 = y.b0 OR x.b1 = y.b1
-                   OR x.b2 = y.b2 OR x.b3 = y.b3)
-              AND (bit_count(xor(x.b0, y.b0))
-                   + bit_count(xor(x.b1, y.b1))
-                   + bit_count(xor(x.b2, y.b2))
-                   + bit_count(xor(x.b3, y.b3))) <= 3
-        )
-        AND NOT EXISTS (
-            SELECT 1 FROM b1 w
-            WHERE w.doc_id < x.doc_id
-              AND (x.b0 = w.b0 OR x.b1 = w.b1
-                   OR x.b2 = w.b2 OR x.b3 = w.b3)
-              AND (bit_count(xor(x.b0, w.b0))
-                   + bit_count(xor(x.b1, w.b1))
-                   + bit_count(xor(x.b2, w.b2))
-                   + bit_count(xor(x.b3, w.b3))) <= 3
-        )
-    ),
+    s1 AS ({_phash_admitted("b1", "stored0")}),
     stored1 AS (
         SELECT * FROM stored0 UNION ALL SELECT * FROM s1
     ),
@@ -12534,28 +11782,7 @@ ORACLE["q194_stream_phash_ingest_fold"] = (
         WHERE doc_id >= 1000000
            OR (doc_id < 1000000 AND doc_id % 4 = 3)
     ),
-    s2 AS (
-        SELECT x.* FROM b2 x
-        WHERE NOT EXISTS (
-            SELECT 1 FROM stored1 y
-            WHERE (x.b0 = y.b0 OR x.b1 = y.b1
-                   OR x.b2 = y.b2 OR x.b3 = y.b3)
-              AND (bit_count(xor(x.b0, y.b0))
-                   + bit_count(xor(x.b1, y.b1))
-                   + bit_count(xor(x.b2, y.b2))
-                   + bit_count(xor(x.b3, y.b3))) <= 3
-        )
-        AND NOT EXISTS (
-            SELECT 1 FROM b2 w
-            WHERE w.doc_id < x.doc_id
-              AND (x.b0 = w.b0 OR x.b1 = w.b1
-                   OR x.b2 = w.b2 OR x.b3 = w.b3)
-              AND (bit_count(xor(x.b0, w.b0))
-                   + bit_count(xor(x.b1, w.b1))
-                   + bit_count(xor(x.b2, w.b2))
-                   + bit_count(xor(x.b3, w.b3))) <= 3
-        )
-    )
+    s2 AS ({_phash_admitted("b2", "stored1")})
     SELECT doc_id, 0::BIGINT AS admitted_in_batch FROM s1
     UNION ALL
     SELECT doc_id, 1::BIGINT FROM s2
@@ -12573,55 +11800,9 @@ ORACLE["q194_stream_phash_ingest_fold"] = (
 # fingerprint reduces to one 16-bit pattern (bit i set iff
 # byte_i * 64 > 4 * sum(bytes)); adjacent-frame Hamming = 4x the
 # 16-bit xor popcount, compared through the same clip-keyed lag.
-ORACLE["q195_video_scene_ladder"] = """
-    WITH docs AS (
-        SELECT doc_id,
-               regexp_replace(text, '[^\\x20-\\x7E]', '', 'g') AS t
-        FROM documents
-    ),
-    d AS (
-        SELECT doc_id, t,
-               1000 * (1 + ((strpos('0123456789abcdef',
-                             substr(md5(t), 2, 1)) - 1) % 8)) AS dur
-        FROM docs WHERE length(t) > 0
-    ),
-    e AS (
-        SELECT doc_id, t,
-               CAST(unnest(range((dur + 1023) // 1024)) AS BIGINT)
-                   AS frame
-        FROM d
-    ),
-    f AS (
-        SELECT doc_id, frame,
-               md5(t || chr(0) || chr(4 * CAST(frame AS INT))
-                   || repeat(chr(0), 6)) AS mh
-        FROM e
-    ),
-    vals AS (
-        SELECT doc_id, frame,
-               list_transform(range(16), i ->
-                   ((strpos('0123456789abcdef',
-                            substr(mh, 2 * CAST(i AS INT) + 1, 1)) - 1) * 16
-                    + (strpos('0123456789abcdef',
-                              substr(mh, 2 * CAST(i AS INT) + 2, 1)) - 1)
-                   )::BIGINT) AS v
-        FROM f
-    ),
-    fb AS (
-        SELECT doc_id, frame,
-               list_sum(list_transform(range(16), i -> CASE
-                   WHEN v[CAST(i AS INT) + 1] * 64
-                        > CAST(list_sum(v) AS BIGINT) * 4
-                   THEN (1::BIGINT << i) ELSE 0 END))::BIGINT AS b16
-        FROM vals
-    ),
-    ham AS (
-        SELECT doc_id, frame,
-               4 * bit_count(xor(b16,
-                   lag(b16) OVER (PARTITION BY doc_id ORDER BY frame)))
-                   AS hamming
-        FROM fb
-    ),
+ORACLE["q195_video_scene_ladder"] = f"""
+    WITH {_AV_DOCS},
+    {_video_frames_ctes("docs WHERE length(t) > 0")},
     rep AS (
         SELECT doc_id, frame, hamming,
                (hamming IS NULL OR hamming > 8) AS cut
@@ -12645,12 +11826,8 @@ ORACLE["q195_video_scene_ladder"] = """
 # both engines, identical op order). Then q28's blocked-cosine
 # arithmetic: block key (duration, floor(mel0 * 1000)), list_sum dot,
 # raw-cosine threshold, pround-4 output.
-ORACLE["q196_audio_neardup"] = """
-    WITH docs AS (
-        SELECT doc_id,
-               regexp_replace(text, '[^\\x20-\\x7E]', '', 'g') AS t
-        FROM documents
-    ),
+ORACLE["q196_audio_neardup"] = f"""
+    WITH {_AV_DOCS},
     pop AS (
         SELECT doc_id, t FROM docs WHERE length(t) > 0
         UNION ALL
@@ -12658,9 +11835,7 @@ ORACLE["q196_audio_neardup"] = """
         WHERE length(t) > 0 AND doc_id % 5 = 0
     ),
     dur AS (
-        SELECT doc_id, t,
-               500 * (1 + (('0x' || substr(md5(t), 1, 2))::BIGINT % 20))
-                   AS dms
+        SELECT doc_id, t, {_AUDIO_DMS} AS dms
         FROM pop
     ),
     mi AS (
@@ -12674,8 +11849,7 @@ ORACLE["q196_audio_neardup"] = """
     ),
     xv AS (
         SELECT doc_id, dms, i,
-               floor(('0x' || substr(mh, 1, 8))::BIGINT::DOUBLE
-                     / 4294967296.0 * 1000000.0 + 0.5) / 1000000.0 AS fv
+               {_audio_mel("mh")} AS fv
         FROM mi
     ),
     feat AS (
@@ -12709,61 +11883,15 @@ ORACLE["q196_audio_neardup"] = """
 # bands equal the same 16-bit pattern, so the operator's band join +
 # Hamming<=3 verify reduces EXACTLY to b16 equality across distinct
 # clips — the oracle joins on it directly.
-ORACLE["q197_keyframe_dedup"] = """
-    WITH docs AS (
-        SELECT doc_id,
-               regexp_replace(text, '[^\\x20-\\x7E]', '', 'g') AS t
-        FROM documents
-    ),
+ORACLE["q197_keyframe_dedup"] = f"""
+    WITH {_AV_DOCS},
     pop AS (
         SELECT doc_id, t FROM docs WHERE length(t) > 0
         UNION ALL
         SELECT doc_id + 3000000, t FROM docs
         WHERE length(t) > 0 AND doc_id % 10 = 0
     ),
-    d AS (
-        SELECT doc_id, t,
-               1000 * (1 + ((strpos('0123456789abcdef',
-                             substr(md5(t), 2, 1)) - 1) % 8)) AS dur
-        FROM pop
-    ),
-    e AS (
-        SELECT doc_id, t,
-               CAST(unnest(range((dur + 1023) // 1024)) AS BIGINT)
-                   AS frame
-        FROM d
-    ),
-    f AS (
-        SELECT doc_id, frame,
-               md5(t || chr(0) || chr(4 * CAST(frame AS INT))
-                   || repeat(chr(0), 6)) AS mh
-        FROM e
-    ),
-    vals AS (
-        SELECT doc_id, frame,
-               list_transform(range(16), i ->
-                   ((strpos('0123456789abcdef',
-                            substr(mh, 2 * CAST(i AS INT) + 1, 1)) - 1) * 16
-                    + (strpos('0123456789abcdef',
-                              substr(mh, 2 * CAST(i AS INT) + 2, 1)) - 1)
-                   )::BIGINT) AS v
-        FROM f
-    ),
-    fb AS (
-        SELECT doc_id, frame,
-               list_sum(list_transform(range(16), i -> CASE
-                   WHEN v[CAST(i AS INT) + 1] * 64
-                        > CAST(list_sum(v) AS BIGINT) * 4
-                   THEN (1::BIGINT << i) ELSE 0 END))::BIGINT AS b16
-        FROM vals
-    ),
-    ham AS (
-        SELECT doc_id, frame, b16,
-               4 * bit_count(xor(b16,
-                   lag(b16) OVER (PARTITION BY doc_id ORDER BY frame)))
-                   AS hamming
-        FROM fb
-    ),
+    {_video_frames_ctes("pop")},
     kf AS (
         SELECT doc_id, frame, doc_id * 16 + frame AS kfid, b16
         FROM ham WHERE hamming IS NULL OR hamming > 8
@@ -12791,36 +11919,19 @@ ORACLE["q197_keyframe_dedup"] = """
 # whitespace-free token is why the text lane can't see image twins).
 _P_SQL = "'" + _PRINTABLE.replace("'", "''") + "'"
 _S_SQL = "'" + _SHIFTED.replace("'", "''") + "'"
-_POP_SHINGLE_CTE = _SHINGLE_CTE.replace("FROM documents", "FROM pop")
-ORACLE["q198_crossmodal_dedup"] = f"""
-    WITH RECURSIVE docs0 AS (
-        SELECT doc_id,
-               regexp_replace(text, '[^\\x20-\\x7E]', '', 'g') AS t
-        FROM documents
-    ),
+_Q198_COMP = f"""
+    WITH RECURSIVE {_AV_DOCS},
     pop AS (
-        SELECT doc_id, t AS text FROM docs0 WHERE length(t) > 0
+        SELECT doc_id, t AS text FROM docs WHERE length(t) > 0
         UNION ALL
         SELECT doc_id + 1000000, translate(t, {_P_SQL}, {_S_SQL})
-        FROM docs0 WHERE length(t) > 0 AND doc_id % 3 = 0
+        FROM docs WHERE length(t) > 0 AND doc_id % 3 = 0
         UNION ALL
         SELECT doc_id + 2000000, t || ' zz yy xx ww'
-        FROM docs0 WHERE length(t) > 0 AND doc_id % 7 = 0
+        FROM docs WHERE length(t) > 0 AND doc_id % 7 = 0
     ),
-    {_POP_SHINGLE_CTE},
-    sets AS (
-        SELECT doc_id, list_sort(list(DISTINCT shingle)) AS shs
-        FROM sh GROUP BY doc_id
-    ),
-    ptxt AS (
-        SELECT c.id_a, c.id_b
-        FROM cand c
-        JOIN sets a ON a.doc_id = c.id_a
-        JOIN sets b ON b.doc_id = c.id_b
-        WHERE len(list_intersect(a.shs, b.shs))::DOUBLE
-              / (len(a.shs) + len(b.shs)
-                 - len(list_intersect(a.shs, b.shs)))::DOUBLE >= 0.5
-    ),
+    {_minhash_ctes("pop")},
+    {_VERIFIED_CTE},
     s2 AS (
         SELECT doc_id,
                list_transform(range(64), j -> ord(substr(
@@ -12832,63 +11943,26 @@ ORACLE["q198_crossmodal_dedup"] = f"""
     f2 AS (SELECT doc_id, v, list_sum(v)::BIGINT AS tot FROM s2),
     b2 AS (
         SELECT doc_id,
-               list_sum(list_transform(range(16), i -> CASE
-                   WHEN v[CAST(i AS INT) + 1] * 64 > tot
-                   THEN (1::BIGINT << i) ELSE 0 END))::BIGINT AS b0,
-               list_sum(list_transform(range(16), i -> CASE
-                   WHEN v[CAST(i AS INT) + 17] * 64 > tot
-                   THEN (1::BIGINT << i) ELSE 0 END))::BIGINT AS b1,
-               list_sum(list_transform(range(16), i -> CASE
-                   WHEN v[CAST(i AS INT) + 33] * 64 > tot
-                   THEN (1::BIGINT << i) ELSE 0 END))::BIGINT AS b2,
-               list_sum(list_transform(range(16), i -> CASE
-                   WHEN v[CAST(i AS INT) + 49] * 64 > tot
-                   THEN (1::BIGINT << i) ELSE 0 END))::BIGINT AS b3
+               {_AHASH_BANDS}
         FROM f2
     ),
     pimg AS (
         SELECT x.doc_id AS id_a, y.doc_id AS id_b
         FROM b2 x JOIN b2 y
-          ON x.doc_id < y.doc_id
-         AND (x.b0 = y.b0 OR x.b1 = y.b1 OR x.b2 = y.b2 OR x.b3 = y.b3)
-        WHERE (bit_count(xor(x.b0, y.b0)) + bit_count(xor(x.b1, y.b1))
-               + bit_count(xor(x.b2, y.b2))
-               + bit_count(xor(x.b3, y.b3))) <= 3
+          ON x.doc_id < y.doc_id AND {_phash_match("x", "y")}
     ),
     uni AS (
         SELECT id_a, id_b FROM pimg
         UNION
-        SELECT id_a, id_b FROM ptxt
+        SELECT id_a, id_b FROM verified
     ),
-    edges AS (
-        SELECT id_a AS src, id_b AS dst FROM uni
-        UNION ALL
-        SELECT id_b AS src, id_a AS dst FROM uni
-    ),
-    nodes AS (SELECT DISTINCT src AS id FROM edges),
-    reach(id, r) AS (
-        SELECT id, id FROM nodes
-        UNION
-        SELECT e.src, re.r FROM edges e JOIN reach re ON re.id = e.dst
-    ),
-    comp AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)
-    SELECT id AS doc_id, cluster_id,
-           count(*) OVER (PARTITION BY cluster_id) AS cluster_size
-    FROM comp ORDER BY doc_id
-"""
+    {_components_ctes("uni")}"""
+ORACLE["q198_crossmodal_dedup"] = _Q198_COMP + _CLUSTERS_SELECT
 
-# q199: q198's union-CTE closure composed with the q86 survivor rank —
-# within each family keep the longest member (tie: lowest doc_id);
-# unmatched records pass through with family_size 1. The CTE chain up
-# to comp is byte-identical to q198's.
-ORACLE["q199_crossmodal_survivors"] = ORACLE[
-    "q198_crossmodal_dedup"
-].replace(
-    """    SELECT id AS doc_id, cluster_id,
-           count(*) OVER (PARTITION BY cluster_id) AS cluster_size
-    FROM comp ORDER BY doc_id
-""",
-    """,
+# q199: q198's union-graph closure (_Q198_COMP) composed with the q86
+# survivor rank — within each family keep the longest member (tie:
+# lowest doc_id); unmatched records pass through with family_size 1.
+ORACLE["q199_crossmodal_survivors"] = f"""{_Q198_COMP},
     fam AS (
         SELECT p.doc_id, length(p.text) AS n_chars, c.cluster_id,
                count(*) OVER (PARTITION BY c.cluster_id) AS family_size,
@@ -12905,8 +11979,7 @@ ORACLE["q199_crossmodal_survivors"] = ORACLE[
     FROM pop p
     WHERE NOT EXISTS (SELECT 1 FROM comp c WHERE c.id = p.doc_id)
     ORDER BY doc_id
-""",
-)
+"""
 
 # q200: both AV artifacts re-derived on the REMAINING population
 # (erase == never-ingested, checked by integer content checksums, not
@@ -12915,68 +11988,17 @@ ORACLE["q199_crossmodal_survivors"] = ORACLE[
 # frame); audio = q196's extractor replay without the re-encode union
 # (checksum dms + floor(mel0*1000), both integers). Deletion request:
 # doc_id % 9 == 4.
-ORACLE["q200_av_erasure_report"] = """
-    WITH docs AS (
-        SELECT doc_id,
-               regexp_replace(text, '[^\\x20-\\x7E]', '', 'g') AS t
-        FROM documents
-    ),
+ORACLE["q200_av_erasure_report"] = f"""
+    WITH {_AV_DOCS},
     pop AS (SELECT doc_id, t FROM docs WHERE length(t) > 0),
-    d AS (
-        SELECT doc_id, t,
-               1000 * (1 + ((strpos('0123456789abcdef',
-                             substr(md5(t), 2, 1)) - 1) % 8)) AS dur
-        FROM pop
-    ),
-    e AS (
-        SELECT doc_id, t,
-               CAST(unnest(range((dur + 1023) // 1024)) AS BIGINT)
-                   AS frame
-        FROM d
-    ),
-    f AS (
-        SELECT doc_id, frame,
-               md5(t || chr(0) || chr(4 * CAST(frame AS INT))
-                   || repeat(chr(0), 6)) AS mh
-        FROM e
-    ),
-    vals AS (
-        SELECT doc_id, frame,
-               list_transform(range(16), i ->
-                   ((strpos('0123456789abcdef',
-                            substr(mh, 2 * CAST(i AS INT) + 1, 1)) - 1) * 16
-                    + (strpos('0123456789abcdef',
-                              substr(mh, 2 * CAST(i AS INT) + 2, 1)) - 1)
-                   )::BIGINT) AS v
-        FROM f
-    ),
-    fb AS (
-        SELECT doc_id, frame,
-               list_sum(list_transform(range(16), i -> CASE
-                   WHEN v[CAST(i AS INT) + 1] * 64
-                        > CAST(list_sum(v) AS BIGINT) * 4
-                   THEN (1::BIGINT << i) ELSE 0 END))::BIGINT AS b16
-        FROM vals
-    ),
-    ham AS (
-        SELECT doc_id, frame, b16,
-               4 * bit_count(xor(b16,
-                   lag(b16) OVER (PARTITION BY doc_id ORDER BY frame)))
-                   AS hamming
-        FROM fb
-    ),
+    {_video_frames_ctes("pop")},
     kf AS (
         SELECT doc_id, frame, b16 FROM ham
         WHERE hamming IS NULL OR hamming > 8
     ),
     aud AS (
-        SELECT doc_id,
-               500 * (1 + (('0x' || substr(md5(t), 1, 2))::BIGINT % 20))
-                   AS dms,
-               floor(('0x' || substr(md5(t || repeat(chr(0), 4)), 1, 8))
-                         ::BIGINT::DOUBLE
-                     / 4294967296.0 * 1000000.0 + 0.5) / 1000000.0
-                   AS mel0
+        SELECT doc_id, {_AUDIO_DMS} AS dms,
+               {_audio_mel("md5(t || repeat(chr(0), 4))")} AS mel0
         FROM pop
     )
     SELECT 'audio' AS lane,
@@ -13014,11 +12036,8 @@ ORACLE["q201_stream_text_ingest_fold"] = f"""
         SELECT doc_id + 1000000, text || ' dup'
         FROM documents WHERE doc_id % 3 = 0
     ),
-    {_POP_SHINGLE_CTE},
-    sets AS (
-        SELECT doc_id, list_sort(list(DISTINCT shingle)) AS shs
-        FROM sh GROUP BY doc_id
-    ),
+    {_minhash_ctes("pop")},
+    {_SETS_CTE},
     m AS (
         SELECT DISTINCT a.doc_id AS ia, b.doc_id AS ib
         FROM band a JOIN band b
@@ -13029,9 +12048,7 @@ ORACLE["q201_stream_text_ingest_fold"] = f"""
         SELECT m.ia, m.ib FROM m
         JOIN sets x ON x.doc_id = m.ia
         JOIN sets y ON y.doc_id = m.ib
-        WHERE len(list_intersect(x.shs, y.shs))::DOUBLE
-              / (len(x.shs) + len(y.shs)
-                 - len(list_intersect(x.shs, y.shs)))::DOUBLE >= 0.5
+        WHERE {_jaccard_ok("x", "y")}
     ),
     stored0 AS (
         SELECT doc_id FROM documents WHERE doc_id % 4 = 0

@@ -8,8 +8,10 @@ untraced for its ``run_seconds``, in both trees once per pair, seed =
 pair number, alternating which side runs first. Prints a JSON line per
 run as it ends, then per end-to-end metric each side's quartiles, the
 change/base ratio of the medians and the pairs the change won (ties
-count for neither), then per side the ``suspect`` flags, ``correct``
-and ``failed``.
+count for neither), then per side the ``suspect`` flags with each run's
+control readings (``control_s``: a run slow from its first reading is
+not flagged, so compare them across the pair), ``correct`` and
+``failed``.
 """
 
 from __future__ import annotations
@@ -33,13 +35,16 @@ def order(pair: int) -> tuple[str, str]:
 
 
 def parse_run(stdout: str) -> dict:
-    """One run's stdout: its last JSON line and the stamp's ``suspect``."""
+    """One run's stdout: its last JSON line and the stamp's ``suspect``
+    and ``control_s``."""
     lines = [json.loads(x) for x in stdout.splitlines() if x.startswith('{"')]
     res = lines[-1]
+    stamp = next(x["stamp"] for x in lines if "stamp" in x)
     return {
         "correct": res["correct"],
         "failed": res["failed"],
-        "suspect": next(x["stamp"]["suspect"] for x in lines if "stamp" in x),
+        "suspect": stamp["suspect"],
+        "control_s": stamp["control_s"],
         "metrics": {k: m["value"] for k, m in res["metrics"].items()},
     }
 
@@ -70,6 +75,7 @@ def summarize(runs: list[dict], end_to_end: list[dict]) -> list[dict]:
         rows.append(row)
     return rows + [
         {"side": s, "suspect": [r["suspect"] for r in by[s]],
+         "control_s": [r["control_s"] for r in by[s]],
          "correct": all(r["correct"] for r in by[s]),
          "failed": sum(r["failed"] for r in by[s])}
         for s in SIDES

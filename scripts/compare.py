@@ -16,6 +16,7 @@ sys.path.insert(0, ".")
 
 from data_lake_project_spark.queries import ORACLE, QUERIES
 from data_lake_project_spark.session import get_spark
+from data_lake_project_spark.tables import TABLES
 
 
 def canon(rows, cols):
@@ -37,16 +38,10 @@ def canon(rows, cols):
     return [cols[i] for i in idx], out
 
 
-FIXTURE_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
-
 def oracle_db(sf_dir):
     """A DuckDB connection with every fixture table of ``sf_dir`` as a view."""
     con = duckdb.connect()
-    for t in FIXTURE_TABLES:
+    for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )

@@ -101,12 +101,14 @@ def test_ab_pairs_alternate_and_summarize():
     ab = _script("ab")
     assert [ab.order(p)[0] for p in range(3)] == ["base", "change", "base"]
     runs = []
+    control = {"base": [0.2, 0.19, 0.19], "change": [0.25, 0.26, 0.25]}
     for pair, side, pass_s, suspect, failed in [
         (1, "base", 10.0, False, 0), (1, "change", 9.0, False, 0),
         (2, "base", 12.0, False, 0), (2, "change", 12.0, False, 1),
         (3, "base", 11.0, False, 0), (3, "change", 13.0, True, 0),
     ]:
-        out = [{"stamp": {"nproc": 4, "suspect": suspect}}]
+        out = [{"stamp": {"nproc": 4, "suspect": suspect,
+                          "control_s": control[side]}}]
         out += [{"failure": "op"}] * failed + [{
             "correct": not failed, "attempted": 10, "failed": failed,
             "metrics": {"pass_s": {"value": pass_s, "unit": "s"}},
@@ -119,9 +121,13 @@ def test_ab_pairs_alternate_and_summarize():
     assert row["change"] == {"q1": 10.5, "median": 12.0, "q3": 12.5}
     assert row["ratio"] == round(12 / 11, 3)
     assert row["wins"] == "1/3"  # pair 1 won, pair 2 tied, pair 3 lost
+    # a side slow from its first control reading is not flagged, but
+    # its readings sit next to the flags
     assert base == {"side": "base", "suspect": [False] * 3,
+                    "control_s": [control["base"]] * 3,
                     "correct": True, "failed": 0}
     assert change == {"side": "change", "suspect": [False, False, True],
+                      "control_s": [control["change"]] * 3,
                       "correct": False, "failed": 1}
 
 

@@ -1070,6 +1070,22 @@ def test_q194_cleans_per_call_temp_dirs(spark):
     assert set(glob.glob(pat)) == before
 
 
+def test_q192_cleans_per_call_temp_dirs(spark):
+    """q192 must not leave its sink and checkpoint mkdtemp directories
+    behind, and the returned frame must survive their removal."""
+    import glob
+    import tempfile
+
+    from data_lake_project_spark.queries import QUERIES
+
+    pat = f"{tempfile.gettempdir()}/spark_graft_q192_*"
+    before = set(glob.glob(pat))
+    df = QUERIES["q192_stream_phash_gate"](spark, "/root/testdata/sf0.001")
+    n = df.count()
+    assert n > 0  # frame readable AFTER its temp sources are gone
+    assert set(glob.glob(pat)) == before
+
+
 def test_av_fake_arithmetic_golden_pins():
     """The q195/q196/q197 oracles replay the fake decoder/extractor
     arithmetic IN SQL — any refactor of these fakes that changes a

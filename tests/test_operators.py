@@ -2433,6 +2433,36 @@ def test_only_dedup_module_joins_minhash_bands():
     )
 
 
+def test_oracle_sql_repeats_no_block():
+    """Tooling guard: an algorithm that two DuckDB oracles share is ONE
+    named SQL fragment in ``queries.py``, so from the ``# Registry +
+    oracles`` banner on no run of 5 non-blank lines (at least 120
+    characters once stripped) appears twice — a per-query copy of an
+    oracle CTE chain cannot grow back."""
+    import collections
+    import pathlib
+
+    import data_lake_project_spark as pkg
+
+    lines = [
+        ln.strip()
+        for ln in (pathlib.Path(pkg.__file__).parent / "queries.py")
+        .read_text()
+        .splitlines()
+    ]
+    start = next(i for i, ln in enumerate(lines) if ln == "# Registry + oracles")
+    seen = collections.defaultdict(list)
+    for i in range(start, len(lines) - 4):
+        run = tuple(lines[i : i + 5])
+        if all(run) and sum(map(len, run)) >= 120:
+            seen[run].append(i + 1)
+    repeats = sorted(at for at in seen.values() if len(at) > 1)
+    assert not repeats, (
+        f"{len(repeats)} 5-line oracle blocks repeat (first lines):\n"
+        + "\n".join(f"queries.py:{at}" for at in repeats[:20])
+    )
+
+
 def test_no_library_literal_hard_codes_tmp():
     """Tooling guard: every library cache is built under
     ``queries._cache_path`` (the temp dir resolved at call time), so
