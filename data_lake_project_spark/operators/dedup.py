@@ -177,10 +177,12 @@ def band_join(
     """Distinct candidate pairs (id_a, id_b) of two :func:`band_keys`
     frames: ids sharing an identical band of consecutive minhashes.
     The ONLY wide operation of candidate generation — an equi-join on
-    (band, bandsig), a high-cardinality uniform key, never all-pairs."""
+    (band, bandsig), a high-cardinality uniform key, never all-pairs.
+    Further ``bands_b`` columns are side tags that ride into the pairs."""
+    tags = [c for c in bands_b.columns if c not in (id_col, "band", "bandsig")]
     a = bands_a.select(F.col(id_col).alias("id_a"), "band", "bandsig")
-    b = bands_b.select(F.col(id_col).alias("id_b"), "band", "bandsig")
-    return a.join(b, ["band", "bandsig"]).select("id_a", "id_b").distinct()
+    b = bands_b.select(F.col(id_col).alias("id_b"), "band", "bandsig", *tags)
+    return a.join(b, ["band", "bandsig"]).select("id_a", "id_b", *tags).distinct()
 
 
 def minhash_candidates_sets(
@@ -208,16 +210,18 @@ def jaccard_verify_sets(
     the MinHash pipeline): ``id_a`` fetches its shingle array
     (:func:`shingle_sets`) from ``sets_a``, ``id_b`` from ``sets_b``
     (the same frame for a symmetric pass) — candidates are few by LSH
-    construction.
+    construction. Further ``sets_b`` columns are :func:`band_join`'s
+    side tags: part of the ``id_b`` fetch key.
     """
+    tags = [c for c in sets_b.columns if c not in (id_col, "sh")]
     return (
         candidates.join(
             sets_a.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")),
             "id_a",
         )
         .join(
-            sets_b.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")),
-            "id_b",
+            sets_b.select(F.col(id_col).alias("id_b"), *tags, F.col("sh").alias("sh_b")),
+            ["id_b", *tags],
         )
         .withColumn(
             "inter", F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))

@@ -144,21 +144,24 @@ def dedup_against_index(
     self-deduplicated — a batch carrying both an original and its
     near-dup twin admits BOTH (neither matches the index). A crawl
     burst delivers exactly that, so an ingest-loop caller passes
-    ``self_dedup=True``: a batch-LOCAL band self-join + verified
-    Jaccard with the keep-lowest-id rule (a row with a matching
-    SMALLER id in the same batch drops) runs BEFORE the index gate.
-    Batch-sized work on both legs (the corpus is still touched only by
-    the candidate fetch); deterministic across replays because the
-    rule depends only on ids and shingle sets.
+    ``self_dedup=True``: keep-lowest-id over ALL batch members and the
+    index gate are one match set — survivors = batch − (ids with a
+    verified lower-id batch twin ∪ ids with a verified index twin):
+    one band join against the batch's own bands (tagged own; kept only
+    where the other id is lower) ∪ the index bands, one verify against
+    the batch sets ∪ the index sets, one anti-join. The tag, never the
+    id, says which side a row came from: an index row holding a batch
+    id is an index twin. Deterministic across replays (ids and shingle
+    sets only).
 
     ``b_sets``: optional precomputed (ideally eagerly checkpointed)
     shingle sets for EXACTLY ``batch`` under the index params. The
-    shingle explode is referenced several times in this plan (self
-    pair verify, index pair verify, banding) and Spark re-evaluates
-    the subtree per reference; a caller that already materialized the
-    sets (the streaming loop computes them for its collision guard)
-    passes them here so every reference reads materialized rows.
-    Pure per-row function of the text, so the result is unchanged.
+    shingle explode is referenced several times in this plan (pair
+    verify, banding, own sets) and Spark re-evaluates the subtree per
+    reference; a caller that already materialized the sets (the
+    streaming loop computes them for its collision guard) passes them
+    here so every reference reads materialized rows. Pure per-row
+    function of the text, so the result is unchanged.
     NOTE (r14, measured): reuse is only a win when it adds NO new
     action or join — an eagerly-checkpointed band-key frame plus a
     delta-reuse fold was tried and REGRESSED q201 9.0→13.6 s at
@@ -172,24 +175,16 @@ def dedup_against_index(
     bkeys = band_keys(
         minhash_sets(b_sets, id_col, p["num_hashes"]), id_col, p["band_size"]
     )
+    bands, sets = index.bands, index.sets
     if self_dedup:
-        scand = band_join(bkeys, bkeys, id_col).filter(
-            F.col("id_a") < F.col("id_b")
-        )
-        doomed = (
-            jaccard_verify_sets(scand, b_sets, b_sets, id_col, threshold)
-            .select(F.col("id_b").alias(id_col))
-            .distinct()
-        )
-        batch = batch.join(doomed, id_col, "left_anti")
-        b_sets = b_sets.join(doomed, id_col, "left_anti")
-        # the signature/banding work already ran for the self-join —
-        # the index gate reuses it minus the doomed rows instead of
-        # re-deriving minhash+bands over the reduced b_sets
-        bkeys = bkeys.join(doomed, id_col, "left_anti")
-    cand = band_join(bkeys, index.bands, id_col)
+        own, stored = F.lit(True).alias("own"), F.lit(False).alias("own")
+        bands = bkeys.select("*", own).unionByName(bands.select("*", stored))
+        sets = b_sets.select("*", own).unionByName(sets.select("*", stored))
+    cand = band_join(bkeys, bands, id_col)
+    if self_dedup:
+        cand = cand.filter(~F.col("own") | (F.col("id_b") < F.col("id_a")))
     dup = (
-        jaccard_verify_sets(cand, b_sets, index.sets, id_col, threshold)
+        jaccard_verify_sets(cand, b_sets, sets, id_col, threshold)
         .select(F.col("id_a").alias(id_col))
         .distinct()
     )
@@ -209,11 +204,11 @@ def gate_and_fold_text_batch(
     (text crawl is the highest-volume ingest a training-data pipeline
     runs; the reference's at-least-once delivery,
     ``spark_stream.py:217-224``, is exactly the window this closes):
-    self-dedup the batch (keep-lowest-id,
-    ``dedup_against_index(self_dedup=True)``), gate the survivors
-    against the index state minus the batch's own ids (one anti-join
-    per stored table), land them in the batch's own sink directory,
-    fold them in, mark the batch committed.
+    gate the batch in one pass against its own bands (keep-lowest-id)
+    and the index state minus the batch's own ids (one anti-join per
+    stored table) — ``dedup_against_index(self_dedup=True)`` — land
+    the survivors in the batch's own sink directory, fold them in,
+    mark the batch committed.
 
     Id contract: ids are stable replay keys (same id => same text). A
     batch id already stored with a DIFFERENT shingle set is an id
@@ -222,10 +217,11 @@ def gate_and_fold_text_batch(
     raises. The check joins stored sets on the batch ids only
     (batch-sized fetch, set equality via two containment sizes).
 
-    Per-batch work is batch-sized: the batch is shingled/banded once
-    (``self_dedup=True`` reuses the band keys for the index gate),
-    the corpus is touched only by the candidate band join + the
-    candidates' set fetches, and the fold appends without rescanning.
+    Per-batch work is batch-sized: the batch is shingled once (the
+    collision guard's checkpointed sets feed the gate), one band join
+    and one verify serve the self pass and the index gate, the corpus
+    is touched only by that join + the candidates' set fetches, and
+    the fold appends without rescanning.
     """
     ingest_batch(
         batch,
@@ -289,11 +285,12 @@ def stream_ingest_with_text_gate(
 ):
     """The production text-ingest loop (the image lane's
     ``stream_ingest_with_phash_gate`` shape on the shingle/minhash
-    index): every micro-batch self-dedups, gates against the index
-    state built by ALL PRIOR batches, and folds its survivors in
-    before the next batch arrives — batch N+1's near-duplicates of
-    batch N's survivors are rejected BY THE FOLD. Micro-batch work is
-    batch-sized; the corpus is never re-shingled. Returns the started
+    index): every micro-batch is gated in one pass against its own
+    lower ids and the index state built by ALL PRIOR batches, and
+    folds its survivors in before the next batch arrives — batch
+    N+1's near-duplicates of batch N's survivors are rejected BY THE
+    FOLD. Micro-batch work is batch-sized (one candidate band join per
+    trigger); the corpus is never re-shingled. Returns the started
     StreamingQuery (``available_now``: see ``lane.start_ingest``);
     read admitted rows back with
     ``streaming.pipeline.read_sink(spark, out_dir)``."""

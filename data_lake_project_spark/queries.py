@@ -800,6 +800,15 @@ _Q142_QUERIES = [
 ]
 
 
+def _query_set(spark, rows) -> DataFrame:
+    """(query_id int, qtext string) rows built in the JVM: a Python list
+    in ``createDataFrame`` is a PythonRDD, a Python worker per task."""
+    arr = F.array(*[F.struct(F.lit(i), F.lit(t)) for i, t in rows])
+    return spark.range(1, numPartitions=1).select(
+        F.inline(arr).alias("query_id", "qtext")
+    )
+
+
 def q142_chunk_retrieval(spark, sf):
     """RAG-style retrieval, fully oracle-checked: chunk every document
     into 32-token windows (q97's chunker), embed each chunk AND each
@@ -826,7 +835,7 @@ def q142_chunk_retrieval(spark, sf):
         ),
     )
     p = (
-        spark.createDataFrame(_Q142_QUERIES, "query_id int, qtext string")
+        _query_set(spark, _Q142_QUERIES)
         .select("query_id", hash_embedding("qtext", 16).alias("__p"))
         .withColumn(
             "__pn",
@@ -878,9 +887,7 @@ def q143_ann_chunk_retrieval(spark, sf):
     from data_lake_project_spark.operators.dataset import chunk_documents
 
     d = load_table(spark, sf, "documents")
-    probes = spark.createDataFrame(
-        _Q142_QUERIES, "query_id int, qtext string"
-    ).select(
+    probes = _query_set(spark, _Q142_QUERIES).select(
         F.col("query_id").alias("probe_id"),
         hash_embedding("qtext", 16).alias("embedding"),
     )
@@ -930,7 +937,7 @@ def q144_bm25_retrieval(spark, sf):
     from data_lake_project_spark.operators.retrieval import bm25_topk
 
     d = load_table(spark, sf, "documents")
-    q = spark.createDataFrame(_Q142_QUERIES, "query_id int, qtext string")
+    q = _query_set(spark, _Q142_QUERIES)
     return (
         bm25_topk(d, q, k=5)
         .withColumn("rk", F.col("rk").cast("long"))
@@ -953,9 +960,7 @@ def q145_hybrid_retrieval(spark, sf):
     )
 
     d = load_table(spark, sf, "documents")
-    qdf = spark.createDataFrame(
-        _Q142_QUERIES, "query_id int, qtext string"
-    )
+    qdf = _query_set(spark, _Q142_QUERIES)
     lex = bm25_topk(d, qdf, k=10).select("query_id", "doc_id", "rk")
     corpus = d.select(
         F.col("doc_id").alias("vec_id"),
@@ -1158,7 +1163,7 @@ def q150_bm25_index_search(spark, sf):
         "bm25_tb64",
         lambda tmp: save_bm25_index(build_bm25_index(d), tmp),
     )
-    q = spark.createDataFrame(_Q142_QUERIES, "query_id int, qtext string")
+    q = _query_set(spark, _Q142_QUERIES)
     return (
         search_bm25_index(load_bm25_index(spark, path), q, k=5)
         .withColumn("rk", F.col("rk").cast("long"))
@@ -4908,9 +4913,7 @@ def q173_chunk_index_recall_report(spark, sf):
     from data_lake_project_spark.operators.dataset import chunk_documents
 
     d = load_table(spark, sf, "documents")
-    probes = spark.createDataFrame(
-        _Q142_QUERIES, "query_id int, qtext string"
-    ).select(
+    probes = _query_set(spark, _Q142_QUERIES).select(
         F.col("query_id").alias("probe_id"),
         hash_embedding("qtext", 16).alias("embedding"),
     )
@@ -5041,9 +5044,7 @@ def q176_retrieval_quality_report(spark, sf):
     )
 
     d = load_table(spark, sf, "documents")
-    qdf = spark.createDataFrame(
-        _Q176_QUERIES, "query_id int, qtext string"
-    )
+    qdf = _query_set(spark, _Q176_QUERIES)
     # lex10 feeds the judged bm25 lane AND the fusion — cut the BM25
     # subtree once (the q141/q148 multi-consumer rule; (queries x 10)
     # rows)
@@ -5200,9 +5201,7 @@ def q178_hard_negative_mining(spark, sf):
     )
 
     d = load_table(spark, sf, "documents")
-    qdf = spark.createDataFrame(
-        _Q176_QUERIES, "query_id int, qtext string"
-    )
+    qdf = _query_set(spark, _Q176_QUERIES)
     lex10 = (
         bm25_topk(d, qdf, k=10)
         .select("query_id", "doc_id", "rk")

@@ -1973,9 +1973,9 @@ def test_dedup_against_index_self_dedup_intra_batch(spark):
     """Round-12 verdict #1, text lane: a batch carrying BOTH an
     original and its near-dup twin matches nothing in the index, so
     the default (contract: batch assumed self-deduplicated) admits
-    both; self_dedup=True runs the batch-local keep-lowest-id pass
-    first and only the original survives. Index-matched docs are
-    rejected under both modes."""
+    both; self_dedup=True adds keep-lowest-id over the batch and only
+    the original survives. Index-matched docs are rejected under both
+    modes."""
     from data_lake_project_spark.operators.dedup_index import (
         build_dedup_index,
         dedup_against_index,
@@ -2006,6 +2006,39 @@ def test_dedup_against_index_self_dedup_intra_batch(spark):
 
     assert kept() == [10, 11, 13]  # default: twin admitted
     assert kept(self_dedup=True) == [10, 13]  # survivor pass drops 11
+
+    # chained: y=20 is an index twin of doc 2; x=21 is y's in-batch
+    # twin but not an index twin. Keep-lowest-id runs over ALL batch
+    # members, so x drops with y.
+    w = [f"w{i:02d}" for i in range(1, 41)]
+    idx = build_dedup_index(
+        spark.createDataFrame(
+            [(2, " ".join(w[0:30]))], "doc_id long, text string"
+        )
+    )
+    batch = spark.createDataFrame(
+        [(20, " ".join(w[4:34])), (21, " ".join(w[10:40]))],
+        "doc_id long, text string",
+    )
+    assert kept() == [21]  # x matches nothing in the index
+    assert kept(self_dedup=True) == []
+
+    # the index holds batch ids: 5 with another text, 13 with batch
+    # 13's own text. Index rows count as index twins whatever their id:
+    # 9 is a twin of indexed 5, 13 of indexed 13; batch 5 survives.
+    t5 = "sphinx of black quartz judge my vow said the king"
+    t9 = "the quick brown fox jumps over the lazy dog today"
+    t13 = "pack my box with five dozen brown liquor jugs now"
+    idx = build_dedup_index(
+        spark.createDataFrame(
+            [(5, t9), (13, t13)], "doc_id long, text string"
+        )
+    )
+    batch = spark.createDataFrame(
+        [(5, t5), (9, t9), (13, t13)], "doc_id long, text string"
+    )
+    assert kept() == [5]
+    assert kept(self_dedup=True) == [5]
 
 
 def test_stream_text_ingest_fold_equals_sequential(spark, tmp_path):

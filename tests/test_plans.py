@@ -771,3 +771,52 @@ def test_ab_test_is_one_aggregation_pass(spark):
     assert P.exchange_count(df) <= 1
     P.assert_no_cartesian(df)
     assert "BroadcastNestedLoopJoin" not in P.explain_str(df)
+
+
+def test_self_dedup_gate_is_one_band_join(spark):
+    """``dedup_against_index(self_dedup=True)`` gates a batch against
+    its own bands and the index in ONE candidate band join, one verify
+    and one anti-join (the keep-lowest-id self pass and the index gate
+    are one match set). The executed plan holds exactly one equi-join
+    on (band, bandsig) — a separate self-join leg, or a doomed-id
+    subtree chained behind it, adds another."""
+    import re
+
+    from data_lake_project_spark.operators.dedup_index import (
+        build_dedup_index,
+        dedup_against_index,
+    )
+
+    d = load_table(spark, SF_DIR, "documents")
+    idx = build_dedup_index(d.filter("doc_id % 5 in (1, 2)"))
+    out = dedup_against_index(
+        idx, d.filter("doc_id % 5 in (3, 4)"), self_dedup=True
+    )
+    assert out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==", 1)[0]
+    joins = re.findall(
+        r"(?:HashJoin|SortMergeJoin) \[band#\d+, bandsig#\d+\]", final
+    )
+    assert len(joins) == 1, final
+
+
+def test_retrieval_query_set_never_starts_a_python_worker(spark):
+    """The fixed retrieval query sets (q142-q145, q150, q173, q176,
+    q178) are built in the JVM: ``createDataFrame(list)`` scans an
+    ExistingRDD over a PythonRDD, which needs a Python worker per task
+    for a 3-row table. (The checkpointed BM25 cuts also scan as
+    ExistingRDD, over JVM rows; only a query-set scan is the trap.)"""
+    import re
+
+    q = QUERIES["q144_bm25_retrieval"](spark, SF_DIR)
+    assert q.collect()
+    plan = q._jdf.queryExecution().executedPlan().toString()
+    assert not re.search(r"ExistingRDD\[[^\]]*qtext#", plan), plan
+
+    from data_lake_project_spark.queries import _Q142_QUERIES, _query_set
+
+    q = _query_set(spark, _Q142_QUERIES)
+    assert sorted(tuple(r) for r in q.collect()) == _Q142_QUERIES
+    plan = q._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
